@@ -6,40 +6,45 @@ parse/route/agg metrics, with exactly-once per-sink counts across resume.
 
 Design (batch analog of streaming state, SURVEY.md §2.9 note):
 
-  * The run is split into **epochs** = the sink partition key ``p_day``
-    (``date(ts)`` — the days(ts) part of the Iceberg partition spec in
-    BASELINE.json's north_star; parquet `partitionBy` is the sandbox stand-in,
-    `overwritePartitions` on Iceberg is the production path).
+  * The run is split into **epochs** = one day of ``date(ts)``, the ``ts_day``
+    half of the batch sink layout (operators/route.stage_sinks partitions
+    every sink by (route, ts_day) — the days(ts) part of the Iceberg partition
+    spec in BASELINE.json's north_star; parquet `partitionBy` is the sandbox
+    stand-in, `overwritePartitions` on Iceberg is the production path). An
+    epoch's write therefore touches exactly its own day partitions.
   * A **manifest** directory holds one JSON file per committed epoch:
     ``{epoch, lineage, metrics{parsed_records, routed_per_sink}, schema_version}``.
-    The file is written ONLY after the epoch's sink write fully commits, so the
-    manifest is the commit log. One file per epoch = no read-modify-write races.
+    The file is published ONLY after the epoch's sink write fully commits, so
+    the manifest is the commit log, for both sink formats. One exclusive-create
+    file per epoch (sources/snaplog._Fs, the Hadoop FileSystem I/O the
+    snapshot log uses) = no read-modify-write races, and any Hadoop-supported
+    ``out_dir`` (file://, hdfs://, s3a://) works.
   * **Resume** = ``left_anti`` join of the input's epochs against the manifest's
     committed epochs (SURVEY.md §2.4 note: anti join as resumability primitive).
   * **Idempotence**: sinks are written with dynamic partition overwrite keyed by
-    (route, p_day); re-processing a crashed epoch overwrites its partial output
+    (route, ts_day); re-processing a crashed epoch overwrites its partial output
     instead of duplicating it, so per-sink counts are exact across resume.
-  * **Metrics** come from the same pass that writes the sinks (a per-epoch
-    count aggregate over the routed frame — the A5 usage-accounting analog,
-    /root/reference/factcheck/utils/llmclient/gpt_client.py:36-41).
+  * **Metrics** ride the sink write itself: an ``Observation`` of per-route
+    counts on the written frame (the A5 usage-accounting analog,
+    /root/reference/factcheck/utils/llmclient/gpt_client.py:36-41) — no
+    persist, no second pass.
 
-At cluster scale each epoch's write is a partition-pruned scan (the ``p_day``
+At cluster scale each epoch's write is a partition-pruned scan (the day
 filter reaches the source) and the manifest stays tiny (one small JSON per day).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import route as route_ops
 from .plans.pipeline import build_pipeline
 from .rulepack import DEFAULT_PACK, RulePack
+from .sources import snaplog
 
 SCHEMA_VERSION = 1
 
@@ -51,102 +56,29 @@ class EpochResult:
     routed_per_sink: dict[str, int]
 
 
-def _manifest_dir(out_dir: str) -> str:
-    return out_dir.rstrip("/") + "/_manifest"
-
-
-class _ManifestIO:
-    """Manifest I/O through the Hadoop FileSystem API, so ``--out`` works on
-    any Hadoop-supported filesystem (file://, hdfs://, s3a://, ...) — a
-    driver-local ``open()`` would silently write an object-store URI to a
-    literal local directory and resume state would not survive driver
-    replacement. All files are tiny per-epoch JSONs, driver-side only.
-
-    Commit protocol: write a temp file, then rename over the final name —
-    atomic on HDFS and local FS; on S3A rename is copy+delete (non-atomic),
-    which is safe under the single-writer assumption the epoch loop already
-    makes (production multi-writer would commit through the Iceberg catalog
-    instead, sources/catalog.py)."""
-
-    def __init__(self, spark: SparkSession, out_dir: str):
-        jvm = spark._jvm
-        self._jvm = jvm
-        self._path_cls = jvm.org.apache.hadoop.fs.Path
-        self._dir = self._path_cls(_manifest_dir(out_dir))
-        self._fs = self._dir.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def list_entries(self) -> list[dict]:
-        if not self._fs.exists(self._dir):
-            return []
-        entries: list[dict] = []
-        for status in self._fs.listStatus(self._dir):
-            p = status.getPath()
-            if not p.getName().endswith(".json"):
-                continue
-            stream = self._fs.open(p)
-            try:
-                raw = self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            finally:
-                stream.close()
-            entries.append(json.loads(bytes(raw).decode("utf-8")))
-        return entries
-
-    def write_entry(self, entry: dict) -> None:
-        self._fs.mkdirs(self._dir)
-        final = self._path_cls(self._dir, f"{entry['epoch']}.json")
-        tmp = self._path_cls(
-            self._dir, f".{entry['epoch']}.json.tmp-{uuid.uuid4().hex[:8]}"
-        )
-        out = self._fs.create(tmp, True)
-        try:
-            out.write(bytearray(json.dumps(entry).encode("utf-8")))
-        finally:
-            out.close()
-        if self._fs.exists(final):
-            self._fs.delete(final, False)
-        self._fs.rename(tmp, final)
-
-
-def _manifest_io(out_dir: str, spark: SparkSession | None) -> _ManifestIO | None:
+def _manifest_fs(out_dir: str, spark: SparkSession | None) -> snaplog._Fs:
     spark = spark or SparkSession.getActiveSession()
-    return _ManifestIO(spark, out_dir) if spark is not None else None
+    if spark is None:
+        raise RuntimeError("epoch manifest I/O needs an active SparkSession")
+    return snaplog._Fs(spark, out_dir.rstrip("/") + "/_manifest")
 
 
 def committed_epochs(out_dir: str, spark: SparkSession | None = None) -> dict[str, dict]:
-    """Read the manifest: epoch -> committed entry. Uses the Hadoop FS of the
-    (active) session; falls back to local os I/O only when no session exists."""
-    io = _manifest_io(out_dir, spark)
-    if io is not None:
-        return {e["epoch"]: e for e in io.list_entries()}
-    mdir = _manifest_dir(out_dir)
-    if not os.path.isdir(mdir):
-        return {}
-    out: dict[str, dict] = {}
-    for name in sorted(os.listdir(mdir)):
-        if not name.endswith(".json"):
-            continue
-        with open(os.path.join(mdir, name)) as f:
-            entry = json.load(f)
-        out[entry["epoch"]] = entry
-    return out
+    """Read the manifest: epoch -> committed entry (Hadoop FS of ``spark`` or
+    the active session)."""
+    fs = _manifest_fs(out_dir, spark)
+    names = [n for n in fs.list_names(fs.path()) if n.endswith(".json")]
+    entries = (fs.read_json(fs.path(n)) for n in names)
+    return {e["epoch"]: e for e in entries}
 
 
-def _commit_epoch(out_dir: str, entry: dict, spark: SparkSession | None = None) -> None:
-    """Atomic single-file commit: write tmp, rename (Hadoop FS when a session
-    is available, local fsync-rename otherwise)."""
-    io = _manifest_io(out_dir, spark)
-    if io is not None:
-        io.write_entry(entry)
-        return
-    mdir = _manifest_dir(out_dir)
-    os.makedirs(mdir, exist_ok=True)
-    path = os.path.join(mdir, f"{entry['epoch']}.json")
-    tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(entry, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
+def _commit_epoch(out_dir: str, entry: dict, spark: SparkSession) -> None:
+    """Publish the epoch's manifest entry whole (tmp file + exclusive create).
+    An existing entry means another writer committed this epoch under us — a
+    broken single-writer assumption, so fail rather than overwrite it."""
+    fs = _manifest_fs(out_dir, spark)
+    if not fs.create_exclusive(fs.path(f"{entry['epoch']}.json"), entry):
+        raise RuntimeError(f"epoch {entry['epoch']} already committed in {out_dir}")
 
 
 def pending_epochs(spark: SparkSession, transcripts: DataFrame, out_dir: str) -> list[str]:
@@ -190,7 +122,7 @@ def run_resumable(
     because the Iceberg jar cannot enter this container. Each manifest entry
     then records the SINK snapshot id it produced, so lineage is end-to-end:
     input snapshot -> epoch -> output snapshot. Replaying a crashed epoch
-    re-overwrites exactly its (route, p_day) partitions — same idempotence
+    re-overwrites exactly its (route, ts_day) partitions — same idempotence
     as the parquet dynamic-overwrite path, but the swap is one atomic log
     append instead of a directory mutation.
     """
@@ -199,6 +131,7 @@ def run_resumable(
     todo = pending_epochs(spark, transcripts, out_dir)
     results: list[EpochResult] = []
 
+    sinks = os.path.join(out_dir, "sinks")
     for i, epoch in enumerate(todo):
         if fail_after_epochs is not None and not fail_mid_epoch and i >= fail_after_epochs:
             raise RuntimeError(f"injected failure before epoch {epoch}")
@@ -208,38 +141,35 @@ def run_resumable(
         day_slice = transcripts.filter(
             F.date_format(F.to_date("ts"), "yyyy-MM-dd") == epoch
         )
-        result = build_pipeline(spark, day_slice, pack=pack)
-        routed = result.routed.withColumn("p_day", F.lit(epoch)).persist()
+        obs = Observation()
+        staged = route_ops.stage_sinks(
+            build_pipeline(spark, day_slice, pack=pack).routed.observe(
+                obs,
+                *[F.count(F.when(F.col("route") == s, 1)).alias(s) for s in route_ops.SINKS],
+            )
+        )
 
-        # Sink write first (idempotent dynamic overwrite of (route, p_day) —
-        # writer-scoped option, not a session-global conf), metrics from the
-        # same cached pass, manifest commit last.
+        # Sink write first (idempotent dynamic overwrite of (route, ts_day) —
+        # writer-scoped option, not a session-global conf; the per-route
+        # counts ride this same job), manifest commit last.
         sink_snapshot = ""
         if sink_format == "snaplog":
-            from .sources import snaplog
-
-            table = os.path.join(out_dir, "sinks")
-            if snaplog.current_snapshot(spark, table) is None:
-                snap = snaplog.append(spark, table, routed, ["route", "p_day"])
+            if snaplog.current_snapshot(spark, sinks) is None:
+                snap = snaplog.append(spark, sinks, staged, list(route_ops.PARTITION_COLS))
             else:
-                snap = snaplog.overwrite_partitions(spark, table, routed)
+                snap = snaplog.overwrite_partitions(spark, sinks, staged)
             sink_snapshot = snap["snapshot_id"]
         else:
             (
-                routed.write.mode("overwrite")
+                staged.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("route", "p_day")
-                .parquet(os.path.join(out_dir, "sinks"))
+                .partitionBy(*route_ops.PARTITION_COLS)
+                .parquet(sinks)
             )
         if fail_mid_epoch and fail_after_epochs is not None and i >= fail_after_epochs:
-            routed.unpersist()
             raise RuntimeError(f"injected mid-epoch failure after sink write of {epoch}")
-        per_sink = {
-            r["route"]: r["n"]
-            for r in routed.groupBy("route").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        per_sink = {route: n for route, n in obs.get.items() if n}
         parsed = sum(per_sink.values())
-        routed.unpersist()
 
         entry = {
             "epoch": epoch,
@@ -260,8 +190,6 @@ def sink_counts(spark: SparkSession, out_dir: str) -> dict[str, int]:
     Reads through the snapshot log when the sink is a SnapLog table, so the
     count reflects exactly the committed head — in-flight files are
     invisible by construction."""
-    from .sources import snaplog
-
     sinks = os.path.join(out_dir, "sinks")
     if snaplog.is_snaplog_table(spark, sinks):
         df = snaplog.read(spark, sinks)

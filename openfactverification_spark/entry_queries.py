@@ -493,6 +493,7 @@ def _correctness_files() -> list[str]:
     must not change `queries()` ordering. Falls back to a plain glob where
     git is unavailable (packaged --py-files zip run outside the repo)."""
     import glob
+    import logging
     import os
     import subprocess
 
@@ -509,6 +510,9 @@ def _correctness_files() -> list[str]:
             return sorted(files)
     except Exception:
         pass
+    logging.getLogger(__name__).warning(
+        "git ls-files unavailable: CORRECTNESS_r*.json taken from a glob of %s", root
+    )
     return sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
 
 

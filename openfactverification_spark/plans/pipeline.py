@@ -3,7 +3,7 @@
 This is the flagship job (SURVEY.md §7 step 1 + §4 physical plan sketch). The whole
 chain is narrow until the final summary groupBy: parse is array-op/explode only,
 both enrich joins are broadcasts, routing is a projection. At cluster scale the
-only exchanges are (a) the optional sink-layout repartition and (b) the summary
+only exchanges are (a) the sink-layout rebalance and (b) the summary
 aggregation — both keyed on low-cardinality columns, both AQE-coalesced.
 """
 
@@ -52,9 +52,19 @@ def build_pipeline(
 
 
 def run_to_sinks(spark: SparkSession, transcripts: DataFrame, out_dir: str) -> PipelineResult:
+    """Compute the DAG once: write the routed sinks, aggregate the summary
+    from what was written (a column-pruned scan of the sinks, never a second
+    parse → enrich pass), and return a result whose ``summary`` reads the
+    written ``summary/`` directory, so collecting it is a file read."""
     result = build_pipeline(spark, transcripts)
     route_ops.write_sinks(result.routed, f"{out_dir}/sinks")
-    result.summary.write.mode("overwrite").parquet(f"{out_dir}/summary")
+    # explicit schema: no footer inference, and an empty input (no sink
+    # files at all) still yields an empty summary
+    sinks = spark.read.schema(route_ops.stage_sinks(result.routed).schema)
+    agg_ops.sink_summary(sinks.parquet(f"{out_dir}/sinks")).write.mode(
+        "overwrite"
+    ).parquet(f"{out_dir}/summary")
+    result.summary = spark.read.parquet(f"{out_dir}/summary")
     return result
 
 

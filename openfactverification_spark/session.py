@@ -12,6 +12,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+# The engine's machine-independent configs, shared by get_spark and the
+# spark-submit entrypoint (scripts/job.py). Master, shuffle partitions and
+# driver memory are per-deployment and stay in get_spark.
+ENGINE_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.ui.enabled": "false",
+    "spark.ui.showConsoleProgress": "false",
+    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    # A/B on the 2M-turn sink write (BENCH.md): zstd 2.3s/35MB vs snappy
+    # 3.9s/45MB vs lz4 7.0s — faster AND ~22% smaller; at 100 TB the size
+    # win also cuts scan IO for every downstream reader.
+    "spark.sql.parquet.compression.codec": "zstd",
+}
+
+
 def get_spark(
     app_name: str = "openfactverification_spark",
     master: str | None = None,
@@ -33,28 +54,14 @@ def get_spark(
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
         shuffle_partitions = 32 if n == "*" else max(int(n), 8)
 
-    builder = (
+    spark = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_memory)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # A/B on the 2M-turn sink write (BENCH.md): zstd 2.3s/35MB vs snappy
-        # 3.9s/45MB vs lz4 7.0s — faster AND ~22% smaller; at 100 TB the size
-        # win also cuts scan IO for every downstream reader.
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config(map=extra_conf or {})
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

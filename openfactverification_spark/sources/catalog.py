@@ -9,7 +9,8 @@ the format by what the session can see:
     anything else -> parquet path.
   * write: `writeTo(...).overwritePartitions()` (Iceberg idempotent partition
     commit) when the target is a table name; dynamic-overwrite parquet
-    partitionBy otherwise (the exact stand-in checkpoint.py uses).
+    partitionBy otherwise (the exact stand-in checkpoint.py uses), both
+    laid out by operators/route.stage_sinks.
   * lineage: Iceberg `table.snapshots` current id when available; else a
     content fingerprint the caller supplies.
 """
@@ -18,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators import route as route_ops
 
 
 _FILE_EXTENSIONS = ("parquet", "json", "csv", "orc", "avro", "txt", "tsv")
@@ -77,8 +80,9 @@ def write_bucketed_transcripts(
 
 
 def write_routed(routed: DataFrame, target: str) -> None:
-    """Idempotent partitioned sink commit, format chosen by target kind."""
-    df = routed.withColumn("ts_day", F.to_date("ts"))
+    """Idempotent partitioned sink commit, format chosen by target kind; the
+    layout is the batch sink's (route.stage_sinks)."""
+    df = route_ops.stage_sinks(routed)
     if is_table_name(target):
         # Iceberg path: partition spec lives on the table (days(ts),
         # bucket(conv_id)); overwritePartitions replaces exactly the partitions
@@ -87,7 +91,7 @@ def write_routed(routed: DataFrame, target: str) -> None:
         return
     (
         df.write.mode("overwrite")
-        .partitionBy("route", "ts_day")
+        .partitionBy(*route_ops.PARTITION_COLS)
         .option("partitionOverwriteMode", "dynamic")
         .parquet(target)
     )

@@ -58,7 +58,8 @@ changes the constant, not the protocol. All I/O goes through the Hadoop
 FileSystem API, so ``file://``, ``hdfs://`` and ``s3a://`` behave alike
 (on S3A, ``create(overwrite=false)`` maps to a conditional PUT under
 recent Hadoop; older stacks would commit through a catalog service — the
-same caveat checkpoint.py documents for its manifest).
+same caveat applies to checkpoint.py's epoch manifest, which publishes
+through the same ``_Fs.create_exclusive``).
 
 Reference tie-in: the reference pipeline persists run artifacts by
 overwriting whole JSON result files (/root/reference/factcheck/__init__.py:131
@@ -106,8 +107,9 @@ def _publish_strategy(scheme: str) -> str:
 
 
 class _Fs:
-    """Thin Hadoop FileSystem wrapper (same rationale as checkpoint._ManifestIO:
-    driver-local open() would break on hdfs:// / s3a:// table roots)."""
+    """Thin Hadoop FileSystem wrapper for every driver-side metadata file
+    (snapshot logs here, the checkpoint.py epoch manifest): driver-local
+    open() would break on hdfs:// / s3a:// roots."""
 
     def __init__(self, spark: SparkSession, root: str):
         jvm = spark._jvm
@@ -137,8 +139,7 @@ class _Fs:
         The payload is fully written to a TEMP name first and then published
         whole, so a crash or I/O error mid-payload leaves only an ignorable
         ``.tmp`` file — never a truncated ``v{N}.json`` that every later read
-        would choke on (the same tmp+rename discipline as
-        checkpoint._ManifestIO). The publish step must BOTH be atomic and
+        would choke on. The publish step must BOTH be atomic and
         refuse an existing destination (POSIX rename(2) silently REPLACES the
         destination — publishing via plain rename would let a race loser
         overwrite the winner's committed head):
@@ -517,6 +518,47 @@ def append(
         surviving=lambda files: list(files),
         summary_extra=summary_extra,
     )
+
+
+class CommitOnce:
+    """Exactly-once appends keyed by an id in the snapshot summary: the log
+    itself is the transaction table (the txn-id pattern transactional-sink
+    connectors use). ``append(table, df, id_)`` commits ``df`` with
+    ``{key: id_}`` in its summary unless ``table`` already committed ``id_``
+    under ``key`` — so an at-least-once replay (foreachBatch after a crash)
+    becomes a metadata no-op.
+
+    Committed ids are loaded from the log ONCE per table per instance and
+    kept in memory after each append, so a healthy stream never re-scans the
+    log; a fresh instance (stream restart) reloads it, so skips survive the
+    process. expire_snapshots drops old ids with their log entries, so the
+    retained suffix must cover the replay horizon."""
+
+    def __init__(self, spark: SparkSession, key: str):
+        self._spark = spark
+        self._key = key
+        self._ids: dict[str, set] = {}
+
+    def committed(self, table: str, id_) -> bool:
+        if table not in self._ids:
+            self._ids[table] = {
+                h["summary"][self._key]
+                for h in history(self._spark, table)
+                if self._key in h["summary"]
+            }
+        return id_ in self._ids[table]
+
+    def append(
+        self, table: str, df: DataFrame, id_, partition_cols: list[str] | None = None
+    ) -> dict | None:
+        """The new snapshot, or None when ``id_`` was already committed."""
+        if self.committed(table, id_):
+            return None
+        snap = append(
+            self._spark, table, df, partition_cols, summary_extra={self._key: id_}
+        )
+        self._ids[table].add(id_)
+        return snap
 
 
 def overwrite_partitions(spark: SparkSession, table: str, df: DataFrame) -> dict:

@@ -19,9 +19,9 @@ At 10^12 docs the shingle stream would store h7 hashes rather than raw
 shingles (the dedup_ngram_spans trade); raw shingles keep the jaccard
 arithmetic bit-identical to the batch operator here.
 
-Exactly-once: foreachBatch is at-least-once, so every append carries
-``ingest_epoch`` in its snapshot summary and the replay path skips any table
-that already committed this epoch (the txn-table pattern of
+Exactly-once: foreachBatch is at-least-once, so every append goes through
+snaplog.CommitOnce keyed by ``ingest_epoch`` and the replay path skips any
+table that already committed this epoch (the same helper as
 run_to_sinks_stream_snaplog, applied per table — a crash between the three
 appends resumes by completing only the missing ones; each append is itself
 one atomic snapshot)."""
@@ -36,36 +36,6 @@ from ..sources import snaplog
 
 _S = D("spark")
 DEFAULT_THRESHOLD = 0.15
-
-
-def _committed_epochs(spark: SparkSession, table: str) -> set:
-    return {
-        h["summary"].get("ingest_epoch")
-        for h in snaplog.history(spark, table)
-        if "ingest_epoch" in h.get("summary", {})
-    }
-
-
-class CommittedEpochs:
-    """Per-table committed ingest_epoch sets, loaded from the snapshot log
-    ONCE per table per stream start and maintained in memory after each
-    append — without this, every micro-batch re-reads every snapshot JSON of
-    all three tables (O(log length) driver I/O per batch, unbounded without
-    maintain_store). Same seeding pattern as run_to_sinks_stream_snaplog's
-    committed-id set. A fresh instance (stream restart) reloads from the log,
-    so replay skips survive the process."""
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._sets: dict[str, set] = {}
-
-    def get(self, table: str) -> set:
-        if table not in self._sets:
-            self._sets[table] = _committed_epochs(self._spark, table)
-        return self._sets[table]
-
-    def add(self, table: str, epoch: int) -> None:
-        self.get(table).add(epoch)
 
 
 def _pre_epoch_snapshot_id(spark: SparkSession, table: str, epoch: int) -> str | None:
@@ -84,8 +54,8 @@ def _pre_epoch_snapshot_id(spark: SparkSession, table: str, epoch: int) -> str |
     already lacks the current epoch, so the per-batch cost is one name
     listing + ONE small read — not the full-log scan history() would do
     (that would quietly re-introduce the unbounded per-batch driver I/O
-    CommittedEpochs exists to eliminate; only a genuine replay ever reads a
-    second snapshot)."""
+    snaplog.CommitOnce exists to eliminate; only a genuine replay ever reads
+    a second snapshot)."""
     for s in snaplog.snapshots_newest_first(spark, table):
         if s["summary"].get("ingest_epoch") != epoch:
             return s["snapshot_id"]
@@ -145,39 +115,29 @@ WHERE cast(i.n_common as double) / (szx.sz + szy.sz - i.n_common) >= {threshold}
 
 
 def _append_accepted(
-    spark: SparkSession,
     store_dir: str,
     sh: DataFrame,
     bands: DataFrame,
     accepted: DataFrame,
-    epoch: int | None,
-    epochs: CommittedEpochs | None = None,
+    epoch: int,
+    commits: snaplog.CommitOnce,
 ) -> None:
     """Append the accepted docs' shingle + band streams to the store, skipping
     any table that already committed this epoch (replay)."""
-    extra = None if epoch is None else {"ingest_epoch": epoch}
-    for table, df, key in (
-        (f"{store_dir}/sh", sh, "sh"),
-        (f"{store_dir}/bands", bands, "bands"),
-    ):
-        if epoch is not None:
-            committed = epochs.get(table) if epochs else _committed_epochs(spark, table)
-            if epoch in committed:
-                continue
+    for table, df in ((f"{store_dir}/sh", sh), (f"{store_dir}/bands", bands)):
+        if commits.committed(table, epoch):
+            continue
         rows = df.join(accepted, "doc_id", "semi")
         if not rows.isEmpty():
-            snaplog.append(spark, table, rows, summary_extra=extra)
-            if epochs is not None and epoch is not None:
-                epochs.add(table, epoch)
+            commits.append(table, rows, epoch)
 
 
 def seed_store(spark: SparkSession, docs: DataFrame, store_dir: str) -> None:
     """Bootstrap the store with an initial corpus (every doc accepted)."""
     sh = _shingles(docs)
     bands = _bands(sh)
-    _append_accepted(
-        spark, store_dir, sh, bands, docs.select("doc_id"), epoch=None
-    )
+    snaplog.append(spark, f"{store_dir}/sh", sh)
+    snaplog.append(spark, f"{store_dir}/bands", bands)
 
 
 def process_batch(
@@ -187,7 +147,7 @@ def process_batch(
     store_dir: str,
     out_dir: str,
     threshold: float = DEFAULT_THRESHOLD,
-    epochs: CommittedEpochs | None = None,
+    commits: snaplog.CommitOnce | None = None,
 ) -> None:
     """Judge one ingest batch against the store; append statuses + accepted
     signatures. batch_id in the output is epoch + 1 (epoch is 0-based).
@@ -197,13 +157,15 @@ def process_batch(
     the store appends and the status append replays against the same store
     view the first attempt saw — the per-table skip then completes only the
     missing appends and the status rows come out identical (pinned by
-    tests/test_streaming_ingest_dedup.py::test_crash_between_store_and_status)."""
+    tests/test_streaming_ingest_dedup.py::test_crash_between_store_and_status).
+    ``commits`` carries the committed epochs across a stream's batches; a
+    direct call loads them from the logs."""
     # one session for every view/SQL in this batch: the micro-batch DataFrame
     # lives in a CLONED SparkSession and temp views are session-scoped
     s = batch_df.sparkSession
+    commits = commits or snaplog.CommitOnce(s, "ingest_epoch")
     status_table = f"{out_dir}/status"
-    committed = epochs.get(status_table) if epochs else _committed_epochs(s, status_table)
-    if epoch in committed:
+    if commits.committed(status_table, epoch):
         return  # full replay of a committed batch
     batch_df = batch_df.select("doc_id", "text").localCheckpoint(eager=True)
     sh_b = _shingles(batch_df)
@@ -285,12 +247,8 @@ def process_batch(
     )
     # store first, status last: the status commit is the batch's completion
     # marker, so a crash mid-way leaves a replayable (per-table-skipped) epoch
-    _append_accepted(s, store_dir, sh_b, bands_b, accepted, epoch, epochs=epochs)
-    snaplog.append(
-        s, status_table, status, summary_extra={"ingest_epoch": epoch}
-    )
-    if epochs is not None:
-        epochs.add(status_table, epoch)
+    _append_accepted(store_dir, sh_b, bands_b, accepted, epoch, commits)
+    commits.append(status_table, status, epoch)
 
 
 def maintain_store(
@@ -339,7 +297,7 @@ def run_ingest_dedup_stream(
     ``maintain_every=k`` runs compaction + snapshot expiry after every k-th
     batch (0 = caller handles maintenance)."""
 
-    epochs = CommittedEpochs(spark)
+    commits = snaplog.CommitOnce(spark, "ingest_epoch")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         process_batch(
@@ -349,7 +307,7 @@ def run_ingest_dedup_stream(
             store_dir,
             out_dir,
             threshold=threshold,
-            epochs=epochs,
+            commits=commits,
         )
         if maintain_every and (batch_id + 1) % maintain_every == 0:
             maintain_store(batch_df.sparkSession, store_dir, out_dir)

@@ -23,9 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import enrich as enrich_ops
-from ..operators import parse as parse_ops
 from ..operators import route as route_ops
+from ..plans.pipeline import build_pipeline
+from ..sources import snaplog
 from ..sources.transcripts import _transcript_exprs
 
 
@@ -46,15 +46,9 @@ def transcripts_stream(spark: SparkSession, rows_per_second: int = 1000) -> Data
 
 
 def stream_routed(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
-    """parse→enrich→route on a streaming transcripts frame (all stateless)."""
-    cw = enrich_ops.checkworthy_dim(spark)
-    stance = enrich_ops.stance_counts_dim(spark)
-    tools = enrich_ops.tool_dim(spark)
-    records = parse_ops.parse_turns(transcripts)
-    enriched = enrich_ops.enrich_tools(
-        enrich_ops.enrich_claims(records, cw, stance), tools
-    )
-    return route_ops.route_records(enriched)
+    """parse→enrich→route on a streaming transcripts frame (all stateless).
+    build_pipeline's aggregates are lazy, so only the routed frame is used."""
+    return build_pipeline(spark, transcripts).routed
 
 
 def windowed_summary(
@@ -102,11 +96,11 @@ def run_to_sinks_stream(
         # Partitioning by batch_id + dynamic overwrite makes the re-run replace
         # its own files instead of appending duplicates (idempotent).
         (
-            batch_df.withColumn("ts_day", F.to_date("ts"))
+            route_ops.stage_sinks(batch_df)
             .withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("route", "ts_day", "batch_id")
+            .partitionBy(*route_ops.PARTITION_COLS, "batch_id")
             .parquet(f"{out_dir}/sinks")
         )
 
@@ -135,35 +129,21 @@ def run_to_sinks_stream_snaplog(
     run_to_sinks_stream's parquet path, which gets idempotence by
     batch_id-partition overwrite (replace on replay); here the replay is a
     metadata no-op and every batch boundary is atomic + time-travelable.
-    Per-batch cost of the replay check: the full log is read ONCE at (re)start
-    to seed the committed-id set; after that, batch ids from this source are
-    monotonic, so each batch adds O(1) — the log is never re-scanned inside a
-    healthy stream (expire_snapshots bounds the one startup scan on
-    long-lived tables)."""
-    from ..sources import snaplog
-
+    The replay check is snaplog.CommitOnce: the log is read ONCE at
+    (re)start to seed the committed-id set, and each batch adds O(1) after
+    that (expire_snapshots bounds the one startup scan on long-lived
+    tables)."""
     routed = stream_routed(spark, transcripts)
     table = f"{out_dir}/sinks"
-    committed: set = set()
-    seeded = [False]
+    commits = snaplog.CommitOnce(spark, "stream_batch_id")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not seeded[0]:
-            committed.update(
-                h["summary"].get("stream_batch_id")
-                for h in snaplog.history(spark, table)
-            )
-            seeded[0] = True
-        if batch_id in committed:
-            return  # replay of an already-committed batch: exactly-once skip
-        snaplog.append(
-            spark,
+        commits.append(
             table,
-            batch_df.withColumn("ts_day", F.to_date("ts")),
-            ["route", "ts_day"],
-            summary_extra={"stream_batch_id": batch_id},
+            route_ops.stage_sinks(batch_df),
+            batch_id,
+            list(route_ops.PARTITION_COLS),
         )
-        committed.add(batch_id)
 
     writer = routed.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir

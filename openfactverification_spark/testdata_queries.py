@@ -536,13 +536,16 @@ def q_ingest_dedup_stream_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     own dedup_incremental template: the stream's END STATE must equal the
     sequential batch computation row-for-row (stream ≡ batch, now
     driver-hash-checked, not just pytest-pinned)."""
-    import shutil
+    import uuid
 
     from .sources import snaplog
     from .streaming import ingest_dedup
 
-    base = f"/tmp/ofv_ingest_stream_q/{posixpath.basename(sf_dir.rstrip('/'))}"
-    shutil.rmtree(base, ignore_errors=True)
+    # a fresh root per call: concurrent runs never share a store/checkpoint
+    base = (
+        f"/tmp/ofv_ingest_stream_q/{posixpath.basename(sf_dir.rstrip('/'))}"
+        f"-{uuid.uuid4().hex[:12]}"
+    )
     store, out, ck, src = (posixpath.join(base, d) for d in ("store", "out", "ck", "src"))
 
     docs = spark.read.parquet(table_path(sf_dir, "documents")).select("doc_id", "text")

@@ -70,7 +70,7 @@ def digest(df):
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
 
 sunk = snaplog.read(spark, out_dir + "/sinks")
-h_sink = digest(agg_ops.sink_summary(sunk.drop("p_day")))
+h_sink = digest(agg_ops.sink_summary(sunk))
 n_sink = sunk.count()
 h_direct = digest(build_pipeline(spark, transcripts_df(spark, n_turns)).summary)
 epochs = sorted(checkpoint.committed_epochs(out_dir, spark))

@@ -1,9 +1,10 @@
 """Flagship scale-proof at 10x bench scale (r3 verdict #4).
 
-Runs the full pipeline_e2e shape (parse -> enrich -> route -> partitioned
-zstd sink write -> columnar re-read aggregates, exactly bench.py's
-bench_pipeline) at sf1.0-equivalent load — 20M synthetic turns, 10x the
-driver bench's 2M — in a fresh JVM per run, and checks the two scale laws:
+Runs the full pipeline_e2e shape (run_to_sinks: parse -> enrich -> route ->
+partitioned zstd sink write -> summary aggregated from the sinks, then
+summary.collect(); exactly bench.py's bench_pipeline) at sf1.0-equivalent
+load — 20M synthetic turns, 10x the driver bench's 2M — in a fresh JVM per
+run, and checks the two scale laws:
 
   * throughput law: turns/sec at 20M must be within 2x of the sf0.1 rate
     (a plan whose cost grows super-linearly in N would fall out here);
@@ -33,14 +34,14 @@ import bench
 cpus, n_turns = int(sys.argv[1]), int(sys.argv[2])
 spark = get_spark("bench-sf1", master=f"local[{{cpus}}]")
 bench.bench_pipeline(spark, 50_000)  # untimed warm-up
-sec, n = bench.bench_pipeline(spark, n_turns)
+sec = bench.bench_pipeline(spark, n_turns)["sec"]
 
 # per-sink hash of the same summary the scaling bench pins
 from openfactverification_spark.plans.pipeline import build_pipeline
 from openfactverification_spark.sources.transcripts import transcripts_df
 summary = sorted(map(str, build_pipeline(spark, transcripts_df(spark, n_turns)).summary.collect()))
 digest = hashlib.sha256("\n".join(summary).encode()).hexdigest()[:16]
-print(json.dumps({{"cpus": cpus, "sec": sec, "turns_per_sec": n / sec,
+print(json.dumps({{"cpus": cpus, "sec": sec, "turns_per_sec": n_turns / sec,
                    "summary_hash": digest}}))
 spark.stop()
 """

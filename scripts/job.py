@@ -53,15 +53,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    # spark-submit supplies master/deploy-mode; only app-level configs here.
-    spark = (
-        SparkSession.builder.appName("ofv-pipeline")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    from openfactverification_spark.session import ENGINE_CONF
+
+    # spark-submit supplies master/deploy-mode; only the engine configs here.
+    spark = SparkSession.builder.appName("ofv-pipeline").config(map=ENGINE_CONF).getOrCreate()
 
     from openfactverification_spark import checkpoint as ckpt
     from openfactverification_spark.plans.pipeline import run_to_sinks

@@ -7,9 +7,13 @@ single uninterrupted run.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from openfactverification_spark import checkpoint as ckpt
+from openfactverification_spark.plans.pipeline import run_to_sinks
+from openfactverification_spark.sources import snaplog
 from openfactverification_spark.sources.transcripts import transcripts_df
 
 N_TURNS = 2000  # 5 distinct ts days (epochs) in the generator formula
@@ -111,3 +115,32 @@ def test_snaplog_sink_crash_resume_exactly_once(spark, tmp_path):
     ops = [h["operation"] for h in snaplog.history(spark, table)]
     assert ops[0] == "append" and set(ops[1:]) == {"overwrite_partitions"}
     assert len(ops) == 6
+
+
+@pytest.mark.parametrize("sink_format", ["parquet", "snaplog"])
+def test_resumable_sinks_use_batch_layout(spark, tmp_path, sink_format):
+    """Both resumable sink formats lay files out exactly as the batch sink
+    does: partitioned by (route, ts_day), with per-partition row counts equal
+    to run_to_sinks's."""
+    transcripts = transcripts_df(spark, N_TURNS)
+    batch_dir = str(tmp_path / "batch")
+    run_to_sinks(spark, transcripts, batch_dir)
+
+    out_dir = str(tmp_path / sink_format)
+    ckpt.run_resumable(spark, transcripts, out_dir, sink_format=sink_format)
+    sinks = f"{out_dir}/sinks"
+    if sink_format == "snaplog":
+        assert snaplog.current_snapshot(spark, sinks)["partition_cols"] == ["route", "ts_day"]
+        resumed = snaplog.read(spark, sinks)
+    else:
+        routes = [d for d in os.listdir(sinks) if not d.startswith(("_", "."))]
+        assert routes and all(d.startswith("route=") for d in routes), routes
+        for d in routes:
+            days = [x for x in os.listdir(os.path.join(sinks, d)) if not x.startswith(".")]
+            assert days and all(x.startswith("ts_day=") for x in days), days
+        resumed = spark.read.parquet(sinks)
+
+    def counts(df):
+        return sorted(tuple(r) for r in df.groupBy("route", "ts_day").count().collect())
+
+    assert counts(resumed) == counts(spark.read.parquet(f"{batch_dir}/sinks"))

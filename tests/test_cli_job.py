@@ -5,10 +5,13 @@ resume mode on a tmpdir (SURVEY.md §2.1 S2; reference CLI at
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
 import sys
+
+import pyarrow.parquet as pq
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 JOB = os.path.join(REPO, "scripts", "job.py")
@@ -42,6 +45,17 @@ def test_cli_batch_mode(tmp_path):
     }
     assert routes <= {"checkworthy", "non_factual", "tool_trace", "verdict"}
     assert routes, "expected at least one routed sink partition"
+    # the job runs with the engine's session configs: zstd-compressed sinks
+    files = glob.glob(os.path.join(out, "sinks", "route=*", "ts_day=*", "*.parquet"))
+    assert files
+    for path in files:
+        meta = pq.ParquetFile(path).metadata
+        codecs = {
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        }
+        assert codecs == {"ZSTD"}, (path, codecs)
 
 
 def test_cli_resume_mode_idempotent(tmp_path):

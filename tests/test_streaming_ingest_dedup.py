@@ -144,8 +144,9 @@ def test_crash_between_store_and_status_replays_identically(spark, tmp_path, mon
                 pass
             monkeypatch.setattr(ingest_dedup.snaplog, "append", real_append)
             # the store tables DID commit epoch 1; status did not
-            assert 1 not in ingest_dedup._committed_epochs(spark, f"{out}/status")
-            assert 1 in ingest_dedup._committed_epochs(spark, f"{store}/sh")
+            commits = snaplog.CommitOnce(spark, "ingest_epoch")
+            assert not commits.committed(f"{out}/status", 1)
+            assert commits.committed(f"{store}/sh", 1)
         # replay (crashy) / first run (clean) of epoch 1
         ingest_dedup.process_batch(spark, batches[1], 1, store, out)
         runs[mode] = {
