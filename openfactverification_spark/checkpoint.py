@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from .operators import route as route_ops
 from .plans.pipeline import build_pipeline
 from .rulepack import DEFAULT_PACK, RulePack
+from .session import local_frame
 from .sources import snaplog
 
 SCHEMA_VERSION = 1
@@ -88,7 +89,7 @@ def pending_epochs(spark: SparkSession, transcripts: DataFrame, out_dir: str) ->
     ).distinct()
     done = list(committed_epochs(out_dir, spark))
     if done:
-        done_df = spark.createDataFrame([(e,) for e in done], "epoch string")
+        done_df = local_frame(spark, [(e,) for e in done], "epoch string")
         input_epochs = input_epochs.join(done_df, "epoch", "left_anti")
     return sorted(r["epoch"] for r in input_epochs.collect())
 

@@ -17,6 +17,7 @@ from .operators import aggregate as agg_ops
 from .operators import parse as parse_ops
 from .plans import oracle as oracle_mod
 from .plans.pipeline import build_pipeline
+from .session import local_frame
 from .sources.transcripts import transcripts_df
 
 ORACLE_N_TURNS = 4096
@@ -397,7 +398,7 @@ def q_pipeline_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed, obs = observed_routed(transcripts_df(spark, ORACLE_N_TURNS), spark)
     routed.write.format("noop").mode("overwrite").save()
     rows = sorted((k, int(v)) for k, v in obs.get.items())
-    return spark.createDataFrame(rows, "metric string, value bigint")
+    return local_frame(spark, rows, "metric string, value bigint")
 
 
 PIPELINE_QUERIES: dict[str, QuerieFn] = {

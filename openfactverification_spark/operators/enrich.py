@@ -7,6 +7,10 @@ corpus is pre-aggregated to per-claim stance counts (16 rows here; a few million
 a real corpus), so the 10^12-row fact side takes one broadcast join instead of an
 explode + re-group shuffle. The exploded (claim, evidence) detail view is still
 available via `attach_evidence` for sinks that need provenance rows.
+
+The dimensions are driver-local relations (`session.local_frame`: Arrow-built,
+planned as `LocalTableScan`), so building their broadcasts runs no Python
+worker — the flagship hot path crosses the Python boundary nowhere.
 """
 
 from __future__ import annotations
@@ -15,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from ..sources.transcripts import (
     DEFAULT_REASON,
     checkworthy_labels_rows,
@@ -51,15 +56,15 @@ _TOOL_SCHEMA = T.StructType(
 
 
 def checkworthy_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(checkworthy_labels_rows(), _CW_SCHEMA)
+    return local_frame(spark, checkworthy_labels_rows(), _CW_SCHEMA)
 
 
 def evidence_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(evidence_corpus_rows(), _EV_SCHEMA)
+    return local_frame(spark, evidence_corpus_rows(), _EV_SCHEMA)
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(tool_metadata_rows(), _TOOL_SCHEMA)
+    return local_frame(spark, tool_metadata_rows(), _TOOL_SCHEMA)
 
 
 def stance_counts_dim(spark: SparkSession) -> DataFrame:
@@ -96,32 +101,35 @@ def enrich_claims(records: DataFrame, cw_dim: DataFrame, stance_dim: DataFrame) 
 
     is_claim = F.col("record_kind") == "claim"
     checkworthy = F.when(is_claim, F.coalesce(F.col("cw_label"), F.col("cw_fallback")))
+    scored = is_claim & checkworthy
     n_s = F.coalesce(F.col("n_supports"), F.lit(0))
     n_r = F.coalesce(F.col("n_refutes"), F.lit(0))
 
-    factuality = F.when(
-        is_claim & checkworthy & ((n_s + n_r) > 0), n_s / (n_s + n_r)
-    ).cast("double")
+    factuality = F.when(scored & ((n_s + n_r) > 0), n_s / (n_s + n_r)).cast("double")
     factuality_tag = F.when(~is_claim, F.lit(None).cast("string")).otherwise(
         F.when(~checkworthy, F.lit("NOTHING_TO_CHECK"))
         .when((n_s + n_r) == 0, F.lit("NO_EVIDENCE"))
         .otherwise(F.lit("SCORE"))
     )
 
+    # Two projections: the score reads the gated counts of the first, which
+    # Catalyst keeps as their own Project anyway (the score references each
+    # several times, so CollapseProject won't inline them).
     return (
-        out.withColumn("checkworthy", checkworthy)
-        .withColumn(
-            "reason",
-            F.when(is_claim, F.coalesce(F.col("cw_reason"), F.lit(DEFAULT_REASON))),
+        out.withColumns(
+            {
+                "checkworthy": checkworthy,
+                "reason": F.when(
+                    is_claim, F.coalesce(F.col("cw_reason"), F.lit(DEFAULT_REASON))
+                ),
+                "n_supports": F.when(scored, n_s).cast("int"),
+                "n_refutes": F.when(scored, n_r).cast("int"),
+                "n_evidence": F.when(
+                    scored, F.coalesce(F.col("n_evidence"), F.lit(0))
+                ).cast("int"),
+            }
         )
-        .withColumn("n_supports", F.when(is_claim & checkworthy, n_s).cast("int"))
-        .withColumn("n_refutes", F.when(is_claim & checkworthy, n_r).cast("int"))
-        .withColumn(
-            "n_evidence",
-            F.when(is_claim & checkworthy, F.coalesce(F.col("n_evidence"), F.lit(0))).cast("int"),
-        )
-        .withColumn("factuality", factuality)
-        .withColumn("factuality_tag", factuality_tag)
+        .withColumns({"factuality": factuality, "factuality_tag": factuality_tag})
         .drop("cw_label", "cw_reason", "cw_fallback")
     )
 

@@ -10,6 +10,7 @@ aggregation — both keyed on low-cardinality columns, both AQE-coalesced.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -22,11 +23,27 @@ from ..rulepack import DEFAULT_PACK, RulePack
 
 @dataclass
 class PipelineResult:
+    """The flagship frames. The aggregates are derived from ``routed`` on
+    first access: PySpark analyzes a DataFrame when it is constructed, so an
+    aggregate a run never reads would still cost driver time."""
+
     records: DataFrame  # parsed records (pre-route)
     routed: DataFrame  # records + route tag
-    summary: DataFrame  # per (route, role) aggregate
-    summary_per_conv: DataFrame  # per (route, role, conv_id) aggregate
-    verdicts: DataFrame  # per-claim verdict projection
+
+    @cached_property
+    def summary(self) -> DataFrame:
+        """Per (route, role) aggregate."""
+        return agg_ops.sink_summary(self.routed)
+
+    @cached_property
+    def summary_per_conv(self) -> DataFrame:
+        """Per (route, role, conv_id) aggregate."""
+        return agg_ops.sink_summary(self.routed, per_conv=True)
+
+    @cached_property
+    def verdicts(self) -> DataFrame:
+        """Per-claim verdict projection."""
+        return agg_ops.claim_verdicts(self.routed)
 
 
 def build_pipeline(
@@ -40,15 +57,7 @@ def build_pipeline(
     enriched = enrich_ops.enrich_tools(
         enrich_ops.enrich_claims(records, cw, stance), tools
     )
-    routed = route_ops.route_records(enriched)
-
-    return PipelineResult(
-        records=records,
-        routed=routed,
-        summary=agg_ops.sink_summary(routed),
-        summary_per_conv=agg_ops.sink_summary(routed, per_conv=True),
-        verdicts=agg_ops.claim_verdicts(routed),
-    )
+    return PipelineResult(records=records, routed=route_ops.route_records(enriched))
 
 
 def run_to_sinks(spark: SparkSession, transcripts: DataFrame, out_dir: str) -> PipelineResult:
@@ -57,10 +66,10 @@ def run_to_sinks(spark: SparkSession, transcripts: DataFrame, out_dir: str) -> P
     parse → enrich pass), and return a result whose ``summary`` reads the
     written ``summary/`` directory, so collecting it is a file read."""
     result = build_pipeline(spark, transcripts)
-    route_ops.write_sinks(result.routed, f"{out_dir}/sinks")
+    staged = route_ops.write_sinks(result.routed, f"{out_dir}/sinks")
     # explicit schema: no footer inference, and an empty input (no sink
     # files at all) still yields an empty summary
-    sinks = spark.read.schema(route_ops.stage_sinks(result.routed).schema)
+    sinks = spark.read.schema(staged.schema)
     agg_ops.sink_summary(sinks.parquet(f"{out_dir}/sinks")).write.mode(
         "overwrite"
     ).parquet(f"{out_dir}/summary")

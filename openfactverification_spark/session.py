@@ -8,8 +8,12 @@ not a local-mode hack.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 # The engine's machine-independent configs, shared by get_spark and the
@@ -65,3 +69,23 @@ def get_spark(
     )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """The package's one way to turn driver-side Python rows into a DataFrame.
+
+    The rows travel as an Arrow table typed by ``schema`` (a StructType or a
+    DDL string), which Spark plans as a driver-local ``LocalTableScan``: no
+    ``parallelize``, no ``PythonRDD`` and no Python worker when the frame is
+    scanned or broadcast. ``spark.createDataFrame(rows, schema)`` would instead
+    ship the rows through Python tasks on every action that reads them."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [[] for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow, strict=True)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -79,6 +79,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 LOG_DIR = "_snaplog"
 DATA_DIR = "data"
 FORMAT_VERSION = 1
@@ -706,7 +708,7 @@ def _frame_for_files(
     union made a 30-day read 30 scans); compaction collapses commits, so the
     relation count stays small on a maintained table."""
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     groups: dict[str, list[str]] = {}
     for f in files:

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import dual
 from ..operators.dual import D
+from ..session import local_frame
 from ..sources import snaplog
 
 _S = D("spark")
@@ -201,7 +202,7 @@ def process_batch(
             .localCheckpoint(eager=True)
         )
     else:
-        seen = s.createDataFrame([], "doc_id long, dup_of long")
+        seen = local_frame(s, [], "doc_id long, dup_of long")
 
     cand_intra = (
         bands_b.alias("a")

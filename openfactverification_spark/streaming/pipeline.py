@@ -47,7 +47,8 @@ def transcripts_stream(spark: SparkSession, rows_per_second: int = 1000) -> Data
 
 def stream_routed(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
     """parse→enrich→route on a streaming transcripts frame (all stateless).
-    build_pipeline's aggregates are lazy, so only the routed frame is used."""
+    build_pipeline's aggregates are constructed only on first access, so a
+    streaming caller never builds (or analyzes) them."""
     return build_pipeline(spark, transcripts).routed
 
 

@@ -7,8 +7,9 @@ import math
 
 from pyspark.sql import functions as F
 
+from openfactverification_spark.operators import aggregate as agg_ops
 from openfactverification_spark.operators.route import SINKS, write_sinks
-from openfactverification_spark.plans.pipeline import build_pipeline
+from openfactverification_spark.plans.pipeline import build_pipeline, run_to_sinks
 from openfactverification_spark.sources.transcripts import (
     DEFAULT_REASON,
     transcripts_df,
@@ -113,3 +114,39 @@ def test_write_sinks_partition_layout(spark, tmp_path):
 
     top = {d for d in os.listdir(out) if not d.startswith(("_", "."))}
     assert top and all(d.startswith("route=") for d in top), top
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_routed_plan_runs_no_python(spark):
+    """The flagship plan is Python-free: the enrich dimensions are local
+    relations, not ``createDataFrame`` RDD scans whose broadcast builds run
+    Python-worker tasks on every write."""
+    routed = _pipe(spark, n=64).routed
+    routed.collect()  # AQE finalizes the plan only after execution
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "PythonRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
+def test_result_aggregates_are_lazy(spark, tmp_path):
+    """The aggregates are built on first access and equal the operators
+    applied to ``routed``; after run_to_sinks, ``summary`` reads summary/."""
+    res = _pipe(spark, n=64)
+    assert not {"summary", "summary_per_conv", "verdicts"} & set(vars(res))
+    for got, want in (
+        (res.summary, agg_ops.sink_summary(res.routed)),
+        (res.summary_per_conv, agg_ops.sink_summary(res.routed, per_conv=True)),
+        (res.verdicts, agg_ops.claim_verdicts(res.routed)),
+    ):
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want)
+
+    out = str(tmp_path / "out")
+    written = run_to_sinks(spark, transcripts_df(spark, 64), out)
+    files = written.summary.inputFiles()
+    assert files and all(f"{out}/summary/" in f for f in files), files
+    assert _rows(written.summary) == _rows(res.summary)
