@@ -15,6 +15,34 @@ shingle stream for the exact verify):
     store/sh       (doc_id, shingle)
     out/status     (doc_id, batch_id, status, dup_of)
 
+A micro-batch is four materializations, each one eager localCheckpoint:
+
+    signed   (doc_id, sh)        sh = the batch operator's array_distinct
+                                 shingle array (dual.shingles_expr)
+    bands    (doc_id, band_idx, band_key)
+                                 dual.minhash_sig_cte + minhash_bands_sql
+                                 over explode(sh) — the batch operator's own
+                                 fragments, so stream ≡ batch by construction
+    seen     (doc_id, dup_of)    band candidates against the pinned store,
+                                 verified against the store's shingle rows
+    status   (doc_id, batch_id, status, dup_of)
+                                 one projection over the batch ids: left
+                                 joins to seen and to the intra-batch verify,
+                                 a CASE for the label
+
+Accepted docs are ``status = 'new'``; their count rides the status
+materialization as an Observation, so an all-duplicate batch skips the store
+appends without another job. seed_store builds the same signed/bands frames.
+
+The exact-jaccard verify is array arithmetic, not a shingle-row self-join,
+and is bit-identical to the batch operator's ``count(*)`` form because every
+shingle array is distinct (and so is every doc's run of store/sh rows): the
+intra-batch n_common = size(array_intersect(shx, shy)) is exactly the
+inner-join row count, and against the store the candidate partner's rows
+give szy = count(*) and n_common = sum(array_contains(shx, shingle)). The
+same integers go through the same double division and threshold. Only ~1k
+batch arrays are broadcast; the store's shingle rows stream past them once.
+
 At 10^12 docs the shingle stream would store h7 hashes rather than raw
 shingles (the dedup_ngram_spans trade); raw shingles keep the jaccard
 arithmetic bit-identical to the batch operator here.
@@ -28,7 +56,8 @@ one atomic snapshot)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators import dual
 from ..operators.dual import D
@@ -63,81 +92,112 @@ def _pre_epoch_snapshot_id(spark: SparkSession, table: str, epoch: int) -> str |
     return None
 
 
-def _shingles(docs: DataFrame) -> DataFrame:
-    # df.sparkSession, NOT the caller's session: inside foreachBatch the
+def _signed(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh): each doc's distinct shingle array, materialized once."""
+    return docs.selectExpr("doc_id", f"{dual.shingles_expr(_S)} AS sh").localCheckpoint(
+        eager=True
+    )
+
+
+def _banded(signed: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, band_key) of a ``signed`` frame, materialized once:
+    the batch operator's own signature and band fragments over explode(sh)."""
+    # signed.sparkSession, NOT the caller's session: inside foreachBatch the
     # micro-batch DataFrame belongs to a CLONED SparkSession, and temp views
     # are session-scoped — registering on the clone and querying through the
     # outer session silently resolves whatever view the outer session last
     # held (here: seed_store's corpus — every batch classified the corpus)
-    docs.createOrReplaceTempView("ingest_docs")
-    sh = dual.shingles_expr(_S)
-    return docs.sparkSession.sql(
-        f"SELECT doc_id, explode({sh}) AS shingle FROM ingest_docs"
-    ).localCheckpoint(eager=True)
-
-
-def _bands(sh: DataFrame) -> DataFrame:
-    sh.createOrReplaceTempView("ingest_sh")
+    signed.createOrReplaceTempView("ingest_signed")
+    sh_sql = "SELECT doc_id, explode(sh) AS shingle FROM ingest_signed"
     sql = (
-        f"WITH {dual.minhash_sig_cte(_S, sh_sql='SELECT doc_id, shingle FROM ingest_sh')}"
+        f"WITH {dual.minhash_sig_cte(_S, sh_sql=sh_sql)}"
         f"\nSELECT * FROM ({dual.minhash_bands_sql(_S)}) b"
     )
-    return sh.sparkSession.sql(sql).localCheckpoint(eager=True)
+    return signed.sparkSession.sql(sql).localCheckpoint(eager=True)
 
 
-def _verified(
-    cand: DataFrame,
-    sh_x: DataFrame,
-    sh_y: DataFrame,
-    threshold: float,
-) -> DataFrame:
-    """Exact-jaccard verify of candidate pairs (x from the batch, y from the
-    partner side): same arithmetic as q_dedup_minhash_lsh's verify stage."""
-    cand.createOrReplaceTempView("ingest_cand")
-    sh_x.createOrReplaceTempView("ingest_shx")
-    sh_y.createOrReplaceTempView("ingest_shy")
-    return cand.sparkSession.sql(
-        f"""
-WITH szx AS (SELECT doc_id, count(*) AS sz FROM ingest_shx GROUP BY doc_id),
-szy AS (SELECT doc_id, count(*) AS sz FROM ingest_shy GROUP BY doc_id),
+def _shingle_rows(signed: DataFrame) -> DataFrame:
+    """The store/sh layout (doc_id, shingle) of a ``signed`` frame."""
+    return signed.selectExpr("doc_id", "explode(sh) AS shingle")
+
+
+def _jaccard_at_least(threshold: float) -> str:
+    """The batch operator's verify predicate over n_common/szx/szy columns;
+    n_common > 0 keeps its inner-join semantics (no shared shingle, no pair)."""
+    return (
+        "n_common > 0 AND "
+        f"cast(n_common as double) / (szx + szy - n_common) >= {threshold}"
+    )
+
+
+def _seen_sql(threshold: float) -> str:
+    """Batch docs with a verified partner in the pinned store (views
+    ingest_bands/ingest_signed of the batch, ingest_store_bands/_sh of the
+    store): band candidates, then the store's shingle rows of each candidate
+    partner y probed against the broadcast x arrays."""
+    return f"""
+WITH cand AS (
+  SELECT /*+ BROADCAST(q) */ DISTINCT q.doc_id AS x, s.doc_id AS y
+  FROM ingest_bands q JOIN ingest_store_bands s
+    ON q.band_idx = s.band_idx AND q.band_key = s.band_key
+),
 inter AS (
-  SELECT c.x, c.y, count(*) AS n_common
-  FROM ingest_cand c
-  JOIN ingest_shx a ON a.doc_id = c.x
-  JOIN ingest_shy b ON b.doc_id = c.y AND a.shingle = b.shingle
+  SELECT /*+ BROADCAST(c, a) */ c.x, c.y,
+         sum(cast(array_contains(a.sh, t.shingle) AS int)) AS n_common,
+         first(size(a.sh)) AS szx,
+         count(*) AS szy
+  FROM ingest_store_sh t
+  JOIN cand c ON c.y = t.doc_id
+  JOIN ingest_signed a ON a.doc_id = c.x
   GROUP BY c.x, c.y
 )
-SELECT i.x, i.y
-FROM inter i
-JOIN szx ON szx.doc_id = i.x
-JOIN szy ON szy.doc_id = i.y
-WHERE cast(i.n_common as double) / (szx.sz + szy.sz - i.n_common) >= {threshold}"""
-    ).localCheckpoint(eager=True)
+SELECT x AS doc_id, min(y) AS dup_of
+FROM inter WHERE {_jaccard_at_least(threshold)}
+GROUP BY x"""
 
 
-def _append_accepted(
-    store_dir: str,
-    sh: DataFrame,
-    bands: DataFrame,
-    accepted: DataFrame,
-    epoch: int,
-    commits: snaplog.CommitOnce,
-) -> None:
-    """Append the accepted docs' shingle + band streams to the store, skipping
-    any table that already committed this epoch (replay)."""
-    for table, df in ((f"{store_dir}/sh", sh), (f"{store_dir}/bands", bands)):
-        if commits.committed(table, epoch):
-            continue
-        rows = df.join(accepted, "doc_id", "semi")
-        if not rows.isEmpty():
-            commits.append(table, rows, epoch)
+def _status_sql(batch_id: int, threshold: float) -> str:
+    """One status row per batch doc (views ingest_signed, ingest_bands,
+    ingest_seen): dup_of_seen, else dup_in_batch (a smaller same-batch
+    partner, neither side dup_of_seen), else new. Batch-sized sides are
+    broadcast by hint: a checkpoint's size estimate can exceed the broadcast
+    threshold, and the sort-merge joins planned instead shuffle both sides."""
+    return f"""
+WITH cand AS (
+  SELECT /*+ BROADCAST(b, sx, sy) */ DISTINCT a.doc_id AS x, b.doc_id AS y
+  FROM ingest_bands a JOIN ingest_bands b
+    ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND b.doc_id < a.doc_id
+  LEFT ANTI JOIN ingest_seen sx ON sx.doc_id = a.doc_id
+  LEFT ANTI JOIN ingest_seen sy ON sy.doc_id = b.doc_id
+),
+pairs AS (
+  SELECT /*+ BROADCAST(a, b) */ c.x, c.y,
+         size(array_intersect(a.sh, b.sh)) AS n_common,
+         size(a.sh) AS szx, size(b.sh) AS szy
+  FROM cand c
+  JOIN ingest_signed a ON a.doc_id = c.x
+  JOIN ingest_signed b ON b.doc_id = c.y
+),
+intra AS (
+  SELECT x AS doc_id, min(y) AS dup_of
+  FROM pairs WHERE {_jaccard_at_least(threshold)}
+  GROUP BY x
+)
+SELECT /*+ BROADCAST(s, i) */ d.doc_id, {batch_id} AS batch_id,
+       CASE WHEN s.doc_id IS NOT NULL THEN 'dup_of_seen'
+            WHEN i.doc_id IS NOT NULL THEN 'dup_in_batch'
+            ELSE 'new' END AS status,
+       coalesce(s.dup_of, i.dup_of) AS dup_of
+FROM ingest_signed d
+LEFT JOIN ingest_seen s ON s.doc_id = d.doc_id
+LEFT JOIN intra i ON i.doc_id = d.doc_id"""
 
 
 def seed_store(spark: SparkSession, docs: DataFrame, store_dir: str) -> None:
     """Bootstrap the store with an initial corpus (every doc accepted)."""
-    sh = _shingles(docs)
-    bands = _bands(sh)
-    snaplog.append(spark, f"{store_dir}/sh", sh)
+    signed = _signed(docs)
+    bands = _banded(signed)
+    snaplog.append(spark, f"{store_dir}/sh", _shingle_rows(signed))
     snaplog.append(spark, f"{store_dir}/bands", bands)
 
 
@@ -168,9 +228,9 @@ def process_batch(
     status_table = f"{out_dir}/status"
     if commits.committed(status_table, epoch):
         return  # full replay of a committed batch
-    batch_df = batch_df.select("doc_id", "text").localCheckpoint(eager=True)
-    sh_b = _shingles(batch_df)
-    bands_b = _bands(sh_b)
+    signed = _signed(batch_df)
+    bands = _banded(signed)  # also (re)registers ingest_signed
+    bands.createOrReplaceTempView("ingest_bands")
 
     store_sh_t, store_bands_t = f"{store_dir}/sh", f"{store_dir}/bands"
     pin_sh = pin_bands = None
@@ -182,73 +242,33 @@ def process_batch(
         # this batch first ran; judge against an empty store, as run 1 did
         has_store = pin_bands is not None and pin_sh is not None
     if has_store:
-        sh_s = snaplog.read(s, store_sh_t, snapshot_id=pin_sh)
-        bands_s = snaplog.read(s, store_bands_t, snapshot_id=pin_bands)
-        cand_seen = (
-            bands_b.alias("q")
-            .join(
-                bands_s.alias("s"),
-                ["band_idx", "band_key"],
-            )
-            .selectExpr("q.doc_id AS x", "s.doc_id AS y")
-            .distinct()
+        snaplog.read(s, store_sh_t, snapshot_id=pin_sh).createOrReplaceTempView(
+            "ingest_store_sh"
         )
-        seen = (
-            _verified(cand_seen, sh_b, sh_s, threshold)
-            .groupBy("x")
-            .agg({"y": "min"})
-            .withColumnRenamed("min(y)", "dup_of")
-            .withColumnRenamed("x", "doc_id")
-            .localCheckpoint(eager=True)
+        snaplog.read(s, store_bands_t, snapshot_id=pin_bands).createOrReplaceTempView(
+            "ingest_store_bands"
         )
+        seen = s.sql(_seen_sql(threshold)).localCheckpoint(eager=True)
     else:
         seen = local_frame(s, [], "doc_id long, dup_of long")
+    seen.createOrReplaceTempView("ingest_seen")
 
-    cand_intra = (
-        bands_b.alias("a")
-        .join(bands_b.alias("b"), ["band_idx", "band_key"])
-        .selectExpr("a.doc_id AS x", "b.doc_id AS y")
-        .where("y < x")
-        .distinct()
-        .join(seen.selectExpr("doc_id AS x"), "x", "anti")
-        .join(seen.selectExpr("doc_id AS y"), "y", "anti")
-    )
-    intra = (
-        _verified(cand_intra, sh_b, sh_b, threshold)
-        .groupBy("x")
-        .agg({"y": "min"})
-        .withColumnRenamed("min(y)", "dup_of")
-        .withColumnRenamed("x", "doc_id")
-        .localCheckpoint(eager=True)
-    )
-
-    docs_ids = batch_df.select("doc_id")
-    accepted = docs_ids.join(seen, "doc_id", "anti").join(intra, "doc_id", "anti")
-    batch_id = epoch + 1
+    # the accepted count rides the status materialization (no second job)
+    n_new = Observation("ingest_status")
     status = (
-        seen.selectExpr(
-            "doc_id", f"{batch_id} AS batch_id", "'dup_of_seen' AS status", "dup_of"
-        )
-        .unionByName(
-            intra.selectExpr(
-                "doc_id",
-                f"{batch_id} AS batch_id",
-                "'dup_in_batch' AS status",
-                "dup_of",
-            )
-        )
-        .unionByName(
-            accepted.selectExpr(
-                "doc_id",
-                f"{batch_id} AS batch_id",
-                "'new' AS status",
-                "cast(NULL as bigint) AS dup_of",
-            )
-        )
+        s.sql(_status_sql(epoch + 1, threshold))
+        .observe(n_new, F.count_if(F.col("status") == "new").alias("n"))
+        .localCheckpoint(eager=True)
     )
     # store first, status last: the status commit is the batch's completion
     # marker, so a crash mid-way leaves a replayable (per-table-skipped) epoch
-    _append_accepted(store_dir, sh_b, bands_b, accepted, epoch, commits)
+    if n_new.get["n"]:
+        accepted = F.broadcast(status.where("status = 'new'").select("doc_id"))
+        for table, df in (
+            (store_sh_t, _shingle_rows(signed.join(accepted, "doc_id", "semi"))),
+            (store_bands_t, bands.join(accepted, "doc_id", "semi")),
+        ):
+            commits.append(table, df, epoch)
     commits.append(status_table, status, epoch)
 
 

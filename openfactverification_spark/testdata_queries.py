@@ -525,6 +525,25 @@ SELECT day, count(*) AS n_events, round(sum(value), 4) AS total_value
 FROM final GROUP BY day"""
 
 
+# q_ingest_dedup_stream_status's per-call roots live here, each removed when
+# the call returns
+INGEST_STREAM_Q_ROOT = "/tmp/ofv_ingest_stream_q"
+
+
+def _await_stream(q, timeout_s: float) -> None:
+    """Block until an availableNow query has finished. A query still running
+    at the deadline is stopped and raises TimeoutError; a query that failed
+    re-raises its exception."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.id} still running after {timeout_s}s; stopped it"
+        )
+    err = q.exception()
+    if err is not None:
+        raise err
+
+
 def q_ingest_dedup_stream_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-PRODUCED result through the correctness gate (r4 verdict #7):
     replay the fixed micro-batch sequence of dedup_incremental (batch =
@@ -535,32 +554,43 @@ def q_ingest_dedup_stream_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     final ``out/status`` table. The DuckDB oracle is the batch operator's
     own dedup_incremental template: the stream's END STATE must equal the
     sequential batch computation row-for-row (stream ≡ batch, now
-    driver-hash-checked, not just pytest-pinned)."""
+    driver-hash-checked, not just pytest-pinned).
+
+    The status rows are materialized before the call's root (store,
+    checkpoint, source and status files) is removed, so nothing is left
+    behind; a stream that times out or fails raises."""
+    import shutil
     import uuid
 
     from .sources import snaplog
     from .streaming import ingest_dedup
 
     # a fresh root per call: concurrent runs never share a store/checkpoint
-    base = (
-        f"/tmp/ofv_ingest_stream_q/{posixpath.basename(sf_dir.rstrip('/'))}"
-        f"-{uuid.uuid4().hex[:12]}"
+    base = posixpath.join(
+        INGEST_STREAM_Q_ROOT,
+        f"{posixpath.basename(sf_dir.rstrip('/'))}-{uuid.uuid4().hex[:12]}",
     )
     store, out, ck, src = (posixpath.join(base, d) for d in ("store", "out", "ck", "src"))
-
-    docs = spark.read.parquet(table_path(sf_dir, "documents")).select("doc_id", "text")
-    ingest_dedup.seed_store(spark, docs.filter("doc_id % 3 = 0"), store)
-    for stratum in (1, 2):
-        docs.filter(f"doc_id % 3 = {stratum}").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q = ingest_dedup.run_ingest_dedup_stream(
-            spark, spark.readStream.schema(docs.schema).parquet(src), store, out, ck
+    try:
+        docs = spark.read.parquet(table_path(sf_dir, "documents")).select(
+            "doc_id", "text"
         )
-        q.awaitTermination(300)
-    return snaplog.read(spark, posixpath.join(out, "status")).select(
-        "doc_id", "batch_id", "status", "dup_of"
-    )
+        ingest_dedup.seed_store(spark, docs.filter("doc_id % 3 = 0"), store)
+        for stratum in (1, 2):
+            docs.filter(f"doc_id % 3 = {stratum}").coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+            q = ingest_dedup.run_ingest_dedup_stream(
+                spark, spark.readStream.schema(docs.schema).parquet(src), store, out, ck
+            )
+            _await_stream(q, 300)
+        return (
+            snaplog.read(spark, posixpath.join(out, "status"))
+            .select("doc_id", "batch_id", "status", "dup_of")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,6 +8,10 @@ operator's exactly."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from openfactverification_spark import testdata_queries as tq
 from openfactverification_spark.sources import snaplog
 from openfactverification_spark.sources.tables import table_path
@@ -159,3 +163,127 @@ def test_crash_between_store_and_status_replays_identically(spark, tmp_path, mon
             s == "dup_of_seen" and d == i for i, _, s, d in runs[mode]
         ), "self-match: replay judged a doc against its own signatures"
     assert runs["crashy"] == runs["clean"]
+
+
+def test_direct_batch_job_budget(spark, tmp_path):
+    """A micro-batch is four materializations (signed, bands, seen, status)
+    plus the store and status commits: with a store to judge against and
+    accepted docs to append, one direct process_batch launches at most 30
+    Spark jobs. The statuses are still the batch operator's."""
+    docs = _docs(spark)
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    ingest_dedup.seed_store(spark, docs.filter("doc_id % 3 = 0"), store)
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for epoch, stratum in ((0, 1), (1, 2)):
+            batch = docs.filter(f"doc_id % 3 = {stratum}").localCheckpoint(eager=True)
+            group = f"ingest-job-budget-{tmp_path.name}-{epoch}"
+            sc.setJobGroup(group, group)
+            ingest_dedup.process_batch(spark, batch, epoch, store, out)
+            jobs[epoch] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < jobs[1] <= 30, jobs
+
+    got = {
+        tuple(r)
+        for r in snaplog.read(spark, f"{out}/status")
+        .select("doc_id", "batch_id", "status", "dup_of")
+        .collect()
+    }
+    spark.conf.set("spark.ofv.registered_sf", "")
+    want = {
+        (r["doc_id"], r["batch_id"], r["status"], r["dup_of"])
+        for r in tq.q_dedup_incremental_runner(spark, SF).collect()
+    }
+    assert got == want
+
+
+def test_all_duplicate_batch_skips_store_appends(spark, tmp_path):
+    """A batch whose every doc is dup_of_seen commits its status and nothing
+    else: no new store/sh or store/bands snapshot, same store rows."""
+    texts = [
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
+        "one two three four five six seven eight nine ten",
+    ]
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    ingest_dedup.seed_store(
+        spark, spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string"), store
+    )
+    tables = (f"{store}/sh", f"{store}/bands")
+
+    def store_state():
+        return {
+            t: (len(snaplog.history(spark, t)), snaplog.read(spark, t).count())
+            for t in tables
+        }
+
+    before = store_state()
+    batch = spark.createDataFrame(
+        [(10 + i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    ingest_dedup.process_batch(spark, batch, 0, store, out)
+
+    got = {tuple(r) for r in snaplog.read(spark, f"{out}/status").collect()}
+    assert got == {(10, 1, "dup_of_seen", 0), (11, 1, "dup_of_seen", 1)}
+    assert snaplog.CommitOnce(spark, "ingest_epoch").committed(f"{out}/status", 0)
+    assert store_state() == before
+
+
+class _FakeQuery:
+    """A started query that never finishes (``finished=False``) or that
+    finished with ``error``."""
+
+    id = "fake-query"
+
+    def __init__(self, finished: bool, error: Exception | None = None):
+        self.finished, self.error, self.stopped = finished, error, False
+
+    def awaitTermination(self, timeout=None):
+        return self.finished
+
+    def stop(self):
+        self.stopped = True
+
+    def exception(self):
+        return self.error
+
+
+def _fake_stream(monkeypatch, tmp_path, query):
+    monkeypatch.setattr(tq, "INGEST_STREAM_Q_ROOT", str(tmp_path / "roots"))
+    monkeypatch.setattr(
+        ingest_dedup, "run_ingest_dedup_stream", lambda *a, **kw: query
+    )
+
+
+def test_stream_status_query_timeout_stops_and_raises(spark, tmp_path, monkeypatch):
+    q = _FakeQuery(finished=False)
+    _fake_stream(monkeypatch, tmp_path, q)
+    with pytest.raises(TimeoutError):
+        tq.q_ingest_dedup_stream_status(spark, SF)
+    assert q.stopped
+    assert os.listdir(tmp_path / "roots") == []
+
+
+def test_stream_status_query_reraises_stream_error(spark, tmp_path, monkeypatch):
+    q = _FakeQuery(finished=True, error=RuntimeError("batch failed"))
+    _fake_stream(monkeypatch, tmp_path, q)
+    with pytest.raises(RuntimeError, match="batch failed"):
+        tq.q_ingest_dedup_stream_status(spark, SF)
+    assert os.listdir(tmp_path / "roots") == []
+
+
+def test_stream_status_query_removes_its_root(spark, tmp_path, monkeypatch):
+    """The query's store, checkpoint, source and status files are gone once
+    it returns, and its (materialized) rows are still the batch operator's."""
+    monkeypatch.setattr(tq, "INGEST_STREAM_Q_ROOT", str(tmp_path / "roots"))
+    got = {tuple(r) for r in tq.q_ingest_dedup_stream_status(spark, SF).collect()}
+    assert os.listdir(tmp_path / "roots") == []
+    spark.conf.set("spark.ofv.registered_sf", "")
+    want = {
+        (r["doc_id"], r["batch_id"], r["status"], r["dup_of"])
+        for r in tq.q_dedup_incremental_runner(spark, SF).collect()
+    }
+    assert got == want
