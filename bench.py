@@ -254,36 +254,26 @@ def bench_ingest_dedup_growth(
         shutil.rmtree(base, ignore_errors=True)
 
 
-def bench_stream_sinks(spark, n_turns: int = 500_000) -> dict:
-    """Exactly-once SnapLog streaming sink vs the parquet overwrite sink
-    (r3 verdict #3/#5): the same routed stream, availableNow over a staged
-    parquet source, timed through each foreachBatch writer. The delta is the
-    snapshot-commit overhead on top of the identical data write."""
+def bench_stream_sink(spark, n_turns: int = 500_000) -> float:
+    """Seconds for the exactly-once SnapLog streaming sink: the routed
+    stream, availableNow over a staged parquet source, timed through the
+    foreachBatch writer (data write plus one snapshot commit per batch)."""
     import shutil
     import tempfile
 
-    from openfactverification_spark.streaming.pipeline import (
-        run_to_sinks_stream,
-        run_to_sinks_stream_snaplog,
-    )
+    from openfactverification_spark.streaming.pipeline import run_to_sinks_stream
 
     base = tempfile.mkdtemp(prefix="bench_sinks_stream_")
     src = os.path.join(base, "src")
     try:
         transcripts_df(spark, n_turns).write.parquet(src)
         schema = spark.read.parquet(src).schema
-        out = {}
-        for name, runner in (
-            ("stream_sink_parquet", run_to_sinks_stream),
-            ("stream_sink_snaplog", run_to_sinks_stream_snaplog),
-        ):
-            sink_dir = os.path.join(base, name)
-            stream = spark.readStream.schema(schema).parquet(src)
-            t0 = time.perf_counter()
-            q = runner(spark, stream, sink_dir, os.path.join(sink_dir, "_ckpt"))
-            q.awaitTermination()
-            out[name] = round(time.perf_counter() - t0, 3)
-        return out
+        sink_dir = os.path.join(base, "sink")
+        stream = spark.readStream.schema(schema).parquet(src)
+        t0 = time.perf_counter()
+        q = run_to_sinks_stream(spark, stream, sink_dir, os.path.join(sink_dir, "_ckpt"))
+        q.awaitTermination()
+        return round(time.perf_counter() - t0, 3)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -376,9 +366,8 @@ def main() -> None:
     )
     timings["ingest_dedup_growth"] = growth["sec"]
     print(f"  ingest_dedup_growth: {growth}", file=sys.stderr)
-    sinks = bench_stream_sinks(spark)
-    timings.update(sinks)
-    print(f"  stream sinks: {sinks}", file=sys.stderr)
+    timings["stream_sink_snaplog"] = bench_stream_sink(spark)
+    print(f"  stream sink: {timings['stream_sink_snaplog']}s", file=sys.stderr)
 
     _pipe_sample()  # end-of-run sample
     if max(s["sec"] for s in pipe_samples) > 1.5 * min(s["sec"] for s in pipe_samples):

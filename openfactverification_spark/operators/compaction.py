@@ -34,7 +34,7 @@ def _fs(spark: SparkSession, path: str):
 def describe_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """(file, bytes) for every data file under `path` (Hadoop FS API, so the
     same code serves file:// and hdfs:///s3a:// — the ADVICE r1 lesson from
-    checkpoint manifests)."""
+    driver-side metadata I/O)."""
     fs, hpath, _ = _fs(spark, path)
     out = []
     it = fs.listFiles(hpath, True)

@@ -3,8 +3,8 @@
 tool-trace / verdict split at /root/reference/factcheck/__init__.py:171-195).
 
 The route tag is a single `when` chain computed in one pass. Every sink writer
-in the package (the batch overwrite here, the resumable epochs in
-checkpoint.py, both streaming sinks, catalog.write_routed) lays its files out
+in the package (the batch overwrite here, the resumable SnapLog epochs in
+checkpoint.py, the SnapLog streaming sink, catalog.write_routed) lays its files out
 through ``stage_sinks``: one write partitioned by ``PARTITION_COLS`` behind an
 AQE rebalance, single job, no persist, no re-read. Routes partition the
 record set: disjoint and complete (tested).

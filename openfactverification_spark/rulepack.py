@@ -5,10 +5,10 @@ The reference ships swappable prompt packs (EN + ZH, YAML/JSON loadable:
 utils/prompt/__init__.py:13-19) that define how text is decomposed. Our parser
 equivalent is a rule-pack: the sentence-boundary rules, abbreviation
 protections, tool-call grok pattern, and checkworthiness-fallback regexes that
-drive the P-stage. Packs are plain JSON/YAML data, versioned, recorded per run
-in the checkpoint manifest, and rendered for BOTH engines (Spark via the
-DataFrame API, DuckDB via generated SQL) so the oracle always executes the same
-pack as the pipeline.
+drive the P-stage. Packs are plain JSON/YAML data, versioned, recorded per
+resumable epoch in its sink snapshot summary, and rendered for BOTH engines
+(Spark via the DataFrame API, DuckDB via generated SQL) so the oracle always
+executes the same pack as the pipeline.
 
 Splitting model (shared by both renderers):
 

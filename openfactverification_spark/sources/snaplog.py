@@ -57,9 +57,7 @@ next step is Iceberg's split of listing into reusable manifest files, which
 changes the constant, not the protocol. All I/O goes through the Hadoop
 FileSystem API, so ``file://``, ``hdfs://`` and ``s3a://`` behave alike
 (on S3A, ``create(overwrite=false)`` maps to a conditional PUT under
-recent Hadoop; older stacks would commit through a catalog service — the
-same caveat applies to checkpoint.py's epoch manifest, which publishes
-through the same ``_Fs.create_exclusive``).
+recent Hadoop; older stacks would commit through a catalog service).
 
 Reference tie-in: the reference pipeline persists run artifacts by
 overwriting whole JSON result files (/root/reference/factcheck/__init__.py:131
@@ -73,6 +71,7 @@ import hashlib
 import json
 import posixpath
 import uuid
+from typing import Callable
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -110,8 +109,8 @@ def _publish_strategy(scheme: str) -> str:
 
 class _Fs:
     """Thin Hadoop FileSystem wrapper for every driver-side metadata file
-    (snapshot logs here, the checkpoint.py epoch manifest): driver-local
-    open() would break on hdfs:// / s3a:// roots."""
+    (the snapshot log): driver-local open() would break on hdfs:// / s3a://
+    roots."""
 
     def __init__(self, spark: SparkSession, root: str):
         jvm = spark._jvm
@@ -406,17 +405,22 @@ def _commit(
     schema_json: str,
     partition_cols: list[str],
     surviving: "callable",
-    summary_extra: dict | None = None,
+    op_summary: dict | None = None,
+    summary_extra: "dict | Callable[[], dict] | None" = None,
     require_parent: str | None = None,
 ) -> dict:
     """Optimistic-concurrency commit loop: read head, build the next snapshot,
     atomically create v{N+1}.json; on loss re-read and retry (the new data
     files stay valid — only the listing is rebuilt against the new head).
+    ``op_summary`` holds the operation's own summary fields; the caller's
+    ``summary_extra`` may be a zero-arg callable, resolved once here — after
+    the data write, so it can read an ``Observation`` filled by that write.
     ``require_parent`` pins the commit to a specific head snapshot: if any
     other commit lands first, raise instead of retrying — needed by
     operations (compaction) whose surviving-file computation was derived
     from that exact head and would silently drop a concurrent writer's
     files if replayed against a newer one."""
+    extra = summary_extra() if callable(summary_extra) else summary_extra
     for _ in range(_COMMIT_RETRIES):
         head, vs = _head(fs)
         if require_parent is not None and (
@@ -446,7 +450,8 @@ def _commit(
                 "removed_files": len((head["files"] if head else [])) - len(base),
                 "total_files": len(files),
                 "total_bytes": sum(f["bytes"] for f in files),
-                **(summary_extra or {}),
+                **(op_summary or {}),
+                **(extra or {}),
             },
         }
         if fs.create_exclusive(fs.path(LOG_DIR, f"v{snap['version']}.json"), snap):
@@ -498,12 +503,13 @@ def append(
     table: str,
     df: DataFrame,
     partition_cols: list[str] | None = None,
-    summary_extra: dict | None = None,
+    summary_extra: "dict | Callable[[], dict] | None" = None,
 ) -> dict:
     """Append df as a new snapshot (parent files + new files). First append
-    creates the table and fixes its partition spec. ``summary_extra`` lands
-    in the snapshot summary — e.g. a streaming sink's batch id, which makes
-    the log itself the transaction table for exactly-once replay skips."""
+    creates the table and fixes its partition spec. ``summary_extra`` (a
+    dict, or a zero-arg callable resolved after the data write) lands in the
+    snapshot summary — e.g. a streaming sink's batch id or a resumable
+    epoch's entry, which makes the log itself the transaction table."""
     partition_cols = list(partition_cols or [])
     _data_schema(df, partition_cols)
     fs = _Fs(spark, table)
@@ -563,13 +569,19 @@ class CommitOnce:
         return snap
 
 
-def overwrite_partitions(spark: SparkSession, table: str, df: DataFrame) -> dict:
+def overwrite_partitions(
+    spark: SparkSession,
+    table: str,
+    df: DataFrame,
+    summary_extra: "dict | Callable[[], dict] | None" = None,
+) -> dict:
     """Dynamic partition overwrite: replace exactly the partitions PRESENT in
     df, leave every other partition untouched — the Iceberg
     ``writeTo(t).overwritePartitions()`` semantics the north star names, as
     one atomic snapshot (readers see old-everything or new-everything, never
     a half-swapped day). Idempotent: re-running the same commit after a crash
-    converges to the same live file set."""
+    converges to the same live file set. ``summary_extra`` is as in
+    ``append``."""
     head = current_snapshot(spark, table)
     if head is None:
         raise ValueError(f"overwrite_partitions on non-existent table {table}")
@@ -593,7 +605,8 @@ def overwrite_partitions(spark: SparkSession, table: str, df: DataFrame) -> dict
         schema_json=_evolved_schema(head, df),
         partition_cols=partition_cols,
         surviving=surviving,
-        summary_extra={"replaced_partitions": len(touched)},
+        op_summary={"replaced_partitions": len(touched)},
+        summary_extra=summary_extra,
     )
 
 
@@ -618,7 +631,7 @@ def rollback(spark: SparkSession, table: str, snapshot_id: str) -> dict:
         schema_json=target["schema"],
         partition_cols=target["partition_cols"],
         surviving=lambda _files: list(target["files"]),
-        summary_extra={"rolled_back_to": snapshot_id},
+        op_summary={"rolled_back_to": snapshot_id},
     )
 
 
@@ -778,7 +791,7 @@ def compact(spark: SparkSession, table: str, min_files: int = 2) -> dict | None:
         schema_json=head["schema"],
         partition_cols=pcols,
         surviving=surviving,
-        summary_extra={
+        op_summary={
             "compacted_partitions": len(todo),
             "compacted_files_in": len(victims),
         },

@@ -50,7 +50,7 @@ arithmetic bit-identical to the batch operator here.
 Exactly-once: foreachBatch is at-least-once, so every append goes through
 snaplog.CommitOnce keyed by ``ingest_epoch`` and the replay path skips any
 table that already committed this epoch (the same helper as
-run_to_sinks_stream_snaplog, applied per table — a crash between the three
+run_to_sinks_stream, applied per table — a crash between the three
 appends resumes by completing only the missing ones; each append is itself
 one atomic snapshot)."""
 

@@ -13,9 +13,11 @@ Streaming-specific pieces:
   * ``windowed_summary`` — watermarked sliding/tumbling-window per-sink counts
     (the streaming analog of aggregate.sink_summary; late rows beyond the
     watermark are dropped, A6's sliding-window semantics recast);
-  * ``run_to_sinks_stream`` — foreachBatch writer reusing the batch
-    write-sinks path, giving exactly-once-per-batch partitioned sink files with
-    checkpointLocation-based recovery (the streaming twin of checkpoint.py).
+  * ``run_to_sinks_stream`` — foreachBatch writer committing each micro-batch
+    as one SnapLog append in the batch sink layout, skipped on replay by its
+    batch id: exactly-once sinks under checkpointLocation-based recovery (the
+    streaming twin of checkpoint.py, which commits one snapshot per epoch
+    through the same log).
 """
 
 from __future__ import annotations
@@ -86,54 +88,17 @@ def run_to_sinks_stream(
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """Route the stream into the partitioned per-category sinks via foreachBatch
-    (reuses the batch write path; checkpointLocation gives restart recovery).
-    Returns the started StreamingQuery."""
-    routed = stream_routed(spark, transcripts)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: a crash between this write and the
-        # streaming checkpoint commit re-runs the same batch_id on restart.
-        # Partitioning by batch_id + dynamic overwrite makes the re-run replace
-        # its own files instead of appending duplicates (idempotent).
-        (
-            route_ops.stage_sinks(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*route_ops.PARTITION_COLS, "batch_id")
-            .parquet(f"{out_dir}/sinks")
-        )
-
-    writer = routed.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def run_to_sinks_stream_snaplog(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
     """Exactly-once streaming sink: each micro-batch is ONE atomic SnapLog
-    append whose snapshot summary records the batch id, so the snapshot log
-    doubles as the sink-side transaction table (the txn-id pattern
-    transactional-sink connectors use). foreachBatch is at-least-once — on
-    restart the same batch id replays — and the replay path checks committed
-    batch ids in the log and SKIPS, so rows land exactly once even though the
-    streaming checkpoint and the sink commit are separate stores. Compare
-    run_to_sinks_stream's parquet path, which gets idempotence by
-    batch_id-partition overwrite (replace on replay); here the replay is a
-    metadata no-op and every batch boundary is atomic + time-travelable.
+    append to ``{out_dir}/sinks`` whose snapshot summary records the batch
+    id, so the snapshot log doubles as the sink-side transaction table (the
+    txn-id pattern transactional-sink connectors use). foreachBatch is
+    at-least-once — on restart the same batch id replays — and the replay
+    path finds the id in the log and SKIPS, so rows land exactly once even
+    though the streaming checkpoint and the sink commit are separate stores.
     The replay check is snaplog.CommitOnce: the log is read ONCE at
     (re)start to seed the committed-id set, and each batch adds O(1) after
     that (expire_snapshots bounds the one startup scan on long-lived
-    tables)."""
+    tables). Returns the started StreamingQuery."""
     routed = stream_routed(spark, transcripts)
     table = f"{out_dir}/sinks"
     commits = snaplog.CommitOnce(spark, "stream_batch_id")

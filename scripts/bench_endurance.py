@@ -7,7 +7,7 @@ Runs the flagship pipeline in its checkpointed production shape
 committed, then a fresh-JVM resume, and checks:
 
   * resume law: the second invocation completes exactly the missing epochs
-    (manifest-committed epochs are never recomputed);
+    (an epoch committed as a sink snapshot is never recomputed);
   * hash law end-to-end THROUGH the crash: the per-(route, role) summary
     computed FROM the resumed SnapLog sink table is hash-identical to a
     direct single-pass run of the same pipeline at the same n_turns;
@@ -41,9 +41,7 @@ from openfactverification_spark.sources.transcripts import transcripts_df
 out_dir, n_turns, cpus = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
 spark = get_spark("endurance", master=f"local[{{cpus}}]")
 t0 = time.perf_counter()
-results = checkpoint.run_resumable(
-    spark, transcripts_df(spark, n_turns), out_dir, sink_format="snaplog"
-)
+results = checkpoint.run_resumable(spark, transcripts_df(spark, n_turns), out_dir)
 print(json.dumps({{
     "epochs_run": [r.epoch for r in results],
     "parsed_records": sum(r.parsed_records for r in results),
@@ -73,14 +71,14 @@ sunk = snaplog.read(spark, out_dir + "/sinks")
 h_sink = digest(agg_ops.sink_summary(sunk))
 n_sink = sunk.count()
 h_direct = digest(build_pipeline(spark, transcripts_df(spark, n_turns)).summary)
-epochs = sorted(checkpoint.committed_epochs(out_dir, spark))
+log = snaplog.history(spark, out_dir + "/sinks")
 print(json.dumps({{
     "hash_from_resumed_sink": h_sink,
     "hash_direct": h_direct,
     "hash_match": h_sink == h_direct,
     "sink_rows": n_sink,
-    "epochs_committed": epochs,
-    "sink_versions": len(snaplog.history(spark, out_dir + "/sinks")),
+    "epochs_committed": sorted(checkpoint.committed_epochs(log)),
+    "sink_versions": len(log),
 }}))
 spark.stop()
 """
@@ -137,14 +135,9 @@ def _spawn(code: str, *args: str) -> subprocess.Popen:
     )
 
 
-def _manifest_count(out_dir: str) -> int:
-    return len(
-        [
-            p
-            for p in glob.glob(os.path.join(out_dir, "_manifest", "*.json"))
-            if not os.path.basename(p).startswith(".")
-        ]
-    )
+def _snapshot_count(out_dir: str) -> int:
+    """Committed sink snapshots = committed epochs (one commit per epoch)."""
+    return len(glob.glob(os.path.join(out_dir, "sinks", "_snaplog", "v*.json")))
 
 
 def main() -> None:
@@ -155,16 +148,16 @@ def main() -> None:
 
     # Phase 1: run until ~half the 5 epochs are committed, then kill -9 the
     # whole process group mid-epoch (5s after the 2nd commit, so epoch 3 is
-    # in flight — sink written or half-written, manifest not yet committed).
+    # in flight — data files written or half-written, snapshot not published).
     t0 = time.perf_counter()
     p1 = _spawn(RUN_WORKER, out_dir, str(n_turns), str(cpus))
     rss1 = RssSampler(os.getpgid(p1.pid))
     rss1.start()
     killed_at = None
     while p1.poll() is None:
-        if _manifest_count(out_dir) >= 2:
+        if _snapshot_count(out_dir) >= 2:
             time.sleep(5)
-            killed_at = _manifest_count(out_dir)
+            killed_at = _snapshot_count(out_dir)
             os.killpg(os.getpgid(p1.pid), signal.SIGKILL)
             break
         time.sleep(1)

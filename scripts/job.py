@@ -27,14 +27,16 @@ def main() -> None:
     ap.add_argument("--n-turns", type=int, default=1_000_000)
     ap.add_argument("--input-parquet", default=None, help="read transcripts from parquet")
     ap.add_argument("--skew-pct", type=int, default=0)
-    ap.add_argument("--resume", action="store_true", help="checkpointed resumable run")
     ap.add_argument(
-        "--snaplog-sink",
+        "--resume",
         action="store_true",
-        help="commit sinks to a SnapLog table (atomic versioned partition "
-        "overwrites + snapshot-id lineage; sources/snaplog.py)",
+        help="checkpointed resumable run: one SnapLog commit per day epoch",
     )
-    ap.add_argument("--streaming", action="store_true", help="structured-streaming mode")
+    ap.add_argument(
+        "--streaming",
+        action="store_true",
+        help="structured-streaming mode: one SnapLog commit per micro-batch",
+    )
     ap.add_argument(
         "--ingest-dedup",
         action="store_true",
@@ -46,10 +48,6 @@ def main() -> None:
         "--store", default=None, help="signature-store dir for --ingest-dedup"
     )
     args = ap.parse_args()
-    if args.snaplog_sink and not (args.resume or args.streaming or args.ingest_dedup):
-        # the plain batch path writes parquet sinks directly; silently
-        # ignoring the flag would fake a versioned commit the user asked for
-        ap.error("--snaplog-sink requires --resume or --streaming")
 
     from pyspark.sql import SparkSession
 
@@ -85,7 +83,6 @@ def main() -> None:
     if args.streaming:
         from openfactverification_spark.streaming.pipeline import (
             run_to_sinks_stream,
-            run_to_sinks_stream_snaplog,
             transcripts_stream,
         )
 
@@ -94,8 +91,7 @@ def main() -> None:
             stream = spark.readStream.schema(schema).parquet(args.input_parquet)
         else:
             stream = transcripts_stream(spark)
-        runner = run_to_sinks_stream_snaplog if args.snaplog_sink else run_to_sinks_stream
-        q = runner(
+        q = run_to_sinks_stream(
             spark, stream, args.out, f"{args.out}/_stream_ckpt",
             available_now=bool(args.input_parquet),  # rate source runs until killed
         )
@@ -117,13 +113,7 @@ def main() -> None:
         transcripts = transcripts_df(spark, args.n_turns, skew_pct=args.skew_pct)
 
     if args.resume:
-        results = ckpt.run_resumable(
-            spark,
-            transcripts,
-            args.out,
-            lineage=lineage,
-            sink_format="snaplog" if args.snaplog_sink else "parquet",
-        )
+        results = ckpt.run_resumable(spark, transcripts, args.out, lineage=lineage)
         for r in results:
             print(f"epoch {r.epoch}: {r.parsed_records} records {r.routed_per_sink}")
     else:

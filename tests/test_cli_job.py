@@ -6,7 +6,6 @@ resume mode on a tmpdir (SURVEY.md §2.1 S2; reference CLI at
 from __future__ import annotations
 
 import glob
-import json
 import os
 import subprocess
 import sys
@@ -65,27 +64,43 @@ def test_cli_resume_mode_idempotent(tmp_path):
     epochs_first = [ln for ln in first.stdout.splitlines() if ln.startswith("epoch ")]
     assert epochs_first, first.stdout
 
-    # manifest entries committed, one JSON per epoch, rulepack recorded
-    # (the Hadoop local FS adds .crc sidecars — only visible *.json files count)
-    mdir = os.path.join(out, "_manifest")
-    entries = sorted(
-        e for e in os.listdir(mdir) if e.endswith(".json") and not e.startswith(".")
-    )
-    assert len(entries) == len(epochs_first)
-    with open(os.path.join(mdir, entries[0])) as f:
-        entry = json.load(f)
-    assert entry["rulepack"] == "default@2"
-    assert entry["metrics"]["parsed_records"] > 0
-
-    # second invocation: everything committed -> zero new epochs, sinks intact
+    # second invocation: everything committed -> zero new epochs
     second = _run("--out", out, "--resume", "--n-turns", N_TURNS)
     assert second.returncode == 0, second.stderr[-2000:]
     epochs_second = [ln for ln in second.stdout.splitlines() if ln.startswith("epoch ")]
     assert epochs_second == [], second.stdout
-    entries_after = sorted(
-        e for e in os.listdir(mdir) if e.endswith(".json") and not e.startswith(".")
-    )
-    assert entries_after == entries
+
+
+def test_cli_resume_snaplog_sink(tmp_path, spark):
+    """--resume: the sink is a versioned SnapLog table with one snapshot per
+    epoch, each summary carrying the epoch entry, and a re-invocation
+    commits nothing new (the SnapLog<->checkpoint<->CLI triangle driven
+    end-to-end)."""
+    from openfactverification_spark.sources import snaplog
+
+    out = str(tmp_path / "rs")
+    first = _run("--out", out, "--resume", "--n-turns", N_TURNS)
+    assert first.returncode == 0, first.stderr[-2000:]
+    epochs = [
+        ln.split()[1].rstrip(":") for ln in first.stdout.splitlines() if ln.startswith("epoch ")
+    ]
+    assert epochs, first.stdout
+
+    table = os.path.join(out, "sinks")
+    assert snaplog.is_snaplog_table(spark, table)
+    hist = snaplog.history(spark, table)
+    assert [h["summary"]["epoch"] for h in hist] == epochs  # one snapshot per epoch
+    for h in hist:
+        assert h["summary"]["rulepack"] == "default@2"
+        assert h["summary"]["parsed_records"] > 0
+    n_rows = snaplog.read(spark, table).count()
+    assert n_rows > 0
+
+    second = _run("--out", out, "--resume", "--n-turns", N_TURNS)
+    assert second.returncode == 0, second.stderr[-2000:]
+    assert not [ln for ln in second.stdout.splitlines() if ln.startswith("epoch ")]
+    assert len(snaplog.history(spark, table)) == len(hist)
+    assert snaplog.read(spark, table).count() == n_rows
 
 
 def test_cli_ingest_dedup_mode(tmp_path, spark):
@@ -114,57 +129,16 @@ def test_cli_ingest_dedup_mode(tmp_path, spark):
     assert store_ids == {1, 4}
 
 
-def test_cli_resume_snaplog_sink(tmp_path, spark):
-    """--resume --snaplog-sink: the sink is a versioned SnapLog table with one
-    snapshot per epoch, and a re-invocation commits nothing new (r3 verdict
-    #5 — the SnapLog<->checkpoint<->CLI triangle driven end-to-end)."""
-    from openfactverification_spark.sources import snaplog
-
-    out = str(tmp_path / "rs")
-    first = _run("--out", out, "--resume", "--snaplog-sink", "--n-turns", N_TURNS)
-    assert first.returncode == 0, first.stderr[-2000:]
-    epochs = [ln for ln in first.stdout.splitlines() if ln.startswith("epoch ")]
-    assert epochs
-
-    table = os.path.join(out, "sinks")
-    assert snaplog.is_snaplog_table(spark, table)
-    hist = snaplog.history(spark, table)
-    assert len(hist) == len(epochs)  # one atomic snapshot per epoch
-    n_rows = snaplog.read(spark, table).count()
-    assert n_rows > 0
-    # every manifest entry records the sink snapshot it produced
-    mdir = os.path.join(out, "_manifest")
-    for e in os.listdir(mdir):
-        if e.endswith(".json") and not e.startswith("."):
-            with open(os.path.join(mdir, e)) as f:
-                assert json.load(f)["sink_snapshot"]
-
-    second = _run("--out", out, "--resume", "--snaplog-sink", "--n-turns", N_TURNS)
-    assert second.returncode == 0, second.stderr[-2000:]
-    assert not [ln for ln in second.stdout.splitlines() if ln.startswith("epoch ")]
-    assert len(snaplog.history(spark, table)) == len(hist)
-    assert snaplog.read(spark, table).count() == n_rows
-
-
-def test_cli_snaplog_sink_requires_supporting_mode(tmp_path):
-    """Plain batch mode writes parquet sinks directly; --snaplog-sink there
-    used to be silently ignored (ADVICE r3) — now it must error."""
-    proc = _run("--out", str(tmp_path / "b"), "--snaplog-sink", "--n-turns", N_TURNS)
-    assert proc.returncode != 0
-    assert "--snaplog-sink requires" in proc.stderr
-
-
 def test_cli_streaming_snaplog_sink(tmp_path, spark):
-    """--streaming --snaplog-sink drives run_to_sinks_stream_snaplog (was
-    unreachable from the CLI): exactly-once micro-batch commits with the
-    batch id in each snapshot summary."""
+    """--streaming drives run_to_sinks_stream: exactly-once micro-batch
+    SnapLog commits with the batch id in each snapshot summary."""
     from openfactverification_spark.sources import snaplog
     from openfactverification_spark.sources.transcripts import transcripts_df
 
     src = str(tmp_path / "src")
     transcripts_df(spark, int(N_TURNS)).write.parquet(src)
     out = str(tmp_path / "out")
-    proc = _run("--streaming", "--snaplog-sink", "--input-parquet", src, "--out", out)
+    proc = _run("--streaming", "--input-parquet", src, "--out", out)
     assert proc.returncode == 0, proc.stderr[-2000:]
     table = os.path.join(out, "sinks")
     assert snaplog.read(spark, table).count() > 0

@@ -259,10 +259,10 @@ def test_compact_aborts_if_head_moves(spark, tmp_path):
 
 
 def test_streaming_snaplog_sink_exactly_once(spark, tmp_path):
-    """run_to_sinks_stream_snaplog: stream counts == batch counts, every
-    micro-batch is one snapshot carrying its batch id, and a full re-run with
-    a FRESH checkpoint (same batch ids replayed from scratch) commits
-    nothing new."""
+    """run_to_sinks_stream: stream counts == batch counts in the batch sink
+    layout, every micro-batch is one snapshot carrying its batch id, and a
+    full re-run with a FRESH checkpoint (same batch ids replayed from
+    scratch) commits nothing new."""
     from openfactverification_spark.plans.pipeline import build_pipeline
     from openfactverification_spark.sources.transcripts import transcripts_df
     from openfactverification_spark.streaming import pipeline as spipe
@@ -273,10 +273,11 @@ def test_streaming_snaplog_sink_exactly_once(spark, tmp_path):
     out = str(tmp_path / "out")
 
     stream = spark.readStream.schema(schema).parquet(src)
-    q = spipe.run_to_sinks_stream_snaplog(spark, stream, out, str(tmp_path / "ck1"))
+    q = spipe.run_to_sinks_stream(spark, stream, out, str(tmp_path / "ck1"))
     q.awaitTermination(300)
 
     table = f"{out}/sinks"
+    assert snaplog.current_snapshot(spark, table)["partition_cols"] == ["route", "ts_day"]
     got = {
         r["route"]: r["n"]
         for r in snaplog.read(spark, table).groupBy("route").count()
@@ -297,7 +298,7 @@ def test_streaming_snaplog_sink_exactly_once(spark, tmp_path):
     # replay from scratch: fresh checkpoint, same source -> same batch ids ->
     # every batch skips; the log must not grow and counts must not change
     stream2 = spark.readStream.schema(schema).parquet(src)
-    q2 = spipe.run_to_sinks_stream_snaplog(spark, stream2, out, str(tmp_path / "ck2"))
+    q2 = spipe.run_to_sinks_stream(spark, stream2, out, str(tmp_path / "ck2"))
     q2.awaitTermination(300)
     assert len(snaplog.history(spark, table)) == len(hist)
     got2 = {

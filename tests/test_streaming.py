@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from openfactverification_spark.plans.pipeline import build_pipeline
+from openfactverification_spark.sources import snaplog
 from openfactverification_spark.sources.transcripts import transcripts_df
 from openfactverification_spark.streaming import pipeline as spipe
 
@@ -29,7 +30,7 @@ def test_stream_sinks_match_batch(spark, tmp_path):
     q.awaitTermination(300)
 
     got = (
-        spark.read.parquet(f"{out}/sinks")
+        snaplog.read(spark, f"{out}/sinks")
         .groupBy("route")
         .agg(F.count(F.lit(1)).alias("n"))
     )
