@@ -282,8 +282,10 @@ def q_dedup_minhash_lsh(
     own the whole shuffle at 10^12 docs. With the cap set, buckets larger than
     the cap are excluded from candidate generation (capped output ⊆ uncapped;
     the members are near-certain duplicates of each other anyway and are
-    better handled by exact dedup first). Production pairs this with an
-    observe() metric on the dropped-bucket count — never a silent cap."""
+    better handled by exact dedup first). The cap is silent and lossy: no
+    metric counts the dropped buckets or the pairs they would have produced.
+    A lossless replacement (collapse identical shingle sets before banding)
+    is an open ROADMAP.md item."""
     k = H.MINHASH_K if k is None else k
     bands = H.MINHASH_BANDS if bands is None else bands
     bands_sql = minhash_bands_sql(d, k=k, bands=bands)

@@ -46,8 +46,14 @@ retained log suffix).
 
 Partition values live in the metadata, not the data files (files are
 written ``partitionBy(...)`` so the values come from the directory names,
-exactly once, at commit time); ``read`` re-attaches them as typed literal
-columns per file group, so round-trips preserve the logical schema.
+exactly once, at commit time); ``read`` resolves them from those names,
+typed by the snapshot's schema, so round-trips preserve the logical schema.
+
+Read plan size: an unpartitioned table reads as ONE parquet relation over
+its live file list, whatever its commit count; a partitioned table reads as
+one relation per live commit directory, because Spark rejects one relation
+over several ``data/<commit>/p=v/`` trees ("Conflicting directory structures
+detected"). Compaction collapses commits either way.
 
 Scale notes (10^12-turn table): the log is O(days x files-per-day) small
 JSON on the driver-side control plane — the data plane stays entirely in
@@ -67,9 +73,12 @@ recast as a table format with atomic, versioned, partition-granular commits.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import hashlib
 import json
 import posixpath
+import threading
 import uuid
 from typing import Callable
 from urllib.parse import unquote
@@ -84,6 +93,8 @@ LOG_DIR = "_snaplog"
 DATA_DIR = "data"
 FORMAT_VERSION = 1
 _COMMIT_RETRIES = 10
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
 # Schemes with no atomic namespace rename: publish via create(overwrite=false)
 # — a conditional PUT — instead of tmp+rename (see create_exclusive).
 _OBJECT_STORE_SCHEMES = frozenset(
@@ -649,8 +660,8 @@ def _resolve(fs: _Fs, snapshot_id: str | None, version: int | None) -> dict:
                 "not a committed snapshot"
             )
         return snap
-    if snapshot_id is None:
-        return head
+    if snapshot_id is None or snapshot_id == head["snapshot_id"]:
+        return head  # the common pin (a replay-safe read of the head)
     for v in reversed(vs):
         s = _load_snapshot_or_debris(fs, v)
         if s is None:
@@ -678,10 +689,8 @@ def read(
     partition, date/int/str via their canonical str form), so Python-typed
     filters behave naturally.
 
-    Plan shape: one parquet scan per live partition value group (columnar,
-    codegen'd), partition columns re-attached as typed literals — foldable
-    constants, so downstream filters on them are constant-folded by Catalyst
-    rather than evaluated per row."""
+    Plan shape (see _frame_for_files): one parquet relation for an
+    unpartitioned table, one per live commit for a partitioned one."""
     fs = _Fs(spark, table)
     snap = _resolve(fs, snapshot_id, version)
     schema = T.StructType.fromJson(json.loads(snap["schema"]))
@@ -709,39 +718,67 @@ def read(
 def _frame_for_files(
     spark: SparkSession, fs: _Fs, schema, pcols, files: list[dict]
 ) -> DataFrame:
-    """Explicit file list -> DataFrame with typed partition columns.
+    """Explicit file list -> DataFrame with typed partition columns. Snapshot
+    isolation holds either way: only the listed files enter the file index.
 
-    One scan per COMMIT directory (each is a self-consistent hive tree, so
-    ``basePath`` + the explicit file subset gives Spark a single relation per
-    commit with the partition columns resolved from the directory names and
-    typed by the snapshot's logical schema). Snapshot isolation holds — only
-    the listed files enter the file index — and partition predicates still
-    prune inside each relation as native PartitionFilters. Plan size is
-    O(live commits), not O(partition values) (the earlier per-partition-group
-    union made a 30-day read 30 scans); compaction collapses commits, so the
-    relation count stays small on a maintained table."""
+    Unpartitioned: ONE relation over every live file, whatever the commit
+    count (Iceberg plans a snapshot's file list as one scan the same way), so
+    a store that takes a commit per micro-batch costs its readers the same
+    plan, listing and task set at commit 100 as at commit 1. The explicit
+    schema null-fills columns a file lacks (additive schema evolution).
+
+    Partitioned: one relation per COMMIT directory. Each is a self-consistent
+    hive tree, so ``basePath`` + the explicit file subset resolves the
+    partition columns from the directory names, typed by the snapshot's
+    logical schema, and partition predicates prune inside each relation as
+    native PartitionFilters. One relation over several commits is not
+    possible: Spark infers partition values below ONE base directory per
+    relation, each commit directory is its own base, and with
+    ``basePath=data/`` it rejects the mix ("Conflicting directory structures
+    detected"). So a partitioned read is O(live commits) relations, not
+    O(partition values); compaction collapses commits."""
     if not files:
         return local_frame(spark, [], schema)
+    with _listing_without_job(spark, len(files)):
+        if not pcols:
+            paths = [posixpath.join(fs.root, f["path"]) for f in files]
+            return spark.read.schema(schema).parquet(*paths)
 
-    groups: dict[str, list[str]] = {}
-    for f in files:
-        rel = f["path"]
-        commit = rel.split("/")[1] if rel.startswith(DATA_DIR + "/") else ""
-        groups.setdefault(commit, []).append(posixpath.join(fs.root, rel))
+        groups: dict[str, list[str]] = {}
+        for f in files:
+            rel = f["path"]
+            commit = rel.split("/")[1] if rel.startswith(DATA_DIR + "/") else ""
+            groups.setdefault(commit, []).append(posixpath.join(fs.root, rel))
 
-    cols = [fld.name for fld in schema.fields]
-    parts = []
-    for commit, paths in sorted(groups.items()):
-        reader = spark.read.schema(schema)
-        if pcols:
-            reader = reader.option(
-                "basePath", posixpath.join(fs.root, DATA_DIR, commit)
-            )
-        parts.append(reader.parquet(*paths).select(*cols))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        cols = [fld.name for fld in schema.fields]
+        parts = [
+            spark.read.schema(schema)
+            .option("basePath", posixpath.join(fs.root, DATA_DIR, commit))
+            .parquet(*paths)
+            .select(*cols)
+            for commit, paths in sorted(groups.items())
+        ]
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+@contextlib.contextmanager
+def _listing_without_job(spark: SparkSession, n_paths: int):
+    """Let Spark stat ``n_paths`` explicit files in the calling process. The
+    manifest is the listing, so Spark's only work on a read is one status
+    call per named file; past its parallel-discovery threshold (32 paths by
+    default) it runs that as a Spark job with one task per file instead (40 files, a
+    4-core VM at local[4]: a 0.55 s job against a 0.1 s read). The
+    relation's file index is built when ``.parquet()`` returns, so the
+    setting is restored at once. The lock keeps concurrent reads from
+    restoring each other's raised value."""
+    conf = spark.conf
+    with _LISTING_LOCK:
+        old = conf.get(_LISTING_THRESHOLD)
+        conf.set(_LISTING_THRESHOLD, str(max(n_paths, int(old))))
+        try:
+            yield
+        finally:
+            conf.set(_LISTING_THRESHOLD, old)
 
 
 def compact(spark: SparkSession, table: str, min_files: int = 2) -> dict | None:
@@ -757,7 +794,8 @@ def compact(spark: SparkSession, table: str, min_files: int = 2) -> dict | None:
     Scale shape: the rewrite reads only the affected partitions' files and
     repartitions BY the partition columns, so each output partition is
     produced by one task writing one file — compaction work is proportional
-    to the small-file data, not the table."""
+    to the small-file data, not the table. An unpartitioned table is one
+    partition: once it holds >= min_files files they become one file."""
     head = current_snapshot(spark, table)
     if head is None:
         raise ValueError(f"compact on non-existent table {table}")
@@ -774,8 +812,12 @@ def compact(spark: SparkSession, table: str, min_files: int = 2) -> dict | None:
     fs = _Fs(spark, table)
     victims = [f for fl in todo.values() for f in fl]
     df = _frame_for_files(spark, fs, schema, pcols, victims)
+    # one task per output partition, so one file each; an unpartitioned table
+    # is one partition, read by one task without a shuffle
     if pcols:
         df = df.repartition(*[F.col(c) for c in pcols])
+    else:
+        df = df.coalesce(1)
     new_files, _ = _write_data_files(df, fs, pcols)
     touched = set(todo)
 

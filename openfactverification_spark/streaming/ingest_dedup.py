@@ -34,6 +34,12 @@ Accepted docs are ``status = 'new'``; their count rides the status
 materialization as an Observation, so an all-duplicate batch skips the store
 appends without another job. seed_store builds the same signed/bands frames.
 
+The three tables are unpartitioned, so each store read in ``seen`` is one
+parquet relation over the pinned snapshot's file list (snaplog
+_frame_for_files): an accepted batch adds a file set to store/sh and
+store/bands, not a relation, and the plan is as large at batch 100 as at
+batch 1. The bytes each read scans still grow with the store.
+
 The exact-jaccard verify is array arithmetic, not a shingle-row self-join,
 and is bit-identical to the batch operator's ``count(*)`` form because every
 shingle array is distinct (and so is every doc's run of store/sh rows): the
@@ -279,10 +285,11 @@ def maintain_store(
     keep_last: int = 3,
     min_files: int = 2,
 ) -> dict:
-    """Housekeeping between batches: compact each table's small files (one
-    atomic rewrite snapshot) and expire snapshots beyond ``keep_last``.
-    Every append accretes files and one log entry, so without this the store
-    read fans out over per-epoch files and the startup replay scan walks an
+    """Housekeeping between batches: compact each table's small files into
+    one file (one atomic rewrite snapshot) and expire snapshots beyond
+    ``keep_last``. Every append accretes files and one log entry; the store
+    read stays one relation regardless, but without this it opens one more
+    file set per accepted batch and the startup replay scan walks an
     unbounded log.
 
     ``keep_last`` must exceed the stream's replay horizon: expiry drops old

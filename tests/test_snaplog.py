@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from urllib.parse import urlparse
 
 import pytest
 
@@ -256,6 +257,116 @@ def test_compact_aborts_if_head_moves(spark, tmp_path):
         snaplog._Fs.create_exclusive = real_create
     # the loser's data is intact: late append present, no duplicates
     assert snaplog.read(spark, t).count() == 210
+
+
+def _file_relations(df) -> int:
+    """Parquet relations in df's optimized plan."""
+    return df._jdf.queryExecution().optimizedPlan().toString().count("Relation [")
+
+
+def _rel_paths(df, table) -> set[str]:
+    """df.inputFiles() as table-relative paths, the manifest's form."""
+    return {os.path.relpath(urlparse(u).path, table) for u in df.inputFiles()}
+
+
+def _flat(spark, n, tag):
+    """Unpartitioned rows, two files per append."""
+    return _events(spark, n, tag=tag).drop("day").repartition(2)
+
+
+def test_unpartitioned_read_is_one_relation(spark, tmp_path):
+    """An unpartitioned table reads as ONE parquet relation whatever its
+    commit count, over exactly the snapshot's files: time travel still pins
+    the older file set, and a frame missing a column reads back null-filled
+    through the explicit schema."""
+    t = str(tmp_path / "flat")
+    snaps = []
+    for k in range(1, 7):
+        df = _flat(spark, 50, f"u{k}")
+        if k == 6:
+            df = df.drop("value")
+        snaps.append(snaplog.append(spark, t, df))
+        if k in (1, 3, 6):
+            back = snaplog.read(spark, t)
+            assert _file_relations(back) == 1, k
+            assert _rel_paths(back, t) == {f["path"] for f in snaps[-1]["files"]}
+            assert back.count() == 50 * k
+
+    head = snaplog.read(spark, t)
+    assert head.columns == ["event_id", "value", "payload"]
+    missing = head.filter(F.col("payload").startswith("u6"))
+    assert missing.count() == 50
+    assert missing.filter(F.col("value").isNotNull()).count() == 0
+    assert head.filter(F.col("value").isNull()).count() == 50
+
+    v2 = snaplog.read(spark, t, version=2)
+    assert _file_relations(v2) == 1
+    assert _rel_paths(v2, t) == {f["path"] for f in snaps[1]["files"]}
+    assert {r["payload"][:2] for r in v2.collect()} == {"u1", "u2"}
+
+
+def test_unpartitioned_read_runs_no_listing_job(spark, tmp_path):
+    """The manifest is the listing: a read naming more files than Spark's
+    parallel-discovery threshold (32) stats them without a Spark job, and
+    leaves the session's threshold as it found it."""
+    t = str(tmp_path / "wide")
+    snaplog.append(spark, t, spark.range(0, 400, 1, 40).toDF("id"))
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key)
+    sc = spark.sparkContext
+    group = f"snaplog-listing-{tmp_path.name}"
+    try:
+        sc.setJobGroup(group, group)
+        df = snaplog.read(spark, t)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(df.inputFiles()) == 40
+    assert jobs == 0
+    assert spark.conf.get(key) == before
+    assert df.count() == 400
+
+
+def test_compact_unpartitioned_table(spark, tmp_path):
+    """compact rewrites an unpartitioned table's files as one file, rows
+    unchanged, and the pre-compaction snapshot still reads its old files."""
+    t = str(tmp_path / "flat")
+    for k in range(4):
+        snaplog.append(spark, t, _flat(spark, 40, f"c{k}").coalesce(1))
+    before = sorted(tuple(r) for r in snaplog.read(spark, t).collect())
+    assert len(snaplog.current_snapshot(spark, t)["files"]) == 4
+
+    snap = snaplog.compact(spark, t)
+    assert snap["summary"]["compacted_files_in"] == 4
+    assert len(snap["files"]) == 1
+    after = snaplog.read(spark, t)
+    assert len(after.inputFiles()) == 1
+    assert sorted(tuple(r) for r in after.collect()) == before
+    old = snaplog.read(spark, t, version=4)
+    assert len(old.inputFiles()) == 4
+    assert sorted(tuple(r) for r in old.collect()) == before
+    assert snaplog.compact(spark, t) is None
+
+
+def test_head_pinned_read_loads_the_log_once(spark, tmp_path, monkeypatch):
+    """A read pinned to the head's snapshot_id is the head _head already
+    loaded: one snapshot JSON read, not a second load of v{N}.json."""
+    t = str(tmp_path / "tbl")
+    snaplog.append(spark, t, _events(spark, 10, tag="a"))
+    s2 = snaplog.append(spark, t, _events(spark, 5, tag="b"))
+    names = []
+    orig = snaplog._Fs.read_json
+
+    def counting(self, p):
+        names.append(p.getName())
+        return orig(self, p)
+
+    monkeypatch.setattr(snaplog._Fs, "read_json", counting)
+    df = snaplog.read(spark, t, snapshot_id=s2["snapshot_id"])
+    assert names == ["v2.json"]
+    monkeypatch.setattr(snaplog._Fs, "read_json", orig)
+    assert df.count() == 15
 
 
 def test_streaming_snaplog_sink_exactly_once(spark, tmp_path):

@@ -232,6 +232,58 @@ def test_all_duplicate_batch_skips_store_appends(spark, tmp_path):
     assert store_state() == before
 
 
+def test_store_reads_stay_one_relation_as_the_store_grows(spark, tmp_path, monkeypatch):
+    """Four direct process_batch epochs against a store seeded in two
+    commits: every store/sh and store/bands read is one parquet relation
+    while the pinned snapshot's commit count grows 2, 3, 4, 4. Epochs 2 and
+    3 are empty micro-batches, so they read the grown store and add no
+    status row; the statuses are still the batch operator's."""
+    docs = _docs(spark)
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    for half in (0, 3):
+        ingest_dedup.seed_store(spark, docs.filter(f"doc_id % 6 = {half}"), store)
+
+    reads: list[tuple[str, int, int]] = []
+    real_read = snaplog.read
+
+    def recording(s, table, *a, **kw):
+        df = real_read(s, table, *a, **kw)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        commit_dirs = {u.split("/data/")[1].split("/")[0] for u in df.inputFiles()}
+        reads.append((os.path.basename(table), plan.count("Relation ["), len(commit_dirs)))
+        return df
+
+    monkeypatch.setattr(ingest_dedup.snaplog, "read", recording)
+    batches = [
+        docs.filter("doc_id % 3 = 1"),
+        docs.filter("doc_id % 3 = 2"),
+        docs.limit(0),
+        docs.limit(0),
+    ]
+    for epoch, batch in enumerate(batches):
+        ingest_dedup.process_batch(
+            spark, batch.localCheckpoint(eager=True), epoch, store, out
+        )
+    monkeypatch.setattr(ingest_dedup.snaplog, "read", real_read)
+
+    for table in ("sh", "bands"):
+        mine = [(rel, dirs) for t, rel, dirs in reads if t == table]
+        assert mine == [(1, 2), (1, 3), (1, 4), (1, 4)], (table, mine)
+
+    got = {
+        tuple(r)
+        for r in snaplog.read(spark, f"{out}/status")
+        .select("doc_id", "batch_id", "status", "dup_of")
+        .collect()
+    }
+    spark.conf.set("spark.ofv.registered_sf", "")
+    want = {
+        (r["doc_id"], r["batch_id"], r["status"], r["dup_of"])
+        for r in tq.q_dedup_incremental_runner(spark, SF).collect()
+    }
+    assert got == want
+
+
 class _FakeQuery:
     """A started query that never finishes (``finished=False``) or that
     finished with ``error``."""
