@@ -427,66 +427,6 @@ PIPELINE_QUERIES: dict[str, QuerieFn] = {
 }
 
 
-# Driver-window rotation (round 4). The per-round CORRECTNESS file snapshots the
-# FIRST 50 entries of queries() in iteration order (r1=43, r2=50, r3=50 rows —
-# always a prefix window). Rounds 1-3 left 35 registry queries without a single
-# green driver row (chunk_passages' only row ever is its r1 FAIL; the other 34
-# were rotated out when round 3 inserted new entries mid-order). This list pins
-# those 35 to the FRONT of the registry so round 4's window finally covers them;
-# new round-4 queries go in _ROUND4_PRIORITY right behind (35 + them <= 50).
-# Queries with green r1-r3 rows keep their relative order at the tail — their
-# rows remain on record. Rationale + audit trail: COVERAGE.md.
-_NEVER_DRIVER_GREEN_R3: tuple[str, ...] = (
-    "chunk_passages",
-    "events_window_join",
-    "events_window_join_binned",
-    "events_value_percentiles",
-    "pii_redact",
-    "quality_repetition",
-    "dedup_ngram_spans",
-    "decontaminate_eval",
-    "quality_perplexity",
-    "bm25_search",
-    "events_scd2",
-    "events_distinct_daily",
-    "events_zorder_key",
-    "embed_kmeans_step",
-    "embed_kmeans_converged",
-    "semantic_dedup",
-    "tokenize_bpe",
-    "corpus_top_terms",
-    "corpus_top_terms_cms",
-    "pagerank_trade",
-    "events_cdc_merge",
-    "events_asof_value",
-    "events_histogram",
-    "events_winsorize",
-    "text_token_entropy",
-    "events_funnel",
-    "events_retention",
-    "events_anomaly_mad",
-    "events_sliding_rate",
-    "events_grok_parse",
-    "multimodal_frames",
-    "dedup_components",
-    "pack_sequences",
-    "snaplog_overwrite_daily",
-    "embed_ivf_ann_refined",
-)
-
-# New round-4 entries that have never had a driver row either — they ride in the
-# window right behind the backlog (35 + len(this) must stay <= 50).
-_ROUND4_PRIORITY: tuple[str, ...] = (
-    "embed_recall_clustered_refined",
-    "embed_recall_clustered_probe2",
-    "embed_recall_clustered_seeded",
-    "pipeline_observe_metrics",
-    "embed_lsh_recall_multiprobe",
-    "embed_lsh_recall_multiprobe_clustered",
-    "dedup_ensemble_components",
-)
-
-
 def _correctness_files() -> list[str]:
     """Committed CORRECTNESS_r*.json paths, sorted. Pinned to `git ls-files`
     so registry iteration order is reproducible from the committed tree alone
@@ -546,35 +486,22 @@ def _last_green_round() -> dict[str, int]:
     return last
 
 
-def _driver_green_names() -> set[str]:
-    """Query names with at least one strict-green committed driver row."""
-    return set(_last_green_round())
-
-
 def build_queries() -> dict[str, QuerieFn]:
     """Registry in DRIVER-WINDOW priority order — rotation v2 (r4 verdict #2):
-    least-recently-verified first. Sort key per query: (newest strict-green
-    driver round, 0 for never-green; static priority rank; registry insertion
-    order). The CORRECTNESS file is a 50-row prefix window, so never-green
-    and new queries lead, and the rest re-earn a driver row round-robin —
-    with 107 queries every one is re-verified by the driver roughly every
-    3 rounds instead of draining a one-time backlog. Fresh checkout (no
-    committed CORRECTNESS files) degenerates to static-priority-then-registry
-    order via the same key."""
+    least-recently-verified first. Sort key per query: newest strict-green
+    driver round (0 for never-green); the sort is stable, so ties keep
+    registry insertion order. The CORRECTNESS file is a 50-row prefix
+    window, so never-green and new queries lead, and the rest re-earn a
+    driver row round-robin — every query is re-verified by the driver
+    roughly every 3 rounds instead of draining a one-time backlog. A fresh
+    checkout (no committed CORRECTNESS files) keeps insertion order."""
     merged: dict[str, QuerieFn] = {}
     merged.update(PIPELINE_QUERIES)
     from .testdata_queries import TESTDATA_QUERIES
 
     merged.update(TESTDATA_QUERIES)
-    static = [n for n in _NEVER_DRIVER_GREEN_R3 + _ROUND4_PRIORITY if n in merged]
-    static_rank = {n: i for i, n in enumerate(static)}
-    reg_rank = {n: i for i, n in enumerate(merged)}
     last = _last_green_round()
-    ordered = sorted(
-        merged,
-        key=lambda n: (last.get(n, 0), static_rank.get(n, len(static)), reg_rank[n]),
-    )
-    return {n: merged[n] for n in ordered}
+    return {n: merged[n] for n in sorted(merged, key=lambda n: last.get(n, 0))}
 
 
 def build_oracle_sql() -> dict[str, str]:

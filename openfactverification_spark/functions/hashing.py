@@ -18,11 +18,13 @@ module-level *defaults* that every query builder accepts as arguments:
     s=0.6, ~0 at s<0.3), a sharp enough curve that candidate volume stays
     ~linear in corpus size instead of exploding with false-positive bands.
     K=8 (4x2) was the round-1 toy sketch; it survives only in docstrings.
-  * Hyperplane LSH: a seeded pool of 64 hyperplanes. Single-table queries slice
-    the first `n_planes` (buckets = 2^n_planes; size n_planes ≈
-    log2(N / target_bucket_rows) so bucket population stays bounded as N
-    grows); multi-table queries take L disjoint slices of p planes each and
-    union candidates (per-pair hit prob 1-(1-q^p)^L with q = 1 - angle/pi).
+  * Hyperplane LSH: a seeded pool of 128 hyperplanes. L tables take L
+    disjoint slices of p planes each (lsh_tables; buckets = 2^p per table,
+    size p ≈ log2(N / target_bucket_rows) so bucket population stays bounded
+    as N grows) and union candidates (per-pair hit prob 1-(1-q^p)^L with
+    q = 1 - angle/pi). The single-table default is 8 planes = 256 buckets
+    (test scale; at N=10^12 use p ~ log2(N / 10^5) ~ 23, or more tables for
+    recall).
   * IVF: `n_cells` seeded centroids (production: ~sqrt(N), k-means-refined)
     with `nprobe` cells searched per query.
 """
@@ -54,11 +56,6 @@ HYPERPLANE_POOL = [
     [round(float(v), 6) for v in _rng2.randn(EMBED_DIM)]
     for _ in range(HYPERPLANE_POOL_SIZE)
 ]
-
-# Single-table default: 8 planes = 256 buckets (test scale; at N=10^12 use
-# n_planes ~ log2(N / 10^5) ~ 23, or the multi-table path for recall).
-LSH_PLANES = 8
-HYPERPLANES = HYPERPLANE_POOL[:LSH_PLANES]
 
 # 48-bit simhash (12 md5 hex digits of the word hash). 24 bits was too narrow
 # for banded candidate generation: pigeonhole bands of 24/(k+1) ~ 3 bits have

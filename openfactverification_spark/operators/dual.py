@@ -1048,12 +1048,11 @@ def _dot(d: D, a: str, b: str, dim: int = 64) -> str:
 
     Spark side pairs elements with zip_with (direct array iteration) instead of
     indexing via element_at over a sequence() — element_at does a bounds check
-    and null handling per element. Measured note (A/B at sf0.1, 8M-pair verify
-    join): fully unrolling this column-column dot into 128 element_at terms is
-    ~2.5x SLOWER than the fold — the generated method exceeds the JIT's huge-
-    method threshold and runs in the JVM interpreter. Unrolling only wins when
-    one side is a literal (_dot_lit), where each dot is a compact standalone
-    projection column."""
+    and null handling per element. Every dot in this module is a fold, never
+    unrolled arithmetic: unrolled terms (column x column, or column x literal
+    plane/centroid) make generated methods that pass the JIT's huge-method
+    threshold or, inside join/sort stages, the 64KB codegen method limit —
+    interpreted execution either way."""
     if d.spark:
         prods = f"zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double))"
     else:
@@ -1061,24 +1060,6 @@ def _dot(d: D, a: str, b: str, dim: int = 64) -> str:
             d.seq(1, dim), "i", f"cast({a}[i] as double) * cast({b}[i] as double)"
         )
     return d.fold_sum(prods)
-
-
-def _dot_lit(d: D, col: str, vec: list[float]) -> str:
-    """Dot product of an embedding column against a LITERAL vector, unrolled
-    into an explicit left-associated sum of products.
-
-    Rationale: higher-order functions (zip_with/aggregate/list_transform) run
-    interpreted per element in both engines; for hyperplane/centroid dots the
-    vector side is a compile-time constant, so unrolling yields branch-free
-    whole-stage-codegen arithmetic — measured ~10x on the LSH/IVF assignment
-    stages. Left-association matches the sequential fold exactly, so the
-    double result is bit-identical to _dot in both engines."""
-    terms = [
-        f"cast({d.elem(col, i)} as double) * {v}"
-        for i, v in enumerate(vec)
-        if v != 0.0
-    ]
-    return "(" + " + ".join(terms) + ")"
 
 
 def _cand_stats(d: D, stats: bool) -> tuple[str, str]:
@@ -1131,57 +1112,54 @@ def q_embed_ann_recall(
     d: D,
     k: int = 3,
     n_queries: int = 30,
-    nprobe: int | None = None,
     method: str = "ivf",
-    n_planes: int | None = None,
+    nprobe: int | None = None,
+    n_cells: int | None = None,
+    rounds: int = 0,
+    planes_per_table: int = 8,
+    n_tables: int = 1,
+    radius: int = 0,
+    clustered: bool = False,
 ) -> str:
-    """MEASURED recall@k of an ANN family against the exact brute-force top-k —
-    the quality number ANN implementations otherwise assert in prose, as an
-    oracle-paired one-row result (aggregate recall, per-query worst case).
-    Both rankings break cosine ties on neighbor_id, so the metric is
-    deterministic and cross-engine-identical.
+    """MEASURED recall@k of one ANN configuration against the exact
+    brute-force top-k, with the candidate volume it paid, as one
+    oracle-paired row (recall_with_cost_sql): recall_at_k, n_hit, n_true,
+    worst_query_recall, n_candidates. Both rankings break cosine ties on
+    neighbor_id, so the metric is deterministic and cross-engine-identical.
+    Every registered recall query is a point of this one builder.
 
-    The fixture's RANDOM 64-dim vectors are IVF's hardest case (no cluster
-    structure, so cell boundaries cut arbitrary neighborhoods): recall@3 at
-    the default 16 cells / nprobe=2 measures 0.30, and the registered
-    nprobe=4 twin shows the knob recovering recall at proportional probe
-    cost — on clustered production embeddings the same knobs sit far higher
-    (the k-means-refined path; tests/test_kmeans.py pins the improvement).
+    ``method='ivf'`` searches q_embed_ivf_ann: n_cells cells (default the
+    16-cell seeded pool), nprobe probed per query, centroids refined by
+    ``rounds`` Lloyd's rounds (0 = the seeded pool). The fixture's RANDOM
+    64-dim vectors are IVF's hardest case (no cluster structure, so cell
+    boundaries cut arbitrary neighborhoods): recall@3 at 16 cells / nprobe=2
+    measures 0.30, and nprobe=4 recovers recall at proportional probe cost.
 
-    ``method='lsh'`` measures the hyperplane-bucket ANN instead (single-table
-    2^n_planes buckets). Measured on the fixture: 0.022 at the default 8
-    planes (256 buckets over 500 vectors ≈ 2 candidates/query) vs 0.167 at 4
-    planes — the planes knob IS the recall/candidate-volume dial, and a
-    single table tuned for near-empty buckets is a dup-candidate generator,
-    not a top-k ANN; recall-bearing search is the multi-table
-    (q_embed_dup_pairs_lsh) or IVF path. The ANN emits every vector as a
-    query; the LEFT JOIN from the n_queries-limited exact side restricts the
-    metric to the common set.
+    ``method='lsh'`` searches q_embed_lsh_ann at (planes_per_table x n_tables
+    x radius). The single-table single-probe point measures 0.022 at 8 planes
+    (256 buckets over 500 vectors ≈ 2 candidates/query) vs 0.167 at 4 planes
+    — the planes knob IS the recall/candidate-volume dial; radius 1 (the
+    Hamming-1 multi-probe of Lv et al., VLDB'07) and more tables climb the
+    same curve at measured candidate cost.
 
-    The two sub-queries are each referenced once, so Spark's CTE inlining
-    costs nothing extra here; DuckDB pins them MATERIALIZED only to spare its
-    binder the doubled tree."""
-    m = "" if d.spark else "MATERIALIZED "
+    ``clustered=True`` runs both sides on the clustered-geometry fixture
+    (clustered_embeddings_cte) — the regime real embeddings live in, where
+    k-means-refined IVF and multi-probe LSH reach recall >= 0.9."""
+    source = "cemb" if clustered else "embeddings"
     if method == "ivf":
-        ann = q_embed_ivf_ann(d, k=k, n_queries=n_queries, nprobe=nprobe)
+        ann = q_embed_ivf_ann(
+            d, k=k, n_queries=n_queries, n_cells=n_cells, nprobe=nprobe,
+            rounds=rounds, source=source, stats=True,
+        )
     else:
         assert method == "lsh", method
-        ann = q_embed_lsh_ann(d, k=k, n_planes=n_planes)
-    bf = q_embed_cosine_topk(d, k=k, n_queries=n_queries)
-    return f"""
-WITH ann AS {m}({ann}),
-bf AS {m}({bf}),
-hits AS (
-  SELECT bf.query_id, count(ann.neighbor_id) AS n_hit, count(*) AS n_true
-  FROM bf LEFT JOIN ann
-    ON ann.query_id = bf.query_id AND ann.neighbor_id = bf.neighbor_id
-  GROUP BY bf.query_id
-)
-SELECT round(cast(sum(n_hit) as double) / sum(n_true), 6) AS recall_at_k,
-       {d.big('sum(n_hit)')} AS n_hit,
-       {d.big('sum(n_true)')} AS n_true,
-       round(min(cast(n_hit as double) / n_true), 6) AS worst_query_recall
-FROM hits"""
+        ann = q_embed_lsh_ann(
+            d, k=k, planes_per_table=planes_per_table, n_tables=n_tables,
+            radius=radius, n_queries=n_queries, stats=True, source=source,
+        )
+    bf = q_embed_cosine_topk(d, k=k, n_queries=n_queries, source=source)
+    lead = clustered_embeddings_cte(d) + ",\n" if clustered else ""
+    return recall_with_cost_sql(d, ann, bf, lead_ctes=lead)
 
 
 def q_embed_dup_pairs(d: D, threshold: float = 0.40) -> str:
@@ -1201,6 +1179,10 @@ def q_embed_dup_pairs_lsh(
     threshold: float = 0.40,
     planes_per_table: int = 3,
     n_tables: int = 8,
+    bump: float | None = None,
+    output: str = "pairs",
+    nv_sql: str | None = None,
+    buckets_over_sql: str | None = None,
 ) -> str:
     """Embedding near-dup pairs, scale path: multi-table hyperplane-LSH
     candidate generation + exact-cosine verify (mirrors the
@@ -1208,144 +1190,72 @@ def q_embed_dup_pairs_lsh(
     exact all-pairs baseline this is measured against).
 
     Candidates = pairs sharing a bucket in ANY of L tables of p planes each
-    (disjoint slices of the seeded pool); the per-table equi-join keys the
-    shuffle on (table_idx, bucket), never all-pairs. Every candidate is
-    verified with exact cosine, so precision is 1.0 by construction; recall at
-    cosine c is 1-(1-q^p)^L with q = 1 - acos(c)/pi — probabilistic, which is
-    the honest production algorithm: unlike simhash's pigeonhole banding there
-    is NO deterministic candidate guarantee for angular distance at moderate
-    thresholds (at cosine 0.4, q ≈ 0.63, so a guarantee would need bands so
-    wide the join degenerates to all-pairs). Defaults (p=3, L=8) give ~0.90
-    expected recall at c=0.40 on random vectors — the hardest case; real
-    near-dup corpora sit at c >= 0.9 (q ≈ 0.86) where p=12-16, L=8-16 yields
-    recall >= 0.95 with 4096+ buckets/table. Measured recall vs the baseline is
-    asserted in tests/test_dedup_similarity.py and reported in BENCH.md."""
-    tables = H.lsh_tables(n_tables, planes_per_table)
-    cos = f"{_dot(d, 'a.embedding', 'b.embedding')} / (a.nrm * b.nrm)"
-    # Bucket ids are staged as PLAIN PROJECTION COLUMNS (bvals) before the
-    # unpivot: Spark's whole-stage codegen can split a wide projection into
-    # many methods, but a Generate (explode) holding the unrolled hyperplane
-    # dots inline blows the 64KB method limit and silently falls back to
-    # interpreted eval (~6x slower, measured). The explode then only
-    # references the computed columns.
-    bval_cols = ",\n         ".join(
-        f"{lsh_bucket_expr(d, planes=pl)} AS b{t}" for t, pl in enumerate(tables)
-    )
-    if d.spark:
-        structs = ", ".join(
-            f"named_struct('tbl', {t}, 'bucket', b{t})" for t in range(len(tables))
-        )
-        buckets_sql = (
-            "SELECT vec_id, bb.tbl AS tbl, bb.bucket AS bucket\n"
-            f"  FROM bvals LATERAL VIEW explode(array({structs})) t AS bb"
-        )
-    else:
-        buckets_sql = "\n  UNION ALL\n  ".join(
-            f"SELECT vec_id, {t} AS tbl, b{t} AS bucket FROM bvals"
-            for t in range(len(tables))
-        )
-    return f"""
-WITH {cosine_cte(d)},
-bvals AS (
-  SELECT vec_id, {bval_cols}
-  FROM nv
-),
-buckets AS (
-  {buckets_sql}
-),
-cand AS (
-  SELECT DISTINCT qa.vec_id AS id_a, qb.vec_id AS id_b
-  FROM buckets qa JOIN buckets qb
-    ON qa.tbl = qb.tbl AND qa.bucket = qb.bucket AND qa.vec_id < qb.vec_id
-)
-SELECT {d.big('a.vec_id')} AS id_a, {d.big('b.vec_id')} AS id_b,
-       round({cos}, 6) AS cosine
-FROM cand
-JOIN nv a ON a.vec_id = cand.id_a
-JOIN nv b ON b.vec_id = cand.id_b
-WHERE {cos} >= {threshold}"""
+    (disjoint slices of the seeded pool, lsh_buckets_sql); the per-table
+    equi-join keys the shuffle on (table_idx, bucket), never all-pairs. Every
+    candidate is verified with exact cosine, so precision is 1.0 by
+    construction; recall at cosine c is 1-(1-q^p)^L with q = 1 - acos(c)/pi —
+    probabilistic, which is the honest production algorithm: unlike
+    simhash's pigeonhole banding there is NO deterministic candidate
+    guarantee for angular distance at moderate thresholds. The defaults (p=3,
+    L=8, threshold 0.40, ~0.90 expected recall on random vectors) are the
+    documented worst-case anchor.
 
-
-def q_embed_neardup_planted_lsh(
-    d: D,
-    threshold: float = 0.98,
-    planes_per_table: int = 8,
-    n_tables: int = 4,
-    bump: float = 1.05,
-    output: str = "pairs",
-    nv_sql: str | None = None,
-    buckets_over_sql: str | None = None,
-) -> str:
-    """Multi-table LSH near-dup detection in the REGIME IT IS BUILT FOR:
-    cosine >= 0.98 true near-duplicates. The fixture embeddings are random
-    (hardest case — q_embed_dup_pairs_lsh at threshold 0.40 documents that
-    there LSH candidates approach all-pairs), so this query PLANTS a
-    deterministic near-exact twin for every vector (one coordinate scaled by
-    `bump` → cosine ≈ 0.999) and runs the same bucketed machinery with
-    production parameters: p=8 planes/table (256 buckets) x L=4 tables.
-
-    Per-pair table-collision probability at cosine c is (1 - θ/π)^p with
-    θ = acos(c): ≈ 0.97^8·... ≈ 1 for the planted twins, ≈ (0.5)^8 = 0.004
-    for random pairs — candidate volume stays ~N·(N/256)·L/2 pre-verify and
-    the verified output is exactly the planted pair set. THIS is the scale
-    behavior (candidates ~linear at fixed bucket population) the
-    threshold-0.40 variant cannot show on random data; both stay registered.
-
-    ``output="stats"`` emits ONE row measuring the regime instead of the pair
-    list: candidate volume, verified pairs, planted pairs found, and the
-    all-pairs count the candidates must stay far below — the oracle-checked
-    evidence that candidates << all-pairs at production parameters (r2
-    verdict: make the honest regime the headline, keep 0.40 as the
-    worst-case anchor). The p=12 x L=8 / threshold 0.90 parameterization
-    registered as embed_dup_pairs_lsh_hi is that headline.
+    ``bump`` switches to the REGIME LSH IS BUILT FOR: the vectors plus a
+    planted near-exact twin of each (planted_nv_sql: coordinate 0 scaled by
+    ``bump``, cosine ≈ 0.999), and an ``is_planted`` column. Per-pair
+    table-collision probability at cosine c is (1 - θ/π)^p: ≈ 1 for the
+    planted twins, ≈ 0.5^p for random pairs, so at p=8-12 candidate volume
+    stays ~linear in N and the verified output is exactly the planted pair
+    set. ``output="stats"`` (planted only) emits ONE row instead: candidate
+    volume, verified pairs, planted pairs found, and the all-pairs count the
+    candidates must stay far below.
 
     ``nv_sql`` / ``buckets_over_sql`` let the Spark runner substitute
     MATERIALIZED normed-vector and bucket tables: nv is consumed by three
-    CTEs and buckets self-joins (two sides), and Spark inlines CTEs, so the
-    inline form computes the p x L plane-dot buckets twice and the norms
-    three times — at p=12 x L=8 the bucket bits ARE the cost. The DuckDB
-    oracle keeps the self-contained template."""
-    tables = H.lsh_tables(n_tables, planes_per_table)
-    cos = f"{_dot(d, 'a.embedding', 'b.embedding')} / (a.nrm * b.nrm)"
-    if nv_sql is None:
-        nv_sql = planted_nv_sql(d, bump)
-    ctes = [f"nv AS ({nv_sql})"]
-    if buckets_over_sql is not None:
-        ctes.append(f"buckets AS ({buckets_over_sql})")
-    elif d.spark:
-        # loop-form buckets: 8 planes/table unrolled would be 512 terms per
-        # column — past the 64KB codegen limit once inlined into the
-        # explode/sort stages (see lsh_bucket_loop_expr).
-        bval_cols = ",\n         ".join(
-            f"{lsh_bucket_loop_expr(d, pl)} AS b{t}" for t, pl in enumerate(tables)
-        )
-        structs = ", ".join(
-            f"named_struct('tbl', {t}, 'bucket', b{t})" for t in range(len(tables))
-        )
-        buckets_sql = (
-            "SELECT vec_id, bb.tbl AS tbl, bb.bucket AS bucket\n"
-            f"  FROM bvals LATERAL VIEW explode(array({structs})) t AS bb"
-        )
-        ctes.append(f"bvals AS (\n  SELECT vec_id, {bval_cols}\n  FROM nv\n)")
-        ctes.append(f"buckets AS (\n  {buckets_sql}\n)")
+    CTEs and buckets self-joins, and Spark inlines CTEs, so the inline form
+    computes the p x L plane-dot buckets twice and the norms three times —
+    at p=12 x L=8 the bucket bits ARE the cost. The DuckDB oracle keeps the
+    self-contained template."""
+    planted = bump is not None
+    if nv_sql is not None:
+        nv = f"nv AS ({nv_sql})"
+    elif planted:
+        nv = f"nv AS ({planted_nv_sql(d, bump)})"
     else:
-        # DuckDB: relational plane-matrix form — see planted_buckets_sql.
-        ctes.append(
-            f"buckets AS ({planted_buckets_sql(d, planes_per_table, n_tables, 'nv')})"
-        )
-    body = ",\n".join(ctes)
+        nv = cosine_cte(d)
+    if buckets_over_sql is None:
+        buckets_over_sql = lsh_buckets_sql(d, planes_per_table, n_tables, "nv")
+    cos = f"{_dot(d, 'a.embedding', 'b.embedding')} / (a.nrm * b.nrm)"
+    joins = """FROM cand
+JOIN nv a ON a.vec_id = cand.id_a
+JOIN nv b ON b.vec_id = cand.id_b"""
+    is_planted = "(cand.id_b = cand.id_a + 1000000)"
+    if output == "pairs":
+        flag = f",\n       {is_planted} AS is_planted" if planted else ""
+        tail = f"""SELECT {d.big('a.vec_id')} AS id_a, {d.big('b.vec_id')} AS id_b,
+       round({cos}, 6) AS cosine{flag}
+{joins}
+WHERE {cos} >= {threshold}"""
+    else:
+        assert output == "stats" and planted, (output, bump)
+        tail = f"""SELECT {d.big('count(*)')} AS n_candidates,
+       {d.big(f'sum(CASE WHEN {cos} >= {threshold} THEN 1 ELSE 0 END)')} AS n_verified,
+       {d.big(f'sum(CASE WHEN {is_planted} THEN 1 ELSE 0 END)')} AS n_planted_found,
+       {d.div(f"(SELECT {d.big('count(*) * (count(*) - 1)')} FROM nv)", 2)} AS n_all_pairs
+{joins}"""
     return f"""
-WITH {body},
+WITH {nv},
+buckets AS ({buckets_over_sql}),
 cand AS (
   SELECT DISTINCT qa.vec_id AS id_a, qb.vec_id AS id_b
   FROM buckets qa JOIN buckets qb
     ON qa.tbl = qb.tbl AND qa.bucket = qb.bucket AND qa.vec_id < qb.vec_id
 )
-{_planted_final_select(d, cos, threshold, output)}"""
+{tail}"""
 
 
-def planted_nv_sql(d: D, bump: float = 1.05) -> str:
-    """The planted-twin normed-vector table of q_embed_neardup_planted_lsh:
+def planted_nv_sql(d: D, bump: float) -> str:
+    """The planted-twin normed-vector table of q_embed_dup_pairs_lsh(bump=...):
     originals + one near-exact twin each (coordinate 0 scaled by bump),
     with precomputed L2 norms."""
     pert = d.transform(
@@ -1364,36 +1274,62 @@ def planted_nv_sql(d: D, bump: float = 1.05) -> str:
   ) all0"""
 
 
-def planted_buckets_sql(
+def lsh_buckets_sql(
     d: D, planes_per_table: int, n_tables: int, nv_ref: str = "nv"
 ) -> str:
-    """(vec_id, tbl, bucket) for every vector x table, reading normed vectors
-    from ``nv_ref`` — the bucket stream the runner materializes once.
+    """(vec_id, tbl, bucket) for every vector x table, reading vectors from
+    ``nv_ref``: the random-hyperplane sign-bit bucket id (bit j set when the
+    dot with plane j of table tbl is > 0) over L disjoint p-plane slices of
+    the seeded pool (H.lsh_tables). The LSH family's one bucket renderer.
+    Bucket count must scale with N: size p ~ log2(N / target_bucket_rows),
+    else bucket population grows linearly with the corpus and the
+    within-bucket join is quadratic.
 
     The two dialects get structurally different (value-identical) plans:
 
-    - Spark: p x L loop-form bucket expressions per vector, one explode —
-      codegen'd lambda folds are fast on the JVM and the runner persists the
-      result, so the expressions run exactly once per vector.
+    - Spark: per table, one loop-form expression — higher-order folds over
+      the constant-folded (planes x dim) literal matrix — as a plain
+      projection column, then one explode. The loop form keeps every
+      generated method under the 64KB codegen limit at any p x L; unrolled
+      literal-plane arithmetic (p x dim terms per column) does not, once
+      inlined into the explode/join/sort stages.
     - DuckDB: a RELATIONAL form — the plane matrix as a (tbl, j, w) VALUES
       table cross-joined to vectors, ONE list-dot per (vector, table, plane)
       row, then an integer bit-sum GROUP BY. DuckDB's binder/interpreter
       chokes on the p x L nested-lambda scalar expressions (67KB of SQL at
       p=12 x L=8; measured ~300s at sf0.01 vs ~2s relational). Buckets stay
-      bit-identical: the per-plane dot is the same list_sum(list_transform)
-      left-to-right path with the same round(·,6) literals, and the bit
-      assembly is an order-free integer sum."""
+      bit-identical: the per-plane dot is the same sequential left fold over
+      the same round(·,6) literals, and the bit assembly is an order-free
+      integer sum."""
     tables = H.lsh_tables(n_tables, planes_per_table)
     if d.spark:
-        bval_cols = ",\n         ".join(
-            f"{lsh_bucket_loop_expr(d, pl)} AS b{t}" for t, pl in enumerate(tables)
-        )
+        # positions come from size(embedding): besides reading naturally, the
+        # second reference stops Catalyst's CollapseProject from inlining a
+        # DERIVED embedding (the clustered fixture's blend) into the per-plane
+        # lambda, where it would be recomputed p x dim times per vector
+        cols = []
+        for t, planes in enumerate(tables):
+            pm = d.arr([d.arr(pl) for pl in planes])
+            dot = d.fold_sum(
+                d.transform(
+                    d.seq(0, "size(embedding) - 1"),
+                    "k",
+                    f"cast({d.elem('embedding', 'k')} as double)"
+                    f" * {d.elem(d.elem(pm, 'j'), 'k')}",
+                )
+            )
+            bits = d.transform(
+                d.seq(0, planes_per_table - 1),
+                "j",
+                f"CASE WHEN ({dot}) > 0 THEN shiftleft(1, cast(j as int)) ELSE 0 END",
+            )
+            cols.append(f"aggregate({bits}, 0, (acc, x) -> acc + cast(x as int)) AS b{t}")
         structs = ", ".join(
-            f"named_struct('tbl', {t}, 'bucket', b{t})" for t in range(len(tables))
+            f"named_struct('tbl', {t}, 'bucket', b{t})" for t in range(n_tables)
         )
         return (
             f"SELECT vec_id, bb.tbl AS tbl, bb.bucket AS bucket FROM "
-            f"(SELECT vec_id, {bval_cols} FROM {nv_ref}) bv "
+            f"(SELECT vec_id, {', '.join(cols)} FROM {nv_ref}) bv "
             f"LATERAL VIEW explode(array({structs})) t AS bb"
         )
     rows = ",\n    ".join(
@@ -1421,180 +1357,6 @@ def planted_buckets_sql(
   GROUP BY vec_id, tbl"""
 
 
-def _planted_final_select(d: D, cos: str, threshold: float, output: str) -> str:
-    if output == "pairs":
-        return f"""SELECT {d.big('a.vec_id')} AS id_a, {d.big('b.vec_id')} AS id_b,
-       round({cos}, 6) AS cosine,
-       (cand.id_b = cand.id_a + 1000000) AS is_planted
-FROM cand
-JOIN nv a ON a.vec_id = cand.id_a
-JOIN nv b ON b.vec_id = cand.id_b
-WHERE {cos} >= {threshold}"""
-    assert output == "stats"
-    return f"""SELECT {d.big('count(*)')} AS n_candidates,
-       {d.big(f'sum(CASE WHEN {cos} >= {threshold} THEN 1 ELSE 0 END)')} AS n_verified,
-       {d.big('sum(CASE WHEN cand.id_b = cand.id_a + 1000000 THEN 1 ELSE 0 END)')} AS n_planted_found,
-       {d.div(f"(SELECT {d.big('count(*) * (count(*) - 1)')} FROM nv)", 2)} AS n_all_pairs
-FROM cand
-JOIN nv a ON a.vec_id = cand.id_a
-JOIN nv b ON b.vec_id = cand.id_b"""
-
-
-def lsh_bucket_expr(d: D, emb: str = "embedding", planes: list | None = None) -> str:
-    """Random-hyperplane LSH bucket id: sign bit per plane -> int.
-
-    `planes` defaults to the single-table prefix of the seeded pool
-    (2^LSH_PLANES buckets). Bucket count must scale with N: size n_planes ~
-    log2(N / target_bucket_rows), else fixed buckets grow linearly with the
-    corpus and the within-bucket join is quadratic."""
-    planes = H.HYPERPLANES if planes is None else planes
-    bits = []
-    for p, plane in enumerate(planes):
-        dot = _dot_lit(d, emb, plane)
-        bits.append(f"(CASE WHEN {dot} > 0 THEN {1 << p} ELSE 0 END)")
-    return "(" + " + ".join(bits) + ")"
-
-
-def lsh_bucket_loop_expr(d: D, planes: list, emb: str = "embedding") -> str:
-    """Same sign-bit bucket id as lsh_bucket_expr, loop form: higher-order
-    folds over a constant-folded (planes x dim) literal matrix. Use this
-    instead of the unrolled form whenever planes-per-table is large or the
-    bucket feeds multi-consumer CTEs — the unrolled arithmetic (p x dim terms
-    per column) blows the 64KB codegen method limit inside join/sort stages
-    (measured: 8-plane x 4-table unrolled = interpreted fallback, 67s; loop
-    form compiles clean). Same (dot > 0) convention, identical buckets."""
-    pm = d.arr([d.arr(pl) for pl in planes])
-    dot = d.fold_sum(
-        d.transform(
-            d.seq(0, H.EMBED_DIM - 1),
-            "k",
-            f"cast({d.elem(emb, 'k')} as double) * {d.elem(d.elem(pm, 'j'), 'k')}",
-        )
-    )
-    shl = "shiftleft(1, cast(j as int))" if d.spark else "(1 << j)"
-    bits = d.transform(
-        d.seq(0, len(planes) - 1), "j", f"CASE WHEN ({dot}) > 0 THEN {shl} ELSE 0 END"
-    )
-    if d.spark:
-        return f"aggregate({bits}, 0, (acc, x) -> acc + cast(x as int))"
-    return f"cast(list_sum({bits}) as int)"
-
-
-def q_embed_lsh_ann(d: D, k: int = 3, n_planes: int | None = None) -> str:
-    """ANN via hyperplane-LSH buckets: candidates share a bucket, then exact
-    cosine + top-k within bucket. The bucket join is the scale path: shuffle keys
-    on bucket id, never all-pairs. `n_planes` sizes the table (2^n_planes
-    buckets) — a parameter because it must track corpus size (see
-    lsh_bucket_expr); recall at a given cosine is the multi-table story
-    (q_embed_dup_pairs_lsh)."""
-    planes = H.HYPERPLANE_POOL[: (H.LSH_PLANES if n_planes is None else n_planes)]
-    cos = f"{_dot(d, 'q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
-    return f"""
-WITH {cosine_cte(d)},
-bucketed AS (
-  SELECT vec_id, embedding, nrm, {lsh_bucket_expr(d, planes=planes)} AS bucket
-  FROM nv
-),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.bucket,
-         round({cos}, 6) AS cosine
-  FROM bucketed q JOIN bucketed c
-    ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, bucket, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT {d.big('query_id')} AS query_id, {d.big('neighbor_id')} AS neighbor_id,
-       cast(bucket as int) AS bucket, cosine, cast(rnk as int) AS rnk
-FROM ranked WHERE rnk <= {k}"""
-
-
-def q_embed_lsh_ann_multiprobe(
-    d: D,
-    k: int = 3,
-    n_planes: int = 8,
-    n_queries: int = 30,
-    stats: bool = False,
-    source: str = "embeddings",
-) -> str:
-    """Multi-probe hyperplane-LSH ANN: each query searches its own bucket PLUS
-    every bucket at Hamming distance 1 (the n_planes single-bit flips) — the
-    classic multi-probe trade (Lv et al., VLDB'07): near-neighbors that fall
-    just across one hyperplane are recovered without building more tables.
-    Probe count is n_planes+1 of 2^n_planes buckets, so candidate volume
-    stays a small corpus fraction while recall climbs from the single-bucket
-    floor (q_embed_lsh_ann's measured 0.022 at 8 planes). The probe fan-out
-    is an explode over the planes sequence — candidate generation stays a
-    bucket equi-join, never all-pairs. ``stats=True`` adds the per-query
-    candidate count (n_cand_q) for recall_with_cost_sql."""
-    planes = H.HYPERPLANE_POOL[:n_planes]
-    cos = f"{_dot(d, 'q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
-    if d.spark:
-        flips = (
-            f"SELECT vec_id, {d.xor('bucket', 'shiftleft(1, j)')} AS probe\n"
-            f"  FROM qb LATERAL VIEW explode({d.seq(0, n_planes - 1)}) t AS j"
-        )
-    else:
-        flips = (
-            f"SELECT vec_id, {d.xor('bucket', '(1 << j.j)')} AS probe\n"
-            f"  FROM qb, (SELECT unnest(range(0, {n_planes})) AS j) j"
-        )
-    cand_col, cand_out = _cand_stats(d, stats)
-    return f"""
-WITH {cosine_cte(d, source)},
-bucketed AS (
-  SELECT vec_id, embedding, nrm, {lsh_bucket_expr(d, planes=planes)} AS bucket
-  FROM nv
-),
-qb AS (
-  SELECT vec_id, bucket FROM bucketed WHERE vec_id < {n_queries}
-),
-probes AS (
-  SELECT vec_id, bucket AS probe FROM qb
-  UNION ALL
-  {flips}
-),
-scored AS (
-  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({cos}, 6) AS cosine
-  FROM probes p
-  JOIN bucketed c ON c.bucket = p.probe AND c.vec_id <> p.vec_id
-  JOIN nv q ON q.vec_id = p.vec_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk{cand_col}
-  FROM scored
-)
-SELECT {d.big('query_id')} AS query_id, {d.big('neighbor_id')} AS neighbor_id,
-       cosine, cast(rnk as int) AS rnk{cand_out}
-FROM ranked WHERE rnk <= {k}"""
-
-
-def q_embed_lsh_recall_multiprobe(
-    d: D,
-    k: int = 3,
-    n_queries: int = 30,
-    n_planes: int = 8,
-    clustered: bool = False,
-) -> str:
-    """Measured recall@k of multi-probe LSH vs the exact top-k, with the paid
-    candidate volume in the same row — the single-table-LSH half of r3
-    verdict #4 (the IVF half is q_embed_ann_recall_clustered). Compare the
-    registered single-bucket floors: 0.022 at 8 planes, 0.167 at 4.
-    ``clustered=True`` runs both sides on the clustered-geometry fixture
-    (clustered_embeddings_cte) — the regime real embeddings live in."""
-    source = "cemb" if clustered else "embeddings"
-    ann = q_embed_lsh_ann_multiprobe(
-        d, k=k, n_planes=n_planes, n_queries=n_queries, stats=True, source=source
-    )
-    bf = q_embed_cosine_topk(d, k=k, n_queries=n_queries, source=source)
-    lead = clustered_embeddings_cte(d) + ",\n" if clustered else ""
-    return recall_with_cost_sql(d, ann, bf, lead_ctes=lead)
-
-
 def _probe_deltas(n_planes: int, radius: int) -> list[int]:
     """All bucket-xor masks with popcount <= radius — the multi-probe set.
     Rendered as INTEGER LITERALS in both dialects, so probe enumeration is
@@ -1608,43 +1370,45 @@ def _probe_deltas(n_planes: int, radius: int) -> list[int]:
     return deltas
 
 
-def q_embed_lsh_ann_mt_multiprobe(
+def q_embed_lsh_ann(
     d: D,
     k: int = 3,
     planes_per_table: int = 8,
-    n_tables: int = 4,
-    radius: int = 1,
-    n_queries: int = 30,
+    n_tables: int = 1,
+    radius: int = 0,
+    n_queries: int | None = None,
     stats: bool = False,
     source: str = "embeddings",
 ) -> str:
-    """The FULL LSH search dial — (planes x tables x probes) in one template
-    (r4 verdict #6): every query probes, in each of the L independent plane
+    """ANN via hyperplane-LSH buckets — the whole (planes x tables x probes)
+    search dial in one template: every query (the first ``n_queries``
+    vectors, or all of them) probes, in each of the L independent plane
     tables, its own bucket plus every bucket within Hamming distance
     ``radius`` (Lv et al., VLDB'07 multi-probe, composed with the classic
-    multi-table OR-amplification). Per-neighbor miss probability at angle
-    theta is (1 - P(Hamming<=radius))^L with per-plane agreement q = 1 -
-    theta/pi, so recall climbs in L and radius while candidate volume grows
-    ~L * probes * N / 2^p — the whole tradeoff surface this builder sweeps.
+    multi-table OR-amplification), then ranks the candidates by exact cosine.
+    Per-neighbor miss probability at angle theta is (1 - P(Hamming<=radius))^L
+    with per-plane agreement q = 1 - theta/pi, so recall climbs in L and
+    radius while candidate volume grows ~L * probes * N / 2^p. The defaults
+    are the single-table single-probe point (2^8 buckets); the candidate
+    join is a bucket equi-join at every point, never all-pairs.
 
     Candidates are DEDUPLICATED across tables and probes before scoring
-    (SELECT DISTINCT), so n_cand_q counts vectors actually cosine-scored —
-    the honest paid cost a sweep must report. Buckets come from
-    planted_buckets_sql: loop-form codegen-safe expressions on Spark, the
-    relational (tbl, j, w) VALUES form on DuckDB, bit-identical."""
-    deltas = _probe_deltas(planes_per_table, radius)
-    delta_list = ", ".join(str(x) for x in deltas)
+    (SELECT DISTINCT), so n_cand_q (``stats=True``, for recall_with_cost_sql)
+    counts vectors actually cosine-scored — the honest paid cost. ``bucket``
+    is the query's own table-0 bucket."""
+    deltas = ", ".join(str(x) for x in _probe_deltas(planes_per_table, radius))
     if d.spark:
-        delta_join = f"LATERAL VIEW explode(array({delta_list})) t AS delta"
+        delta_join = f"LATERAL VIEW explode(array({deltas})) t AS delta"
     else:
-        delta_join = f"CROSS JOIN (SELECT unnest([{delta_list}]) AS delta) t"
+        delta_join = f"CROSS JOIN (SELECT unnest([{deltas}]) AS delta) t"
+    q_filter = "" if n_queries is None else f" WHERE vec_id < {n_queries}"
     cos = f"{_dot(d, 'q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
     cand_col, cand_out = _cand_stats(d, stats)
     return f"""
 WITH {cosine_cte(d, source)},
-bk AS ({planted_buckets_sql(d, planes_per_table, n_tables, "nv")}),
+bk AS ({lsh_buckets_sql(d, planes_per_table, n_tables, "nv")}),
 qb AS (
-  SELECT vec_id, tbl, bucket FROM bk WHERE vec_id < {n_queries}
+  SELECT vec_id, tbl, bucket FROM bk{q_filter}
 ),
 probes AS (
   SELECT vec_id, tbl, {d.xor('bucket', 'delta')} AS probe
@@ -1668,56 +1432,95 @@ ranked AS (
   FROM scored
 )
 SELECT {d.big('query_id')} AS query_id, {d.big('neighbor_id')} AS neighbor_id,
-       cosine, cast(rnk as int) AS rnk{cand_out}
+       cast(qb.bucket as int) AS bucket, cosine, cast(rnk as int) AS rnk{cand_out}
+FROM ranked JOIN qb ON qb.vec_id = ranked.query_id AND qb.tbl = 0
+WHERE rnk <= {k}"""
+
+
+def q_embed_ivf_ann(
+    d: D,
+    k: int = 3,
+    n_queries: int = 30,
+    n_cells: int | None = None,
+    nprobe: int | None = None,
+    centroids: list | None = None,
+    rounds: int = 0,
+    source: str = "embeddings",
+    stats: bool = False,
+) -> str:
+    """IVF ANN: every vector is assigned to its nearest centroid (primary
+    cell); each query searches its `nprobe` nearest cells with exact cosine
+    top-k inside them. The cell assignment keys the shuffle, so at scale the
+    search joins only within probed cells — the IVF counterpart of the
+    hyperplane-LSH bucket path (q_embed_lsh_ann).
+
+    `n_cells` and `nprobe` are parameters because they ARE the scale knobs:
+    production sizes cells ~ sqrt(N) (bounded cell population as N grows) and
+    nprobe > 1 recovers the recall lost at cell boundaries.
+
+    The centroid matrix is the literal ``c0`` — ``centroids`` (e.g. collected
+    k-means-refined centroids, operators/kmeans.py) or the seeded pool's
+    first n_cells — refined by ``rounds`` fixed Lloyd's rounds in-SQL
+    (_kmeans_chain) when rounds > 0; the search runs against ``c{rounds}``.
+    One template, both engines, so with rounds > 0 the DuckDB oracle
+    re-derives the refinement AND the search. Assignment is the N x C dots
+    against the one-row matrix (the broadcast-join shape against a tiny
+    centroid table) as a loop-form lambda, then posexplode + rank per vector
+    for the nprobe nearest cells. ``stats=True`` adds the per-query candidate
+    count n_cand_q for recall_with_cost_sql."""
+    if centroids is None:
+        centroids = H.IVF_CENTROID_POOL[: H.IVF_CELLS if n_cells is None else n_cells]
+    n_cells = len(centroids)
+    nprobe = H.IVF_NPROBE if nprobe is None else nprobe
+    ctes = _kmeans_chain(d, centroids, rounds, source=source)
+    if d.spark:
+        assign_inner = (
+            "SELECT vec_id, embedding, nrm, cell AS cell_id, cdot\n"
+            "    FROM dvals LATERAL VIEW posexplode(darr) t AS cell, cdot"
+        )
+    else:
+        assign_inner = (
+            "SELECT vec_id, embedding, nrm, cast(i.i as int) AS cell_id, "
+            "darr[i.i + 1] AS cdot\n"
+            f"    FROM dvals, (SELECT unnest(range(0, {n_cells})) AS i) i"
+        )
+    cos = f"{_dot(d, 'q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
+    ctes.append(cosine_cte(d, source))
+    ctes.append(
+        f"dvals AS ({_cells_sql(d, n_cells, 'nv', 'vec_id, embedding, nrm', f'c{rounds}')})"
+    )
+    body = ",\n".join(ctes)
+    cand_col, cand_out = _cand_stats(d, stats)
+    return f"""
+WITH {body},
+assign AS (
+  SELECT vec_id, embedding, nrm, cell_id,
+         row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell_id) AS crank
+  FROM (
+    {assign_inner}
+  ) t
+),
+data AS (
+  SELECT vec_id, embedding, nrm, cell_id FROM assign WHERE crank = 1
+),
+probes AS (
+  SELECT vec_id, cell_id FROM assign WHERE crank <= {nprobe} AND vec_id < {n_queries}
+),
+scored AS (
+  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id, c.cell_id AS cell,
+         round({cos}, 6) AS cosine
+  FROM probes p
+  JOIN nv q ON q.vec_id = p.vec_id
+  JOIN data c ON c.cell_id = p.cell_id AND c.vec_id <> p.vec_id
+),
+ranked AS (
+  SELECT query_id, neighbor_id, cell, cosine,
+         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk{cand_col}
+  FROM scored
+)
+SELECT {d.big('query_id')} AS query_id, {d.big('neighbor_id')} AS neighbor_id,
+       cast(cell as int) AS cell, cosine, cast(rnk as int) AS rnk{cand_out}
 FROM ranked WHERE rnk <= {k}"""
-
-
-def q_embed_lsh_recall_mt_multiprobe(
-    d: D,
-    k: int = 3,
-    n_queries: int = 30,
-    planes_per_table: int = 8,
-    n_tables: int = 4,
-    radius: int = 1,
-) -> str:
-    """Measured recall@k + paid candidate volume of the full
-    (planes x tables x probes) LSH dial on the adversarial RANDOM fixture —
-    the sweep rows that close (or honestly bound) the random-geometry gap
-    (r4 verdict #6). Single-table radius-1 floor for comparison:
-    embed_lsh_recall_multiprobe's 0.167 at 8 planes."""
-    ann = q_embed_lsh_ann_mt_multiprobe(
-        d,
-        k=k,
-        planes_per_table=planes_per_table,
-        n_tables=n_tables,
-        radius=radius,
-        n_queries=n_queries,
-        stats=True,
-    )
-    bf = q_embed_cosine_topk(d, k=k, n_queries=n_queries)
-    return recall_with_cost_sql(d, ann, bf)
-
-
-def q_embed_ann_recall_refined(
-    d: D,
-    k: int = 3,
-    n_queries: int = 30,
-    n_cells: int = 8,
-    rounds: int = 3,
-    nprobe: int = 2,
-) -> str:
-    """Recall@k of IVF over K-MEANS-REFINED centroids on the RANDOM fixture —
-    multi-probe composed with refined centroids where the geometry gives the
-    refinement nothing to find (the other half of r4 verdict #6; the
-    clustered twin q_embed_ann_recall_clustered measures the regime real
-    embeddings live in). Candidate volume is nprobe/n_cells of the corpus by
-    construction — sublinear and measured in-row."""
-    ann = q_embed_ivf_ann_refined(
-        d, k=k, n_queries=n_queries, n_cells=n_cells, rounds=rounds,
-        nprobe=nprobe, stats=True,
-    )
-    bf = q_embed_cosine_topk(d, k=k, n_queries=n_queries)
-    return recall_with_cost_sql(d, ann, bf)
 
 
 # ======================================================================================
@@ -1843,95 +1646,6 @@ SELECT coalesce(o_orderpriority, 'ALL') AS priority,
        round(sum(o_totalprice), 2) AS total_price
 FROM orders
 GROUP BY ROLLUP (o_orderpriority, o_orderstatus)"""
-
-
-def q_embed_ivf_ann(
-    d: D,
-    k: int = 3,
-    n_queries: int = 30,
-    n_cells: int | None = None,
-    nprobe: int | None = None,
-    centroids: list | None = None,
-    source: str = "embeddings",
-    stats: bool = False,
-) -> str:
-    """IVF ANN: every vector is assigned to its nearest centroid (primary
-    cell); each query searches its `nprobe` nearest cells with exact cosine
-    top-k inside them. The cell assignment keys the shuffle, so at scale the
-    search joins only within probed cells — the IVF counterpart of the
-    hyperplane-LSH bucket path (q_embed_lsh_ann).
-
-    `n_cells` and `nprobe` are parameters because they ARE the scale knobs:
-    production sizes cells ~ sqrt(N) (bounded cell population as N grows) and
-    nprobe > 1 recovers the recall lost at cell boundaries. Centroids here are
-    a seeded deterministic pool (production: k-means-refined); assignment is
-    the standard N x C dot-product cross join against the tiny broadcast
-    centroid table."""
-    n_cells = H.IVF_CELLS if n_cells is None else n_cells
-    nprobe = H.IVF_NPROBE if nprobe is None else nprobe
-    # `centroids` lets the caller feed k-means-refined centroids
-    # (operators/kmeans.py); the seeded pool is the deterministic default.
-    cents = (H.IVF_CENTROID_POOL[:n_cells] if centroids is None else centroids)
-    n_cells = len(cents)
-    # Assignment = N x C dot products against LITERAL centroids: unrolled
-    # (_dot_lit) into codegen'd arithmetic, no per-element lambda, no join
-    # (the centroid "table" folds into the projection; on a real catalog this
-    # is the broadcast join against the tiny centroid table). The dots are
-    # staged as plain projection columns (dvals) before the unpivot so Spark's
-    # codegen can split the wide projection — an explode holding them inline
-    # blows the 64KB method limit and falls back to interpreted eval.
-    dval_cols = ",\n         ".join(
-        f"{_dot_lit(d, 'embedding', c)} AS d{i}" for i, c in enumerate(cents)
-    )
-    if d.spark:
-        structs = ", ".join(
-            f"named_struct('cell_id', {i}, 'cdot', d{i})" for i in range(n_cells)
-        )
-        assign_inner = (
-            "SELECT vec_id, embedding, nrm, cc.cell_id AS cell_id, cc.cdot AS cdot\n"
-            f"    FROM dvals LATERAL VIEW explode(array({structs})) t AS cc"
-        )
-    else:
-        assign_inner = "\n    UNION ALL\n    ".join(
-            f"SELECT vec_id, embedding, nrm, {i} AS cell_id, d{i} AS cdot FROM dvals"
-            for i in range(n_cells)
-        )
-    cos = f"{_dot(d, 'q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
-    cand_col, cand_out = _cand_stats(d, stats)
-    return f"""
-WITH {cosine_cte(d, source)},
-dvals AS (
-  SELECT vec_id, embedding, nrm, {dval_cols}
-  FROM nv
-),
-assign AS (
-  SELECT vec_id, embedding, nrm, cell_id,
-         row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell_id) AS crank
-  FROM (
-    {assign_inner}
-  ) t
-),
-data AS (
-  SELECT vec_id, embedding, nrm, cell_id FROM assign WHERE crank = 1
-),
-probes AS (
-  SELECT vec_id, cell_id FROM assign WHERE crank <= {nprobe} AND vec_id < {n_queries}
-),
-scored AS (
-  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id, c.cell_id AS cell,
-         round({cos}, 6) AS cosine
-  FROM probes p
-  JOIN nv q ON q.vec_id = p.vec_id
-  JOIN data c ON c.cell_id = p.cell_id AND c.vec_id <> p.vec_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cell, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk{cand_col}
-  FROM scored
-)
-SELECT {d.big('query_id')} AS query_id, {d.big('neighbor_id')} AS neighbor_id,
-       cast(cell as int) AS cell, cosine, cast(rnk as int) AS rnk{cand_out}
-FROM ranked WHERE rnk <= {k}"""
 
 
 # ======================================================================================
@@ -2656,6 +2370,31 @@ SELECT {d.big('event_id')} AS event_id,
 FROM based"""
 
 
+def _cells_sql(d: D, n_cells: int, source: str, cols: str, matrix: str) -> str:
+    """``cols`` of ``source`` plus ``darr`` — the n_cells dots of ``embedding``
+    against the single-row centroid matrix CTE ``matrix`` — and ``cell_id``,
+    the nearest cell: the one assignment of the IVF search, the Lloyd's chain
+    and SemDeDup. A pure projection: the matrix enters as an uncorrelated
+    scalar subquery, so a literal matrix folds into the expression (no join)
+    and a derived one runs once; the dots are an index-based lambda with a
+    sequential left fold (identical element order, bit-identical sums in
+    both engines), and argmax takes the FIRST position of the max, so ties
+    break to the lowest cell in both engines."""
+    prod = (
+        f"cast({d.elem('embedding', 'j')} as double) * "
+        f"{d.elem(d.elem('cm', 'i'), 'j')}"
+    )
+    darr = d.transform(
+        d.seq(0, n_cells - 1),
+        "i",
+        d.fold_sum(d.transform(d.seq(0, H.EMBED_DIM - 1), "j", prod)),
+    )
+    pos, mx = ("array_position", "array_max") if d.spark else ("list_position", "list_max")
+    return f"""SELECT {cols}, darr, cast({pos}(darr, {mx}(darr)) - 1 as int) AS cell_id
+  FROM (SELECT {cols}, {darr} AS darr
+        FROM (SELECT {cols}, (SELECT cm FROM {matrix}) AS cm FROM {source}) m) w"""
+
+
 def q_semantic_dedup(
     d: D,
     threshold: float = 0.40,
@@ -2670,60 +2409,24 @@ def q_semantic_dedup(
 
     Scale story — this is the production answer to `embed_dup_pairs`'s O(N^2):
     the pairwise cosine runs only INSIDE a cell, so with cells sized ~sqrt(N)
-    (n_cells is the knob; centroids k-means-refined via q_embed_kmeans_step)
-    the total pair work is O(N^1.5), the within-cell join keys the shuffle on
-    cell_id, and assignment is a narrow codegen'd projection (literal-centroid
-    dots — the broadcast-join shape against a real centroid table). The
-    accepted tradeoff (as in the paper): near-dup pairs straddling a cell
-    boundary are missed; nprobe-style multi-assignment recovers them at extra
-    cost.
+    (n_cells is the knob; ``centroids`` takes k-means-refined ones) the total
+    pair work is O(N^1.5), the within-cell join keys the shuffle on cell_id,
+    and assignment is a narrow projection. The accepted tradeoff (as in the
+    paper): near-dup pairs straddling a cell boundary are missed;
+    nprobe-style multi-assignment recovers them at extra cost.
 
-    Plan note: assignment is argmax-as-array_position(darr, array_max(darr))
-    where darr = per-cell dots computed by HIGHER-ORDER functions over a
-    constant-folded literal centroid matrix — a ~100-node expression evaluated
-    as a loop, pure projection, zero shuffle. Two rejected shapes, both
-    measured here at sf0.1: explode + row_number(PARTITION BY vec_id) shuffles
-    every vector just to pick its own max; and any form built on the UNROLLED
-    n_cells x dim dot arithmetic (greatest/CASE chain, array() of unrolled
-    dots) — Catalyst's projection collapse duplicates the unrolled terms per
-    reference and the join/sort stages that inline them blow the 64KB codegen
-    method limit (interpreted fallback: 22s-to-minutes vs ~1s). The unrolled
-    form is right for ONE narrow pass (q_embed_ivf_ann's scan); inside a
-    multi-reference CTE the loop form wins. array_position takes the FIRST
-    occurrence, so ties break to the lowest cell_id identically in both
-    engines; per-cell sums are sequential left folds (d.fold_sum), bit-equal
-    across engines."""
-    n_cells = H.IVF_CELLS if n_cells is None else n_cells
-    # `centroids` lets the caller feed k-means-refined centroids
-    # (operators/kmeans.py); the seeded pool is the deterministic default.
-    cents = (H.IVF_CENTROID_POOL[:n_cells] if centroids is None else centroids)
-    n_cells = len(cents)
-    centm = d.arr([d.arr(row) for row in cents])  # constant-folded literal matrix
-    dim = len(cents[0])
-    # darr[i] = dot(embedding, centm[i]) via an index-based lambda (identical
-    # element order in both engines; left-fold sum is bit-identical).
-    prod = (
-        f"cast({d.elem('embedding', 'j')} as double) * "
-        f"{d.elem(d.elem('cm', 'i'), 'j')}"
-    )
-    darr_expr = d.transform(
-        d.seq(0, n_cells - 1), "i", d.fold_sum(d.transform(d.seq(0, dim - 1), "j", prod))
-    )
-    if d.spark:
-        argmax = "cast(array_position(darr, array_max(darr)) - 1 as int)"
-    else:
-        argmax = "cast(list_position(darr, list_max(darr)) - 1 as int)"
+    Plan note: assignment is the Lloyd's chain's argmax (_cells_sql) over
+    the literal centroid matrix — a loop, pure projection, zero shuffle, no
+    join. explode + row_number(PARTITION BY vec_id) would shuffle every
+    vector just to pick its own max."""
+    if centroids is None:
+        centroids = H.IVF_CENTROID_POOL[: H.IVF_CELLS if n_cells is None else n_cells]
+    cells = _cells_sql(d, len(centroids), "nv", "vec_id, embedding, nrm", "c0")
     cos = f"{_dot(d, 'a.embedding', 'b.embedding')} / (a.nrm * b.nrm)"
     return f"""
 WITH {cosine_cte(d)},
-dvals AS (
-  SELECT vec_id, embedding, nrm, {darr_expr} AS darr
-  FROM (SELECT vec_id, embedding, nrm, {centm} AS cm FROM nv) w
-),
-cellv AS (
-  SELECT vec_id, embedding, nrm, {argmax} AS cell_id
-  FROM dvals
-),
+{_kmeans_chain(d, centroids, 0)[0]},
+cellv AS ({cells}),
 dropped AS (
   SELECT DISTINCT b.vec_id
   FROM cellv a JOIN cellv b ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
@@ -2742,70 +2445,14 @@ LEFT JOIN dropped dr ON c.vec_id = dr.vec_id"""
 
 
 def q_embed_kmeans_step(d: D, n_cells: int = 8) -> str:
-    """One k-means refinement step for the IVF centroids — the missing half of
-    q_embed_ivf_ann's scale story ('production: k-means-refined'): assign every
-    vector to its nearest seeded centroid (same unrolled literal-dot
-    assignment), then recompute each cell's centroid as the per-dimension mean.
-
-    Scale shape: assignment is a narrow projection (no join — the centroid
-    table folds into codegen'd arithmetic); the mean is posexplode →
-    groupBy(cell, dim) with map-side partial aggregation — (cells × dim) output
-    rows regardless of N, so iterating to convergence costs one scan per step
-    and the reducer state stays tiny. Emits (cell_id, pos, centroid_val,
-    n_members) per dimension."""
-    cents = H.IVF_CENTROID_POOL[:n_cells]
-    dval_cols = ",\n         ".join(
-        f"{_dot_lit(d, 'embedding', c)} AS d{i}" for i, c in enumerate(cents)
-    )
-    if d.spark:
-        structs = ", ".join(
-            f"named_struct('cell_id', {i}, 'cdot', d{i})" for i in range(n_cells)
-        )
-        assign_inner = (
-            "SELECT vec_id, embedding, cc.cell_id AS cell_id, cc.cdot AS cdot\n"
-            f"    FROM dvals LATERAL VIEW explode(array({structs})) t AS cc"
-        )
-        dims_from = (
-            "SELECT cell_id, pos, cast(v as double) AS v\n"
-            "  FROM data LATERAL VIEW posexplode(embedding) t AS pos, v"
-        )
-    else:
-        assign_inner = "\n    UNION ALL\n    ".join(
-            f"SELECT vec_id, embedding, {i} AS cell_id, d{i} AS cdot FROM dvals"
-            for i in range(n_cells)
-        )
-        dims_from = (
-            "SELECT cell_id, cast(p.pos as int) AS pos,"
-            " cast(embedding[p.pos + 1] as double) AS v\n"
-            f"  FROM data, (SELECT unnest(range(0, {H.EMBED_DIM})) AS pos) p"
-        )
+    """One k-means refinement step for the IVF centroids: round 1 of the
+    Lloyd's chain (q_embed_kmeans_converged, rounds=1) — assign every vector
+    to its nearest seeded centroid, recompute each cell's centroid as the
+    per-dimension mean. Emits (cell_id, pos, centroid_val, n_members) per
+    dimension of every cell that has members."""
     return f"""
-WITH dvals AS (
-  SELECT vec_id, embedding, {dval_cols}
-  FROM embeddings
-),
-assign AS (
-  SELECT vec_id, embedding, cell_id,
-         row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell_id) AS crank
-  FROM (
-    {assign_inner}
-  ) t
-),
-data AS (
-  SELECT vec_id, embedding, cell_id FROM assign WHERE crank = 1
-),
-members AS (
-  SELECT cell_id, {d.big('count(*)')} AS n_members FROM data GROUP BY cell_id
-),
-dims AS (
-  {dims_from}
-)
-SELECT cast(dims.cell_id as int) AS cell_id,
-       cast(pos as int) AS pos,
-       round(avg(v), 6) AS centroid_val,
-       max(m.n_members) AS n_members
-FROM dims JOIN members m ON m.cell_id = dims.cell_id
-GROUP BY dims.cell_id, pos"""
+SELECT * FROM ({q_embed_kmeans_converged(d, n_cells, rounds=1)}) s
+WHERE n_members > 0"""
 
 
 def q_embed_kmeans_converged(
@@ -2835,9 +2482,9 @@ def q_embed_kmeans_converged(
     Scale: per round one scan of the vectors, one (cells x dim)-row exchange,
     and a tiny single-row matrix rebuild — the classic centroids-on-driver
     Lloyd's shape with the driver replaced by a one-row broadcast."""
-    ctes, final_a = _kmeans_chain(d, n_cells, rounds, source=source)
+    ctes = _kmeans_chain(d, H.IVF_CENTROID_POOL[:n_cells], rounds, source=source)
     ctes.append(
-        f"members AS (SELECT cell_id, count(*) AS n_members FROM {final_a} GROUP BY cell_id)"
+        f"members AS (SELECT cell_id, count(*) AS n_members FROM a{rounds} GROUP BY cell_id)"
     )
     body = ",\n".join(ctes)
     return f"""
@@ -2850,38 +2497,27 @@ FROM g{rounds} g LEFT JOIN members m ON g.cell_id = m.cell_id"""
 
 
 def _kmeans_chain(
-    d: D, n_cells: int, rounds: int, source: str = "embeddings"
-) -> tuple[list[str], str]:
+    d: D, centroids: list, rounds: int, source: str = "embeddings"
+) -> list[str]:
     """The fixed-round Lloyd's CTE chain shared by q_embed_kmeans_converged
-    and q_embed_ivf_ann_refined: returns (ctes, last-assignment CTE name);
-    after the chain, ``c{rounds}`` is the single-row refined centroid matrix
-    and ``g{rounds}`` its (cell_id, pos, val) long form. ``source`` swaps the
-    vector table (the clustered-geometry recall fixture reads ``cemb``).
-    ``rounds=0`` degenerates to the seeded pool (c0) with no refinement."""
+    and q_embed_ivf_ann: ``c0`` is the literal ``centroids`` matrix; round r
+    assigns ``source``'s vectors in ``a{r}`` and rebuilds the single-row
+    matrix ``c{r}`` and its (cell_id, pos, val) long form ``g{r}``.
+    ``rounds=0`` is c0 alone, no refinement."""
     dim = H.EMBED_DIM
-    cents = H.IVF_CENTROID_POOL[:n_cells]
-    centm = d.arr([d.arr(row) for row in cents])
-    prod = (
-        f"cast({d.elem('embedding', 'j')} as double) * "
-        f"{d.elem(d.elem('cm', 'i'), 'j')}"
-    )
-    darr = d.transform(
-        d.seq(0, n_cells - 1), "i", d.fold_sum(d.transform(d.seq(0, dim - 1), "j", prod))
-    )
+    n_cells = len(centroids)
     if d.spark:
-        argmax = "cast(array_position(darr, array_max(darr)) - 1 as int)"
         ordered_vals = (
             "transform(array_sort(collect_list(struct(cell_id, pos, val))), x -> x.val)"
         )
     else:
-        argmax = "cast(list_position(darr, list_max(darr)) - 1 as int)"
         ordered_vals = "array_agg(val ORDER BY cell_id, pos)"
     matrix = d.transform(
         d.seq(0, n_cells - 1),
         "i",
         d.transform(d.seq(0, dim - 1), "j", d.elem("vals", f"i * {dim} + j")),
     )
-    ctes = [f"c0 AS (SELECT {centm} AS cm)"]
+    ctes = [f"c0 AS (SELECT {d.arr([d.arr(row) for row in centroids])} AS cm)"]
     prev = "c0"
     for r in range(1, rounds + 1):
         if d.spark:
@@ -2906,13 +2542,7 @@ def _kmeans_chain(
                 f"FROM {prev}, (SELECT unnest(range(0, {n_cells})) AS i) i, "
                 f"(SELECT unnest(range(0, {dim})) AS j) j"
             )
-        ctes.append(
-            f"""a{r} AS (
-  SELECT vec_id, embedding, {argmax} AS cell_id
-  FROM (SELECT vec_id, embedding, {darr} AS darr
-        FROM {source} CROSS JOIN {prev}) w{r}
-)"""
-        )
+        ctes.append(f"a{r} AS ({_cells_sql(d, n_cells, source, 'vec_id, embedding', prev)})")
         ctes.append(f"u{r} AS ({unpivot})")
         ctes.append(
             f"m{r} AS (SELECT cell_id, pos, round(avg(v), 6) AS val "
@@ -2928,102 +2558,7 @@ def _kmeans_chain(
             f"c{r} AS (SELECT {matrix} AS cm FROM (SELECT {ordered_vals} AS vals FROM g{r}) s{r})"
         )
         prev = f"c{r}"
-    return ctes, f"a{rounds}"
-
-
-def q_embed_ivf_ann_refined(
-    d: D,
-    k: int = 3,
-    n_queries: int = 30,
-    n_cells: int = 8,
-    rounds: int = 3,
-    nprobe: int = 2,
-    source: str = "embeddings",
-    stats: bool = False,
-) -> str:
-    """IVF ANN over K-MEANS-REFINED centroids — the composition
-    q_embed_ivf_ann's docstring promises ('production: k-means-refined'):
-    the fixed-round Lloyd's chain (_kmeans_chain) produces the centroid
-    matrix, and the IVF probe/search runs against it. One template, both
-    engines, so the DuckDB oracle re-derives the refinement AND the search.
-
-    The Spark RUNNER (testdata_queries.q_embed_ivf_ann_refined_runner) does
-    not execute this monolith: it collects the converged centroids (a
-    (cells x dim) handful of doubles — the classic Lloyd's driver round-trip)
-    from q_embed_kmeans_converged and feeds them to q_embed_ivf_ann as
-    constant-folded literals. That is the production shape: the chain CTE
-    here is multi-referenced per round, and Spark's CTE inlining would
-    re-execute each round's assignment scan ~2x per round, where the
-    collect-then-literal split runs each round once and keeps the search
-    projection codegen'd. Hash-equality between the two is exactly the
-    refined-centroid determinism guarantee (6 dp rounding per round) the
-    kmeans twin test pins.
-
-    ``source`` swaps the vector table (default the raw embeddings; the
-    clustered recall fixture passes ``cemb``). ``stats=True`` adds a
-    per-query candidate count column (n_cand_q) so a composing recall query
-    can report the probe cost it actually paid — the embed_lsh_hi_stats
-    discipline applied to IVF."""
-    ctes, _ = _kmeans_chain(d, n_cells, rounds, source=source)
-    prod = (
-        f"cast({d.elem('embedding', 'j')} as double) * "
-        f"{d.elem(d.elem('cm', 'i'), 'j')}"
-    )
-    darr = d.transform(
-        d.seq(0, n_cells - 1), "i",
-        d.fold_sum(d.transform(d.seq(0, H.EMBED_DIM - 1), "j", prod)),
-    )
-    if d.spark:
-        assign_inner = (
-            "SELECT vec_id, embedding, nrm, cell_id, cdot\n"
-            "    FROM dvals LATERAL VIEW posexplode(darr) t AS cell_id, cdot"
-        )
-    else:
-        assign_inner = (
-            "SELECT vec_id, embedding, nrm, cast(i.i as int) AS cell_id, "
-            "darr[i.i + 1] AS cdot\n"
-            f"    FROM dvals, (SELECT unnest(range(0, {n_cells})) AS i) i"
-        )
-    cos = f"{_dot(d, 'q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
-    ctes.append(cosine_cte(d, source))
-    ctes.append(
-        f"""dvals AS (
-  SELECT vec_id, embedding, nrm, {darr} AS darr
-  FROM nv CROSS JOIN c{rounds}
-)"""
-    )
-    body = ",\n".join(ctes)
-    cand_col, cand_out = _cand_stats(d, stats)
-    return f"""
-WITH {body},
-assign AS (
-  SELECT vec_id, embedding, nrm, cell_id,
-         row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell_id) AS crank
-  FROM (
-    {assign_inner}
-  ) t
-),
-data AS (
-  SELECT vec_id, embedding, nrm, cell_id FROM assign WHERE crank = 1
-),
-probes AS (
-  SELECT vec_id, cell_id FROM assign WHERE crank <= {nprobe} AND vec_id < {n_queries}
-),
-scored AS (
-  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id, c.cell_id AS cell,
-         round({cos}, 6) AS cosine
-  FROM probes p
-  JOIN nv q ON q.vec_id = p.vec_id
-  JOIN data c ON c.cell_id = p.cell_id AND c.vec_id <> p.vec_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cell, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk{cand_col}
-  FROM scored
-)
-SELECT {d.big('query_id')} AS query_id, {d.big('neighbor_id')} AS neighbor_id,
-       cast(cell as int) AS cell, cosine, cast(rnk as int) AS rnk{cand_out}
-FROM ranked WHERE rnk <= {k}"""
+    return ctes
 
 
 def clustered_embeddings_cte(
@@ -3054,53 +2589,16 @@ def clustered_embeddings_cte(
 )"""
 
 
-def q_embed_ann_recall_clustered(
-    d: D,
-    k: int = 3,
-    n_queries: int = 30,
-    n_cells: int = 16,
-    rounds: int = 2,
-    nprobe: int = 1,
-    n_clusters: int = 16,
-    blend: float = 0.85,
-) -> str:
-    """Recall@k of IVF ANN over K-MEANS-REFINED centroids on the
-    clustered-geometry fixture — the production regime the random-vector
-    recall queries (q_embed_ann_recall) deliberately understate, measured
-    with the probe cost paid for it (VERDICT r3 ask #2).
-
-    Composition, all inside one oracle-paired statement: cemb (the
-    deterministic clustered fixture) -> fixed-round Lloyd's refinement of
-    the seeded centroid pool (_kmeans_chain) -> IVF probe/search with
-    per-query candidate counts (q_embed_ivf_ann_refined stats=True) -> exact
-    brute-force top-k on the same fixture -> one recall row. ``rounds=0``
-    degenerates to the UNREFINED seeded pool — registered as the ablation
-    twin, so refined-vs-seeded recall is a measured pair of numbers, not
-    prose. Output: recall_at_k, n_hit, n_true, worst_query_recall,
-    n_candidates (total vectors exactly scored across queries — the knob
-    cost, vs n_queries*(N-1) for brute force)."""
-    ann = q_embed_ivf_ann_refined(
-        d,
-        k=k,
-        n_queries=n_queries,
-        n_cells=n_cells,
-        rounds=rounds,
-        nprobe=nprobe,
-        source="cemb",
-        stats=True,
-    )
-    bf = q_embed_cosine_topk(d, k=k, n_queries=n_queries, source="cemb")
-    lead = clustered_embeddings_cte(d, n_clusters, blend) + ",\n"
-    return recall_with_cost_sql(d, ann, bf, lead_ctes=lead)
-
-
 def recall_with_cost_sql(d: D, ann_sql: str, bf_sql: str, lead_ctes: str = "") -> str:
-    """The shared recall@k + probe-cost tail: join an ANN top-k result
+    """The one recall@k + probe-cost tail: join an ANN top-k result
     (columns query_id, neighbor_id, n_cand_q) against the exact top-k and
     emit ONE row — recall, per-query worst case, and the total candidate
-    volume the ANN actually scored. The Spark runner feeds it literal-centroid
-    sub-queries over a materialized fixture view; the DuckDB oracle feeds it
-    the full in-SQL derivation (lead_ctes = the fixture CTE)."""
+    volume the ANN actually scored. The Spark runner of the refined-IVF
+    family feeds it collected-centroid sub-queries over a materialized
+    fixture view; q_embed_ann_recall feeds it the full in-SQL derivation
+    (lead_ctes = the fixture CTE). The two sub-queries are each referenced
+    once, so Spark's CTE inlining costs nothing extra; DuckDB pins them
+    MATERIALIZED only to spare its binder the doubled tree."""
     m = "" if d.spark else "MATERIALIZED "
     return f"""
 WITH {lead_ctes}ann AS {m}({ann_sql}),

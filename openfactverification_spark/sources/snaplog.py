@@ -413,7 +413,7 @@ def _commit(
     *,
     operation: str,
     new_files: list[dict],
-    schema_json: str,
+    schema_for: "Callable[[dict | None], str]",
     partition_cols: list[str],
     surviving: "callable",
     op_summary: dict | None = None,
@@ -423,9 +423,12 @@ def _commit(
     """Optimistic-concurrency commit loop: read head, build the next snapshot,
     atomically create v{N+1}.json; on loss re-read and retry (the new data
     files stay valid — only the listing is rebuilt against the new head).
-    ``op_summary`` holds the operation's own summary fields; the caller's
-    ``summary_extra`` may be a zero-arg callable, resolved once here — after
-    the data write, so it can read an ``Observation`` filled by that write.
+    ``schema_for(head)`` gives the new snapshot's schema JSON from the head
+    each attempt builds on, so a retry re-evolves against a concurrent
+    writer's schema instead of dropping its columns. ``op_summary`` holds
+    the operation's own summary fields; the caller's ``summary_extra`` may
+    be a zero-arg callable, resolved once here — after the data write, so it
+    can read an ``Observation`` filled by that write.
     ``require_parent`` pins the commit to a specific head snapshot: if any
     other commit lands first, raise instead of retrying — needed by
     operations (compaction) whose surviving-file computation was derived
@@ -454,7 +457,7 @@ def _commit(
             "parent_id": head["snapshot_id"] if head else None,
             "operation": operation,
             "partition_cols": partition_cols,
-            "schema": schema_json,
+            "schema": schema_for(head),
             "files": files,
             "summary": {
                 "added_files": len(new_files),
@@ -532,7 +535,7 @@ def append(
         fs,
         operation="append",
         new_files=new_files,
-        schema_json=_evolved_schema(head, df),
+        schema_for=lambda h: _evolved_schema(h, df),
         partition_cols=partition_cols,
         surviving=lambda files: list(files),
         summary_extra=summary_extra,
@@ -613,7 +616,7 @@ def overwrite_partitions(
         fs,
         operation="overwrite_partitions",
         new_files=new_files,
-        schema_json=_evolved_schema(head, df),
+        schema_for=lambda h: _evolved_schema(h, df),
         partition_cols=partition_cols,
         surviving=surviving,
         op_summary={"replaced_partitions": len(touched)},
@@ -639,7 +642,7 @@ def rollback(spark: SparkSession, table: str, snapshot_id: str) -> dict:
         fs,
         operation="rollback",
         new_files=[],
-        schema_json=target["schema"],
+        schema_for=lambda _h: target["schema"],
         partition_cols=target["partition_cols"],
         surviving=lambda _files: list(target["files"]),
         op_summary={"rolled_back_to": snapshot_id},
@@ -830,7 +833,7 @@ def compact(spark: SparkSession, table: str, min_files: int = 2) -> dict | None:
         fs,
         operation="rewrite",
         new_files=new_files,
-        schema_json=head["schema"],
+        schema_for=lambda _h: head["schema"],
         partition_cols=pcols,
         surviving=surviving,
         op_summary={

@@ -14,6 +14,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions import hashing as H
 from .operators import dual
 from .operators.dual import D
 from .operators.multimodal import (
@@ -49,50 +50,57 @@ _DUAL_QUERIES: dict[str, Callable[[D], str]] = {
     "text_lang_id_model": dual.q_lang_id_model,
     "chunk_documents": dual.q_chunk_documents,
     "embed_cosine_topk": dual.q_embed_cosine_topk,
+    # every recall row is one point of q_embed_ann_recall, with the paid
+    # candidate volume in-row (recall_with_cost_sql)
     "embed_ann_recall": dual.q_embed_ann_recall,
     "embed_ann_recall_probe4": partial(dual.q_embed_ann_recall, nprobe=4),
     "embed_lsh_recall": partial(dual.q_embed_ann_recall, method="lsh"),
     "embed_lsh_recall_planes4": partial(
-        dual.q_embed_ann_recall, method="lsh", n_planes=4
+        dual.q_embed_ann_recall, method="lsh", planes_per_table=4
     ),
     # multi-probe (Hamming-distance-1 buckets): recall 0.167 vs 0.022
     # single-bucket at 8 planes on the adversarial random fixture, and 0.933
-    # at 8 planes on the clustered-geometry fixture — candidates measured
-    # in-row (recall_with_cost_sql)
-    "embed_lsh_recall_multiprobe": dual.q_embed_lsh_recall_multiprobe,
+    # at 8 planes on the clustered-geometry fixture
+    "embed_lsh_recall_multiprobe": partial(
+        dual.q_embed_ann_recall, method="lsh", radius=1
+    ),
     "embed_lsh_recall_multiprobe_clustered": partial(
-        dual.q_embed_lsh_recall_multiprobe, clustered=True
+        dual.q_embed_ann_recall, method="lsh", radius=1, clustered=True
     ),
     # (planes x tables x probes) sweep on the RANDOM fixture (r4 verdict #6):
     # the >=0.9-recall configuration (0.933 recall@3 at 49% of brute-force
     # candidate volume at sf0.01; 0.967 at sf0.1) ...
     "embed_lsh_recall_mt": partial(
-        dual.q_embed_lsh_recall_mt_multiprobe,
-        planes_per_table=10, n_tables=12, radius=2,
+        dual.q_embed_ann_recall,
+        method="lsh", planes_per_table=10, n_tables=12, radius=2,
     ),
     # ... and the sublinear-candidates point of the measured tradeoff curve
     # (~20% of brute force; recall 0.556 at sf0.01 rising to 0.811 at sf0.1
     # as true neighbors move closer) — the documented bound: on random
     # geometry recall >=0.9 costs ~half of brute force, BENCH.md "ANN sweep"
     "embed_lsh_recall_mt_sparse": partial(
-        dual.q_embed_lsh_recall_mt_multiprobe,
-        planes_per_table=12, n_tables=10, radius=2,
+        dual.q_embed_ann_recall,
+        method="lsh", planes_per_table=12, n_tables=10, radius=2,
     ),
     "embed_dup_pairs": dual.q_embed_dup_pairs,
     "embed_dup_pairs_lsh": dual.q_embed_dup_pairs_lsh,
-    "embed_neardup_planted_lsh": dual.q_embed_neardup_planted_lsh,
+    # LSH in the regime it is built for: a planted near-exact twin per vector
+    "embed_neardup_planted_lsh": partial(
+        dual.q_embed_dup_pairs_lsh,
+        threshold=0.98, planes_per_table=8, n_tables=4, bump=1.05,
+    ),
     # production-regime LSH headline (r2 verdict #3): threshold 0.90, p=12
     # planes x L=8 tables on the planted-twin fixture — candidates ~linear;
     # the threshold-0.40 embed_dup_pairs_lsh stays registered as the
     # documented worst-case anchor
     "embed_dup_pairs_lsh_hi": partial(
-        dual.q_embed_neardup_planted_lsh,
-        threshold=0.90, planes_per_table=12, n_tables=8,
+        dual.q_embed_dup_pairs_lsh,
+        threshold=0.90, planes_per_table=12, n_tables=8, bump=1.05,
     ),
     # one-row regime measurement: candidate volume vs all-pairs, oracle-paired
     "embed_lsh_hi_stats": partial(
-        dual.q_embed_neardup_planted_lsh,
-        threshold=0.90, planes_per_table=12, n_tables=8, output="stats",
+        dual.q_embed_dup_pairs_lsh,
+        threshold=0.90, planes_per_table=12, n_tables=8, bump=1.05, output="stats",
     ),
     "embed_lsh_ann": dual.q_embed_lsh_ann,
     "embed_ivf_ann": dual.q_embed_ivf_ann,
@@ -137,6 +145,28 @@ _DUAL_QUERIES: dict[str, Callable[[D], str]] = {
     "events_anomaly_mad": dual.q_events_anomaly_mad,
     "events_sliding_rate": dual.q_events_sliding_rate,
     "events_grok_parse": dual.q_events_grok_parse,
+}
+
+
+# k-means-refined IVF: Spark runs each through _refined_ivf_runner
+# (collect-then-literal), DuckDB runs the registered builder itself
+_REFINED_IVF: dict[str, partial] = {
+    "embed_recall_random_refined": partial(
+        dual.q_embed_ann_recall, n_cells=8, nprobe=4, rounds=3
+    ),
+    "embed_ivf_ann_refined": partial(dual.q_embed_ivf_ann, n_cells=8, nprobe=2, rounds=3),
+    # clustered-geometry recall family: refined centroids reach recall >= 0.9
+    # at nprobe=1 and 1.0 at nprobe=2, with the paid candidate volume in the
+    # same row; rounds=0 is the unrefined ablation
+    "embed_recall_clustered_refined": partial(
+        dual.q_embed_ann_recall, clustered=True, n_cells=16, nprobe=1, rounds=2
+    ),
+    "embed_recall_clustered_probe2": partial(
+        dual.q_embed_ann_recall, clustered=True, n_cells=16, nprobe=2, rounds=2
+    ),
+    "embed_recall_clustered_seeded": partial(
+        dual.q_embed_ann_recall, clustered=True, n_cells=16, nprobe=1, rounds=0
+    ),
 }
 
 
@@ -286,34 +316,33 @@ def q_dedup_ngram_spans_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _planted_lsh_runner(
-    threshold: float, planes_per_table: int, n_tables: int, output: str = "pairs"
-) -> Callable[[SparkSession, str], DataFrame]:
-    """Spark execution of the planted-twin LSH family with the normed-vector
-    and bucket tables materialized ONCE (cached temp views): nv feeds three
-    CTEs and buckets self-joins, and Spark inlines CTEs, so the inline form
-    computes the p x L plane-dot bucket bits twice and the norms three times
-    — at p=12 x L=8 the bits are the dominant cost (measured ~2x at sf0.1).
-    At cluster scale the same decision is 'write signatures once, join from
-    the signature table'. DuckDB oracle stays self-contained."""
+def _planted_lsh_runner(q: partial) -> Callable[[SparkSession, str], DataFrame]:
+    """Spark execution of a planted-twin LSH query (``q``: its registered
+    q_embed_dup_pairs_lsh partial) with the normed-vector and bucket tables
+    materialized ONCE (cached temp views): nv feeds three CTEs and buckets
+    self-joins, and Spark inlines CTEs, so the inline form computes the
+    p x L plane-dot bucket bits twice and the norms three times — at
+    p=12 x L=8 the bits are the dominant cost (measured ~2x at sf0.1). At
+    cluster scale the same decision is 'write signatures once, join from the
+    signature table'. DuckDB oracle stays self-contained."""
+    kw = q.keywords
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         _register_views(spark, sf_dir)
-        nv = spark.sql("SELECT * FROM (" + dual.planted_nv_sql(_SPARK) + ") q").persist()
+        nv_sql = dual.planted_nv_sql(_SPARK, kw["bump"])
+        nv = spark.sql(f"SELECT * FROM ({nv_sql}) q").persist()
         nv.count()
         nv.createOrReplaceTempView("nv_mat")
         bk = spark.sql(
-            dual.planted_buckets_sql(_SPARK, planes_per_table, n_tables, nv_ref="nv_mat")
+            dual.lsh_buckets_sql(
+                _SPARK, kw["planes_per_table"], kw["n_tables"], nv_ref="nv_mat"
+            )
         ).persist()
         bk.count()
         bk.createOrReplaceTempView("buckets_mat")
         return spark.sql(
-            dual.q_embed_neardup_planted_lsh(
+            q(
                 _SPARK,
-                threshold=threshold,
-                planes_per_table=planes_per_table,
-                n_tables=n_tables,
-                output=output,
                 nv_sql="SELECT vec_id, embedding, nrm FROM nv_mat",
                 buckets_over_sql="SELECT vec_id, tbl, bucket FROM buckets_mat",
             )
@@ -370,97 +399,49 @@ def q_chunk_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return passage_ops.select_passages(passage_ops.with_scores(chunks))
 
 
-def q_embed_ivf_ann_refined_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN on k-means-REFINED centroids, executed the production way:
-    run the fixed-round Lloyd's refinement (q_embed_kmeans_converged), collect
-    the converged matrix — (cells x dim) doubles, the classic Lloyd's
-    driver round-trip, NOT a data collect — and search with those centroids
-    as constant-folded literals (q_embed_ivf_ann). The DuckDB oracle
-    (dual.q_embed_ivf_ann_refined) re-derives refinement AND search in one
-    composed SQL, so the hash match proves the collected centroids are
-    bit-identical to the in-SQL chain (the 6 dp per-round rounding
-    guarantee) and that the search is centroid-for-centroid the same."""
-    from .functions import hashing as H
-
-    _register_views(spark, sf_dir)
-    n_cells, rounds = 8, 3
+def _converged_centroids(
+    spark: SparkSession, n_cells: int, rounds: int, source: str
+) -> list[list[float]]:
+    """The (cells x dim) centroid matrix after ``rounds`` Lloyd's rounds
+    (q_embed_kmeans_converged), collected to the driver."""
     rows = spark.sql(
-        dual.q_embed_kmeans_converged(_SPARK, n_cells=n_cells, rounds=rounds)
+        dual.q_embed_kmeans_converged(_SPARK, n_cells=n_cells, rounds=rounds, source=source)
     ).collect()
     got = {(r["cell_id"], r["pos"]): r["centroid_val"] for r in rows}
-    cents = [
-        [got[(c, j)] for j in range(H.EMBED_DIM)] for c in range(n_cells)
-    ]
-    return spark.sql(
-        dual.q_embed_ivf_ann(_SPARK, k=3, n_queries=30, nprobe=2, centroids=cents)
-    )
+    return [[got[(c, j)] for j in range(H.EMBED_DIM)] for c in range(n_cells)]
 
 
-def _clustered_recall_runner(nprobe: int, rounds: int):
-    """Spark side of embed_recall_clustered_*: recall@3 with probe cost on
-    the clustered-geometry fixture (dual.clustered_embeddings_cte), executed
-    the production way — the fixture is materialized ONCE (localCheckpoint +
-    temp view; the monolith re-executes it per CTE reference), the Lloyd's
-    refinement runs once and its (cells x dim) centroid matrix is collected
-    (the classic driver round-trip, not a data collect), and the IVF search +
-    exact baseline + recall tail run with the centroids as constant-folded
-    literals. The DuckDB oracle (dual.q_embed_ann_recall_clustered) re-derives
-    fixture, refinement AND search in one composed SQL, so the hash match
-    proves the whole collect-then-literal split is bit-identical to the
-    in-SQL derivation. rounds=0 = the unrefined seeded-pool ablation."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .functions import hashing as H
-
-        _register_views(spark, sf_dir)
-        n_cells = 16
-        cemb = spark.sql(
-            f"WITH {dual.clustered_embeddings_cte(_SPARK)} SELECT * FROM cemb"
-        ).localCheckpoint(eager=True)
-        cemb.createOrReplaceTempView("cemb")
-        if rounds:
-            rows = spark.sql(
-                dual.q_embed_kmeans_converged(
-                    _SPARK, n_cells=n_cells, rounds=rounds, source="cemb"
-                )
-            ).collect()
-            got = {(r["cell_id"], r["pos"]): r["centroid_val"] for r in rows}
-            cents = [
-                [got[(c, j)] for j in range(H.EMBED_DIM)] for c in range(n_cells)
-            ]
-        else:
-            cents = [list(row) for row in H.IVF_CENTROID_POOL[:n_cells]]
-        ann = dual.q_embed_ivf_ann(
-            _SPARK, k=3, n_queries=30, nprobe=nprobe, centroids=cents,
-            source="cemb", stats=True,
-        )
-        bf = dual.q_embed_cosine_topk(_SPARK, k=3, n_queries=30, source="cemb")
-        return spark.sql(dual.recall_with_cost_sql(_SPARK, ann, bf))
-
-    return run
-
-
-def _random_recall_refined_runner(n_cells: int, nprobe: int, rounds: int):
-    """Spark side of embed_recall_random_refined: recall@3 + probe cost of
-    IVF over k-means-REFINED centroids on the adversarial RANDOM fixture
-    (r4 verdict #6's refined-centroids half), executed the production way —
-    Lloyd's refinement collected as the (cells x dim) centroid matrix (the
-    classic driver round-trip), search with constant-folded literals. Same
-    collect-then-literal split as _clustered_recall_runner, no fixture CTE."""
+def _refined_ivf_runner(q: partial) -> Callable[[SparkSession, str], DataFrame]:
+    """Spark side of a k-means-refined IVF query (``q``: its registered
+    q_embed_ivf_ann or q_embed_ann_recall partial), executed the production
+    way: the clustered fixture, when asked for, is materialized ONCE
+    (localCheckpoint + temp view; the monolith re-executes it per CTE
+    reference); the Lloyd's refinement runs once and its (cells x dim)
+    centroid matrix is collected — the classic driver round-trip, not a data
+    collect; the IVF search (plus, for a recall row, the exact baseline and
+    recall tail) runs with those centroids as the literal c0. The DuckDB
+    oracle (``q`` itself) re-derives fixture, refinement AND search in one
+    composed SQL, so the hash match proves the collect-then-literal split is
+    bit-identical to the in-SQL chain (the 6 dp per-round rounding). rounds=0
+    is the unrefined seeded pool."""
+    kw = dict(q.keywords)
+    recall = q.func is dual.q_embed_ann_recall
+    source = "cemb" if kw.pop("clustered", False) else "embeddings"
+    rounds = kw.pop("rounds")
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .functions import hashing as H
-
         _register_views(spark, sf_dir)
-        rows = spark.sql(
-            dual.q_embed_kmeans_converged(_SPARK, n_cells=n_cells, rounds=rounds)
-        ).collect()
-        got = {(r["cell_id"], r["pos"]): r["centroid_val"] for r in rows}
-        cents = [[got[(c, j)] for j in range(H.EMBED_DIM)] for c in range(n_cells)]
+        if source == "cemb":
+            spark.sql(
+                f"WITH {dual.clustered_embeddings_cte(_SPARK)} SELECT * FROM cemb"
+            ).localCheckpoint(eager=True).createOrReplaceTempView("cemb")
+        cents = _converged_centroids(spark, kw["n_cells"], rounds, source) if rounds else None
         ann = dual.q_embed_ivf_ann(
-            _SPARK, k=3, n_queries=30, nprobe=nprobe, centroids=cents, stats=True
+            _SPARK, centroids=cents, source=source, stats=recall, **kw
         )
-        bf = dual.q_embed_cosine_topk(_SPARK, k=3, n_queries=30)
+        if not recall:
+            return spark.sql(ann)
+        bf = dual.q_embed_cosine_topk(_SPARK, k=3, n_queries=30, source=source)
         return spark.sql(dual.recall_with_cost_sql(_SPARK, ann, bf))
 
     return run
@@ -615,22 +596,13 @@ TESTDATA_QUERIES["dedup_simhash_banded"] = q_dedup_simhash_banded_runner
 TESTDATA_QUERIES["dedup_components"] = q_dedup_components
 TESTDATA_QUERIES["dedup_ensemble_components"] = q_dedup_ensemble_components
 TESTDATA_QUERIES["dedup_ngram_spans"] = q_dedup_ngram_spans_runner
-TESTDATA_QUERIES["embed_neardup_planted_lsh"] = _planted_lsh_runner(0.98, 8, 4)
-TESTDATA_QUERIES["embed_dup_pairs_lsh_hi"] = _planted_lsh_runner(0.90, 12, 8)
-TESTDATA_QUERIES["embed_lsh_hi_stats"] = _planted_lsh_runner(0.90, 12, 8, output="stats")
+for _name in ("embed_neardup_planted_lsh", "embed_dup_pairs_lsh_hi", "embed_lsh_hi_stats"):
+    TESTDATA_QUERIES[_name] = _planted_lsh_runner(_DUAL_QUERIES[_name])
 TESTDATA_QUERIES["pack_sequences"] = q_pack_sequences
 TESTDATA_QUERIES["ingest_dedup_stream_status"] = q_ingest_dedup_stream_status
-TESTDATA_QUERIES["embed_recall_random_refined"] = _random_recall_refined_runner(
-    n_cells=8, nprobe=4, rounds=3
-)
 TESTDATA_QUERIES["snaplog_overwrite_daily"] = q_snaplog_overwrite_daily
-TESTDATA_QUERIES["embed_ivf_ann_refined"] = q_embed_ivf_ann_refined_runner
-# clustered-geometry recall family (r3 verdict #2): refined centroids reach
-# recall >= 0.9 at nprobe=1 and 1.0 at nprobe=2, with the paid candidate
-# volume in the same row; rounds=0 is the unrefined-seeded ablation
-TESTDATA_QUERIES["embed_recall_clustered_refined"] = _clustered_recall_runner(1, 2)
-TESTDATA_QUERIES["embed_recall_clustered_probe2"] = _clustered_recall_runner(2, 2)
-TESTDATA_QUERIES["embed_recall_clustered_seeded"] = _clustered_recall_runner(1, 0)
+for _name, _q in _REFINED_IVF.items():
+    TESTDATA_QUERIES[_name] = _refined_ivf_runner(_q)
 
 TESTDATA_ORACLES: dict[str, str] = {name: b(_DUCK) for name, b in _DUAL_QUERIES.items()}
 TESTDATA_ORACLES["multimodal_bytes"] = multimodal_bytes_oracle()
@@ -642,19 +614,5 @@ TESTDATA_ORACLES["dedup_ensemble_components"] = dual.dedup_components_oracle(
 )
 TESTDATA_ORACLES["pack_sequences"] = dual.pack_sequences_oracle()
 TESTDATA_ORACLES["ingest_dedup_stream_status"] = dual.q_dedup_incremental(_DUCK)
-TESTDATA_ORACLES["embed_recall_random_refined"] = dual.q_embed_ann_recall_refined(
-    _DUCK, n_cells=8, nprobe=4, rounds=3
-)
 TESTDATA_ORACLES["snaplog_overwrite_daily"] = snaplog_overwrite_daily_oracle()
-TESTDATA_ORACLES["embed_ivf_ann_refined"] = dual.q_embed_ivf_ann_refined(
-    _DUCK, k=3, n_queries=30, n_cells=8, rounds=3, nprobe=2
-)
-TESTDATA_ORACLES["embed_recall_clustered_refined"] = dual.q_embed_ann_recall_clustered(
-    _DUCK, nprobe=1, rounds=2
-)
-TESTDATA_ORACLES["embed_recall_clustered_probe2"] = dual.q_embed_ann_recall_clustered(
-    _DUCK, nprobe=2, rounds=2
-)
-TESTDATA_ORACLES["embed_recall_clustered_seeded"] = dual.q_embed_ann_recall_clustered(
-    _DUCK, nprobe=1, rounds=0
-)
+TESTDATA_ORACLES.update({name: q(_DUCK) for name, q in _REFINED_IVF.items()})

@@ -6,6 +6,7 @@ Usage: python scripts/check_parity.py [sf_dir] [name_filter]
 
 from __future__ import annotations
 
+import hashlib
 import math
 import sys
 import time
@@ -38,6 +39,13 @@ def normalize(rows, cols):
         vals = list(r)
         out.append(tuple(norm_cell(vals[i]) for i in order))
     return sorted(out, key=lambda t: tuple((x is None, str(x)) for x in t))
+
+
+def rows_digest(cols, normalized) -> str:
+    """16-hex SHA-256 prefix of the sorted column names and the normalized
+    rows, so two runs' [PASS] lines show whether they returned the same rows."""
+    payload = repr((sorted(cols), normalized))
+    return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
 def main():
@@ -92,7 +100,10 @@ def main():
             print(f"  [FAIL-values] {name}: first diffs {bad}")
             n_fail += 1
             continue
-        print(f"  [PASS] {name}: {len(sn)} rows ({t_spark:.1f}s spark, {t_duck:.1f}s duck)")
+        print(
+            f"  [PASS] {name}: {len(sn)} rows ({t_spark:.1f}s spark, {t_duck:.1f}s duck)"
+            f" sha256={rows_digest(scols, sn)}"
+        )
         n_pass += 1
 
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noora} rows-only")

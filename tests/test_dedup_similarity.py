@@ -315,13 +315,14 @@ def test_planted_neardup_lsh_full_recall_no_false_positives(spark):
     multi-table LSH path must recover essentially every planted twin with
     zero false positives — the scale behavior the threshold-0.40 variant
     can't show on random vectors."""
-    from openfactverification_spark.operators.dual import (
-        D,
-        q_embed_neardup_planted_lsh,
-    )
+    from openfactverification_spark.operators.dual import D, q_embed_dup_pairs_lsh
 
     n_vecs = spark.table("embeddings").count()
-    rows = spark.sql(q_embed_neardup_planted_lsh(D("spark"))).collect()
+    rows = spark.sql(
+        q_embed_dup_pairs_lsh(
+            D("spark"), threshold=0.98, planes_per_table=8, n_tables=4, bump=1.05
+        )
+    ).collect()
     assert all(r["is_planted"] for r in rows)  # precision 1.0
     assert len(rows) >= 0.95 * n_vecs  # near-total recall
     assert min(r["cosine"] for r in rows) >= 0.998
@@ -476,8 +477,8 @@ def test_lsh_hi_regime_candidates_sublinear(spark):
     from functools import partial
 
     q = partial(
-        dual.q_embed_neardup_planted_lsh,
-        threshold=0.90, planes_per_table=12, n_tables=8,
+        dual.q_embed_dup_pairs_lsh,
+        threshold=0.90, planes_per_table=12, n_tables=8, bump=1.05,
     )
     row = spark.sql(q(_S, output="stats")).collect()[0]
     n_vecs = spark.table("embeddings").count()
@@ -498,7 +499,7 @@ def test_ann_recall_knobs_monotone(spark):
         return spark.sql(dual.q_embed_ann_recall(_S, **kw)).collect()[0]["recall_at_k"]
 
     ivf2, ivf4 = recall(), recall(nprobe=4)
-    lsh8, lsh4 = recall(method="lsh"), recall(method="lsh", n_planes=4)
+    lsh8, lsh4 = recall(method="lsh"), recall(method="lsh", planes_per_table=4)
     assert ivf4 > ivf2 > 0
     assert lsh4 > lsh8 > 0
     # IVF at equal-ish candidate budgets beats single-table LSH here
@@ -513,7 +514,7 @@ def test_multiprobe_lsh_recall_lift(spark):
     single-table-LSH half)."""
     def row(**kw):
         return spark.sql(
-            dual.q_embed_lsh_recall_multiprobe(_S, **kw)
+            dual.q_embed_ann_recall(_S, method="lsh", radius=1, **kw)
         ).collect()[0]
 
     single8 = spark.sql(

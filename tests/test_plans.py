@@ -175,7 +175,7 @@ def test_multiprobe_lsh_ann_plans_bucket_equi_join(spark):
     spark.read.parquet(table_path(SF_DIR, "embeddings")).createOrReplaceTempView(
         "embeddings"
     )
-    plan = _plan(spark.sql(dual.q_embed_lsh_ann_multiprobe(dual.D("spark"))))
+    plan = _plan(spark.sql(dual.q_embed_lsh_ann(dual.D("spark"), radius=1, n_queries=30)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Join" in plan

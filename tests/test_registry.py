@@ -69,15 +69,15 @@ def test_rotation_reads_committed_files_only():
     )
 
 
-def test_fresh_checkout_falls_back_to_static_priority(monkeypatch):
-    """Without readable CORRECTNESS files (packaged zip / fresh clone), the
-    static priority lists lead — same sort key, everything ties at
-    never-green."""
+def test_fresh_checkout_keeps_registry_order(monkeypatch):
+    """Without readable CORRECTNESS files (packaged zip / fresh clone),
+    every query ties at never-green and the registry keeps its insertion
+    order: pipeline queries first, then the testdata queries."""
+    from openfactverification_spark.testdata_queries import TESTDATA_QUERIES
+
     monkeypatch.setattr(eq, "_last_green_round", lambda: {})
     order = list(eq.build_queries())
-    assert order[0] == "chunk_passages"
-    static = eq._NEVER_DRIVER_GREEN_R3 + eq._ROUND4_PRIORITY
-    assert set(order[: len(static)]) == set(static)
+    assert order == list(eq.PIPELINE_QUERIES) + list(TESTDATA_QUERIES)
 
 
 def test_current_window_is_the_stalest_50():

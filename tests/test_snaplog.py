@@ -457,6 +457,37 @@ def test_schema_evolution_missing_column_kept(spark, tmp_path):
     assert head.filter(F.col("value").isNull()).count() == 20
 
 
+def test_concurrent_add_column_survives_a_racing_append(spark, tmp_path, monkeypatch):
+    """Writer A writes its files, writer B then commits a new column ``x``,
+    and A commits last: A's snapshot must evolve its schema against B's head,
+    so the head keeps ``x`` and B's rows still read back ``'x'``."""
+    t = str(tmp_path / "evo_race")
+    snaplog.append(spark, t, _events(spark, 30))
+    real_write = snaplog._write_data_files
+    state = {"raced": False}
+
+    def write_then_race(df, fs, partition_cols):
+        out = real_write(df, fs, partition_cols)
+        if not state["raced"]:
+            state["raced"] = True
+            b = _events(spark, 20, tag="b").withColumn("x", F.lit("x"))
+            snaplog.append(spark, t, b)
+        return out
+
+    monkeypatch.setattr(snaplog, "_write_data_files", write_then_race)
+    snaplog.append(spark, t, _events(spark, 10, tag="a"))
+    monkeypatch.setattr(snaplog, "_write_data_files", real_write)
+
+    assert [h["version"] for h in snaplog.history(spark, t)] == [1, 2, 3]
+    head = snaplog.read(spark, t)
+    assert "x" in head.columns
+    assert head.count() == 60
+    b_rows = head.filter(F.col("payload").startswith("b"))
+    assert b_rows.count() == 20
+    assert b_rows.filter(F.col("x") == "x").count() == 20
+    assert head.filter(F.col("x").isNotNull()).count() == 20
+
+
 def test_schema_evolution_type_change_rejected(spark, tmp_path):
     t = str(tmp_path / "evo3")
     snaplog.append(spark, t, _events(spark, 10), partition_cols=["day"])
