@@ -4,6 +4,14 @@ plans) and for DuckDB (the driver's oracle). Rendering both dialects from one
 template makes the oracle an *independent engine* check, not a copy of the code.
 
 Dialect seams are isolated in the `D` helper; everything else is ANSI-ish SQL.
+A query body renders each per-dialect spelling through a `D` method (explode
+vs unnest, percentile vs quantile_cont, the day string, MATERIALIZED, the
+broadcast hint, regex literals, string casts), so it branches on `d.spark`
+only where the two engines get different plan shapes or function libraries:
+the LATERAL VIEW band renderer (band_rows_sql), `_dot`, the LSH bucket
+renderer and probe join, posexplode (IVF assignment, n-gram spans), the
+k-means unpivot and matrix rebuild, `_cells_sql`'s argmax, BPE, `windows_cte`,
+the count-min row join and the log-line timestamp.
 """
 
 from __future__ import annotations
@@ -64,6 +72,16 @@ class D:
             return f"aggregate({arr}, cast(0 as double), (acc, x) -> acc + x)"
         return f"list_sum({arr})"
 
+    def explode(self, arr) -> str:
+        """Select-list generator: one output row per element of ``arr``."""
+        return f"explode({arr})" if self.spark else f"unnest({arr})"
+
+    def explode_join(self, arr, col, alias="t") -> str:
+        """FROM-clause join of every row with each element ``col`` of ``arr``."""
+        if self.spark:
+            return f"LATERAL VIEW explode({arr}) {alias} AS {col}"
+        return f"CROSS JOIN (SELECT unnest({arr}) AS {col}) {alias}"
+
     # --- scalars ----------------------------------------------------------
     def split_ws(self, s) -> str:
         return f"split({s}, ' ')" if self.spark else f"string_split({s}, ' ')"
@@ -79,15 +97,11 @@ class D:
             return f"get_json_object({col}, '$.{key}')"
         return f"json_extract_string({col}, '$.{key}')"
 
-    def rlike(self, col, pat) -> str:
-        if self.spark:
-            return f"({col} rlike '{pat}')"
-        return f"regexp_matches({col}, '{pat}')"
-
     def regexp_count(self, col, pat) -> str:
+        """Matches of the regex ``pat`` (unescaped; see re) in ``col``."""
         if self.spark:
-            return f"regexp_count({col}, '{pat}')"
-        return f"len(regexp_extract_all({col}, '{pat}'))"
+            return f"regexp_count({col}, '{self.re(pat)}')"
+        return f"len(regexp_extract_all({col}, '{self.re(pat)}'))"
 
     def div(self, a, b) -> str:
         return f"({a} div {b})" if self.spark else f"({a} // {b})"
@@ -105,11 +119,40 @@ class D:
     def to_str(self, expr) -> str:
         return f"cast({expr} as string)" if self.spark else f"cast({expr} as varchar)"
 
-    def re_replace(self, col, pat, repl) -> str:
-        """Global regex replace (Spark is global by default; DuckDB needs 'g')."""
+    def re(self, pat: str) -> str:
+        """A regex rendered for embedding in a '...' SQL literal: Spark SQL
+        consumes one backslash level inside string literals, DuckDB does not.
+        Single quotes are ''-doubled so a pattern matching apostrophes cannot
+        break the literal."""
+        out = pat.replace("\\", "\\\\") if self.spark else pat
+        return out.replace("'", "''")
+
+    def day(self, ts) -> str:
+        """'yyyy-MM-dd' string of a timestamp."""
         if self.spark:
-            return f"regexp_replace({col}, '{pat}', '{repl}')"
-        return f"regexp_replace({col}, '{pat}', '{repl}', 'g')"
+            return f"cast(cast({ts} as date) as string)"
+        return f"strftime({ts}, '%Y-%m-%d')"
+
+    def percentile(self, col, p) -> str:
+        """Exact interpolated percentile: Spark `percentile` and DuckDB
+        `quantile_cont` share the (1-f)*lo + f*hi definition, so the doubles
+        match bitwise."""
+        return f"{'percentile' if self.spark else 'quantile_cont'}({col}, {p})"
+
+    def materialized(self) -> str:
+        """CTE modifier pinning a multiply-referenced step: DuckDB's binder
+        re-binds every CTE reference; Spark inlines CTEs regardless."""
+        return "" if self.spark else "MATERIALIZED "
+
+    def broadcast(self, alias) -> str:
+        """Spark broadcast-join hint (DuckDB plans its own build side)."""
+        return f"/*+ BROADCAST({alias}) */ " if self.spark else ""
+
+    def re_replace(self, col, pat, repl) -> str:
+        """Global replace of the regex ``pat`` (unescaped; see re) by the SQL
+        expression ``repl`` (Spark is global by default; DuckDB needs 'g')."""
+        g = "" if self.spark else ", 'g'"
+        return f"regexp_replace({col}, '{self.re(pat)}', {repl}{g})"
 
     def last_ignore_nulls(self, col) -> str:
         """last_value ignoring nulls, for windowed carry-forward (the IGNORE
@@ -123,24 +166,47 @@ class D:
 # Text / dedup building blocks
 # ======================================================================================
 
-def words_cte(d: D, text="text") -> str:
-    return d.split_ws(text)
+MINHASH_JACCARD = 0.15  # the minhash dedup verdict: verified jaccard >= this
 
 
-def shingles_expr(d: D, n: int = 3, text="text") -> str:
-    """Distinct word n-gram shingles of `text` as an array<string>."""
-    w = words_cte(d, text)
-    return d.adistinct(
-        d.transform(d.seq(0, f"{d.alen(w)} - {n}"), "i", d.ajoin(d.aslice(w, "i", n)))
-    )
+def words_sql(d: D, cols: str = "doc_id", source: str = "documents") -> str:
+    """``cols`` of ``source`` plus its word array ``w``, staged as a COLUMN
+    for word_ngrams: lambda bodies get no common-subexpression elimination,
+    so a gram lambda over split(text) would re-split the whole document once
+    per gram."""
+    return f"SELECT {cols}, {d.split_ws('text')} AS w FROM {source}"
+
+
+def word_ngrams(d: D, n: int, w: str = "w", hashed: bool = False) -> str:
+    """The word n-grams of the word-array column ``w`` (each h7-hashed when
+    ``hashed``) as one array, or NULL for a doc shorter than n words. The
+    guard is a lazy CASE, not a WHERE: fused predicates can evaluate the
+    transform before a length filter, and Spark's sequence() throws on a
+    negative bound. Exploding NULL yields zero rows in both engines."""
+    gram = d.ajoin(d.aslice(w, "i", n))
+    grams = d.transform(d.seq(0, f"{d.alen(w)} - {n}"), "i", d.h7(gram) if hashed else gram)
+    return f"CASE WHEN {d.alen(w)} >= {n} THEN {grams} END"
+
+
+def shingles_expr(d: D, n: int = 3, w: str = "w") -> str:
+    """Distinct word n-gram shingles of the word-array column ``w`` as an
+    array<string> (NULL below n words)."""
+    return d.adistinct(word_ngrams(d, n, w))
 
 
 def doc_shingles_sql(d: D, n: int = 3) -> str:
     """CTE body: (doc_id, shingle) exploded distinct shingles per document."""
-    sh = shingles_expr(d, n)
-    if d.spark:
-        return f"SELECT doc_id, explode({sh}) AS shingle FROM documents"
-    return f"SELECT doc_id, unnest({sh}) AS shingle FROM documents"
+    return f"SELECT doc_id, {d.explode(shingles_expr(d, n))} AS shingle FROM ({words_sql(d)}) s"
+
+
+STOP_RE = r"\b(the|a|of|and|in)\b"  # stopword count of the quality score
+EN_STOP_RE = r"\b(the|a)\b"  # English-marker count of the heuristic language ID
+
+
+def norm_text(d: D) -> str:
+    """Whitespace-squeezed, trimmed, lower-cased text: the exact-dedup key."""
+    squeezed = d.re_replace("text", r"\s+", "' '")
+    return f"lower(trim({squeezed}))"
 
 
 # ======================================================================================
@@ -150,9 +216,7 @@ def doc_shingles_sql(d: D, n: int = 3) -> str:
 def q_dedup_exact(d: D) -> str:
     """Exact dedup by normalized text hash: keeper = min(doc_id) (SURVEY §4
     'free win: dropDuplicates before enrich')."""
-    norm = "lower(trim(regexp_replace(text, '\\\\s+', ' ')))" if d.spark else (
-        "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-    )
+    norm = norm_text(d)
     return f"""
 SELECT md5({norm}) AS text_hash,
        {d.big('min(doc_id)')} AS keeper_id,
@@ -214,37 +278,41 @@ sig AS (
 sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id)"""
 
 
+def band_rows_sql(d: D, source: str, keep: str, key_col: str, keys: list[str]) -> str:
+    """The one LSH band renderer: ``keep`` columns of every ``source`` row
+    plus (band_idx, ``key_col``), one row per band b with key ``keys[b]``.
+    Spark gets ONE explode over the row (Spark inlines CTEs, so a UNION ALL of
+    per-band selects would recompute an inlined signature aggregation once
+    per band); DuckDB keeps the UNION ALL form (it materializes
+    multiply-referenced CTEs)."""
+    if d.spark:
+        structs = ", ".join(
+            f"named_struct('band_idx', {b}, '{key_col}', {key})" for b, key in enumerate(keys)
+        )
+        return (
+            f"SELECT {keep}, bb.band_idx AS band_idx, bb.{key_col} AS {key_col}\n"
+            f"  FROM {source} LATERAL VIEW explode(array({structs})) t AS bb"
+        )
+    return "\n  UNION ALL\n  ".join(
+        f"SELECT {keep}, {b} AS band_idx, {key} AS {key_col} FROM {source}"
+        for b, key in enumerate(keys)
+    )
+
+
 def minhash_bands_sql(
     d: D, k: int | None = None, bands: int | None = None, sig_ref: str = "sig"
 ) -> str:
     """(doc_id, band_idx, band_key) LSH band stream from a signature relation
-    ``sig_ref`` (columns doc_id, mh0..mh{k-1}). Spark gets ONE explode over
-    the signature row (a UNION ALL of per-band selects would recompute the
-    inlined signature aggregation once per band); DuckDB keeps the UNION ALL
-    form (it materializes multiply-referenced CTEs)."""
+    ``sig_ref`` (columns doc_id, mh0..mh{k-1}): band b's key joins its rows'
+    minhash values with '_'."""
     k = H.MINHASH_K if k is None else k
     bands = H.MINHASH_BANDS if bands is None else bands
-    rows_per_band = k // bands
-
-    def band_key(b: int) -> str:
-        return " || '_' || ".join(
-            f"cast(mh{b * rows_per_band + r} as {'string' if d.spark else 'varchar'})"
-            for r in range(rows_per_band)
-        )
-
-    if d.spark:
-        structs = ", ".join(
-            f"named_struct('band_idx', {b}, 'band_key', {band_key(b)})"
-            for b in range(bands)
-        )
-        return (
-            "SELECT doc_id, bb.band_idx AS band_idx, bb.band_key AS band_key\n"
-            f"  FROM {sig_ref} LATERAL VIEW explode(array({structs})) t AS bb"
-        )
-    return "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, {b} AS band_idx, {band_key(b)} AS band_key FROM {sig_ref}"
+    rows = k // bands
+    keys = [
+        " || '_' || ".join(d.to_str(f"mh{b * rows + r}") for r in range(rows))
         for b in range(bands)
-    )
+    ]
+    return band_rows_sql(d, sig_ref, "doc_id", "band_key", keys)
 
 
 def q_minhash_signatures(d: D, k: int | None = None) -> str:
@@ -255,11 +323,10 @@ def q_minhash_signatures(d: D, k: int | None = None) -> str:
 
 def q_dedup_minhash_lsh(
     d: D,
-    threshold: float = 0.15,
+    threshold: float = MINHASH_JACCARD,
     k: int | None = None,
     bands: int | None = None,
     sh_sql: str | None = None,
-    max_band_bucket: int | None = None,
 ) -> str:
     """MinHash + LSH banding: band buckets -> candidate pairs -> exact-jaccard
     verify. The banded join keys the shuffle on (band_idx, band_hash), so at scale
@@ -271,46 +338,19 @@ def q_dedup_minhash_lsh(
     (band false positives don't blow up the verify join the way the 4x2 toy
     sketch's 1-(1-s^2)^4 curve would at 10^12 docs).
 
-    Spark inlines WITH-CTEs, so `bands` is produced by ONE explode over `sig`
-    (a UNION ALL of per-band selects would recompute the signature aggregation —
-    and its shingle explosion — once per band). DuckDB keeps the UNION ALL form;
-    it materializes multiply-referenced CTEs.
-
-    ``max_band_bucket`` is the hot-bucket guard for skewed corpora: a band
-    value shared by B docs contributes B^2/2 candidate pairs, so one
-    pathological bucket (boilerplate/empty-ish docs hashing identically) can
-    own the whole shuffle at 10^12 docs. With the cap set, buckets larger than
-    the cap are excluded from candidate generation (capped output ⊆ uncapped;
-    the members are near-certain duplicates of each other anyway and are
-    better handled by exact dedup first). The cap is silent and lossy: no
-    metric counts the dropped buckets or the pairs they would have produced.
-    A lossless replacement (collapse identical shingle sets before banding)
-    is an open ROADMAP.md item."""
+    A band value shared by B docs still costs B^2/2 candidate pairs; lossless
+    collapse of identical shingle sets before banding is an open ROADMAP.md
+    item."""
     k = H.MINHASH_K if k is None else k
     bands = H.MINHASH_BANDS if bands is None else bands
-    bands_sql = minhash_bands_sql(d, k=k, bands=bands)
-    cand_src = "bands"
-    cap_cte = ""
-    if max_band_bucket is not None:
-        cap_cte = f"""
-band_sizes AS (
-  SELECT band_idx, band_key, count(*) AS n_docs FROM bands GROUP BY band_idx, band_key
-),
-bands_ok AS (
-  SELECT b.doc_id, b.band_idx, b.band_key
-  FROM bands b JOIN band_sizes s
-    ON b.band_idx = s.band_idx AND b.band_key = s.band_key
-  WHERE s.n_docs <= {max_band_bucket}
-),"""
-        cand_src = "bands_ok"
     return f"""
 WITH {minhash_sig_cte(d, k=k, sh_sql=sh_sql)},
 bands AS (
-  {bands_sql}
-),{cap_cte}
+  {minhash_bands_sql(d, k=k, bands=bands)}
+),
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM {cand_src} a JOIN {cand_src} b
+  FROM bands a JOIN bands b
     ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
 ),
 verified AS (
@@ -329,7 +369,7 @@ WHERE cast(v.n_common as double) / (sa.sz + sb.sz - v.n_common) >= {threshold}""
 
 
 def q_dedup_incremental(
-    d: D, threshold: float = 0.15, pairs_sql: str | None = None
+    d: D, threshold: float = MINHASH_JACCARD, pairs_sql: str | None = None
 ) -> str:
     """Incremental corpus dedup: judge newly-ingested batches against the
     already-accepted corpus — the production loop for continuously-ingested
@@ -354,109 +394,63 @@ def q_dedup_incremental(
 
     Near-dup pairs are the K=128 banded-minhash + exact-jaccard verify of
     q_dedup_minhash_lsh — same sketch, same threshold (``pairs_sql``
-    substitutes a materialized pair table). This single-statement template is
-    the DUCKDB ORACLE form only: the step CTEs chain five deep and Catalyst
-    inlines every CTE reference, so on Spark the nested expansion is
-    exponential in chain depth — the Spark runner
-    (testdata_queries.q_dedup_incremental_runner) instead executes the SAME
-    incr_*_sql fragments as sequential per-batch jobs with each step
-    materialized, which is also the honest production shape (per-ingest-batch
-    append to a SnapLog signature store)."""
-    pairs_body = pairs_sql or q_dedup_minhash_lsh(d, threshold=threshold)
-    # AS MATERIALIZED on every step CTE: DuckDB's BINDER re-binds each CTE
+    substitutes another verified-pair relation). This single-statement
+    template is the DUCKDB ORACLE: its step CTEs chain five deep, and
+    Catalyst inlines every CTE reference, so on Spark the nested expansion is
+    exponential in chain depth. The Spark side is the production shape
+    instead (testdata_queries.q_dedup_incremental_runner): the streaming
+    ingest operator's seed_store on batch 0, then one process_batch per
+    increment against the SnapLog signature store."""
+    # AS MATERIALIZED on every step CTE: DuckDB's binder re-binds each CTE
     # reference, so the five-deep chain expands exponentially at plan time
     # exactly like Catalyst's inlining (EXPLAIN alone hung >60s; materialized
     # it binds each step once and runs in ~2s at sf0.001).
-    m = "" if d.spark else "MATERIALIZED "
-    return f"""
-WITH pairs AS {m}({pairs_body}),
-docs AS {m}({incr_docs_sql(d)}),
-ex AS {m}({incr_ex_sql(d)}),
-b1_seen AS {m}({incr_seen_sql(d, 1, "byy = 0")}),
-b1_intra AS {m}({incr_intra_sql(d, 1, "b1_seen")}),
-b1_new AS {m}({incr_new_sql(d, 1, "b1_seen", "b1_intra")}),
-b2_seen AS {m}(
-  {incr_seen_sql(d, 2, "byy = 0 OR y IN (SELECT doc_id FROM b1_new)")}),
-b2_intra AS {m}({incr_intra_sql(d, 2, "b2_seen")})
-{incr_status_sql(d, 1, "b1_seen", "b1_intra", "b1_new")}
-UNION ALL
-{incr_status_sql(d, 2, "b2_seen", "b2_intra", None)}"""
+    m = d.materialized()
 
+    def batch(b: int, store: str) -> str:
+        return f"""b{b}_seen AS {m}(
+  SELECT x AS doc_id, min(y) AS dup_of FROM ex WHERE bx = {b} AND ({store}) GROUP BY x
+),
+b{b}_intra AS {m}(
+  SELECT x AS doc_id, min(y) AS dup_of FROM ex
+  WHERE bx = {b} AND byy = {b} AND y < x
+    AND x NOT IN (SELECT doc_id FROM b{b}_seen) AND y NOT IN (SELECT doc_id FROM b{b}_seen)
+  GROUP BY x
+),
+b{b}_new AS {m}(
+  SELECT doc_id FROM docs WHERE batch = {b}
+    AND doc_id NOT IN (SELECT doc_id FROM b{b}_seen)
+    AND doc_id NOT IN (SELECT doc_id FROM b{b}_intra)
+)"""
 
-def incr_docs_sql(d: D, docs_ref: str = "documents") -> str:
-    """(doc_id, batch) with the deterministic doc_id % 3 batch assignment."""
-    return (
-        f"SELECT {d.big('doc_id')} AS doc_id, cast(doc_id % 3 as int) AS batch "
-        f"FROM {docs_ref}"
+    status = "\nUNION ALL\n".join(
+        f"SELECT doc_id, {b} AS batch_id, '{label}' AS status, {dup_of} AS dup_of "
+        f"FROM b{b}_{step}"
+        for b in (1, 2)
+        for label, step, dup_of in (
+            ("dup_of_seen", "seen", "dup_of"),
+            ("dup_in_batch", "intra", "dup_of"),
+            ("new", "new", "cast(NULL as bigint)"),
+        )
     )
-
-
-def incr_ex_sql(d: D, pairs_ref: str = "pairs", docs_ref: str = "docs") -> str:
-    """Directed batch-labelled near-dup edges: each undirected verified pair
-    twice, x = the doc being judged, y = its partner, bx/byy their batches."""
     return f"""
+WITH pairs AS {m}({pairs_sql or q_dedup_minhash_lsh(d, threshold=threshold)}),
+docs AS {m}(
+  SELECT {d.big('doc_id')} AS doc_id, cast(doc_id % 3 as int) AS batch FROM documents
+),
+ex AS {m}(
   SELECT e.x, e.y, dx.batch AS bx, dy.batch AS byy
   FROM (
-    SELECT p.id_a AS x, p.id_b AS y FROM {pairs_ref} p
+    SELECT id_a AS x, id_b AS y FROM pairs
     UNION ALL
-    SELECT p.id_b AS x, p.id_a AS y FROM {pairs_ref} p
+    SELECT id_b AS x, id_a AS y FROM pairs
   ) e
-  JOIN {docs_ref} dx ON dx.doc_id = e.x
-  JOIN {docs_ref} dy ON dy.doc_id = e.y"""
-
-
-def incr_seen_sql(d: D, batch: int, seen_clause: str, ex_ref: str = "ex") -> str:
-    """Batch-`batch` docs with a verified partner in the store (`seen_clause`
-    is the partner-side predicate defining the store at this batch)."""
-    return (
-        f"SELECT x AS doc_id, min(y) AS dup_of FROM {ex_ref} "
-        f"WHERE bx = {batch} AND ({seen_clause}) GROUP BY x"
-    )
-
-
-def incr_intra_sql(d: D, batch: int, seen_ref: str, ex_ref: str = "ex") -> str:
-    """Batch-`batch` docs (not store-dups) with a smaller same-batch partner
-    that is itself not a store-dup: keeper-by-min, one level."""
-    return f"""
-  SELECT e.x AS doc_id, min(e.y) AS dup_of
-  FROM {ex_ref} e
-  WHERE e.bx = {batch} AND e.byy = {batch} AND e.y < e.x
-    AND e.x NOT IN (SELECT doc_id FROM {seen_ref})
-    AND e.y NOT IN (SELECT doc_id FROM {seen_ref})
-  GROUP BY e.x"""
-
-
-def incr_new_sql(
-    d: D, batch: int, seen_ref: str, intra_ref: str, docs_ref: str = "docs"
-) -> str:
-    """Batch-`batch` docs accepted into the store: neither status applies."""
-    return f"""
-  SELECT doc_id FROM {docs_ref} WHERE batch = {batch}
-    AND doc_id NOT IN (SELECT doc_id FROM {seen_ref})
-    AND doc_id NOT IN (SELECT doc_id FROM {intra_ref})"""
-
-
-def incr_status_sql(
-    d: D,
-    batch: int,
-    seen_ref: str,
-    intra_ref: str,
-    new_ref: str | None,
-    docs_ref: str = "docs",
-) -> str:
-    """The batch's full status rows. ``new_ref=None`` derives the new-set
-    inline (used when it has no downstream consumer)."""
-    new_body = (
-        f"SELECT doc_id FROM {new_ref}"
-        if new_ref is not None
-        else incr_new_sql(d, batch, seen_ref, intra_ref, docs_ref)
-    )
-    return f"""SELECT doc_id, {batch} AS batch_id, 'dup_of_seen' AS status, dup_of FROM {seen_ref}
-UNION ALL
-SELECT doc_id, {batch} AS batch_id, 'dup_in_batch' AS status, dup_of FROM {intra_ref}
-UNION ALL
-SELECT doc_id, {batch} AS batch_id, 'new' AS status, cast(NULL as bigint) AS dup_of
-FROM ({new_body}) nw"""
+  JOIN docs dx ON dx.doc_id = e.x
+  JOIN docs dy ON dy.doc_id = e.y
+),
+{batch(1, "byy = 0")},
+{batch(2, "byy = 0 OR y IN (SELECT doc_id FROM b1_new)")}
+{status}"""
 
 
 def q_dedup_simhash(d: D, max_hamming: int = 6) -> str:
@@ -472,45 +466,25 @@ WHERE bit_count({d.xor('a.simhash', 'b.simhash')}) <= {max_hamming}"""
 
 
 def simhash_cte(d: D, sim_sql: str | None = None) -> str:
-    """CTE chain ending in `sim(doc_id, simhash)` — shared by the all-pairs
-    baseline and the banded scale path. The word hash is SIMHASH_BITS wide
-    (md5 prefix), so every simhash bit carries signal — a hash narrower than
-    the sketch would pin the upper bits to a constant and void those bands.
-
-    ``sim_sql`` overrides the whole chain with a caller-supplied relation
-    (e.g. a cached temp view): consumers reference `sim` twice (pair self-join)
-    and Spark inlines CTEs, so the inline form runs the word explode + bit-sum
-    aggregation twice; at scale you materialize the sketch table once."""
-    if sim_sql is not None:
-        return f"sim AS ({sim_sql})"
-    bits = H.SIMHASH_BITS
-    h = H.hash_prefix("word", bits // 4, d.name)
-    bit_sums = ",\n         ".join(
-        f"sum(CASE WHEN ({d.shr('h', b)} & 1) = 1 THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(bits)
-    )
-    sim = " + ".join(f"(CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(bits))
-    explode_words = (
-        f"SELECT doc_id, explode({d.adistinct(words_cte(d))}) AS word FROM documents"
-        if d.spark
-        else f"SELECT doc_id, unnest({d.adistinct(words_cte(d))}) AS word FROM documents"
-    )
-    return f"""w AS ({explode_words}),
-hashes AS (SELECT doc_id, {h} AS h FROM w),
-bitsum AS (
-  SELECT doc_id, {bit_sums}
-  FROM hashes GROUP BY doc_id
-),
-sim AS (SELECT doc_id, cast({sim} as bigint) AS simhash FROM bitsum)"""
+    """CTE `sim(doc_id, simhash)` — shared by the all-pairs baseline and the
+    banded scale path. ``sim_sql`` substitutes a caller-supplied relation
+    (e.g. a cached temp view): consumers reference `sim` twice (pair
+    self-join) and Spark inlines CTEs, so the inline form runs the word
+    explode + bit-sum aggregation twice; at scale you materialize the sketch
+    table once."""
+    return f"sim AS ({sim_sql or simhash_plain_sql(d)})"
 
 
 def simhash_plain_sql(d: D) -> str:
     """The `sim(doc_id, simhash)` relation as ONE nested-subquery SELECT (no
-    WITH clause). Used by the Spark materialization runner: a cached DataFrame
-    built from a WITH-CTE plan is NOT substituted by the CacheManager when the
-    same view is referenced inside a larger query (the WithCTE node defeats
-    the canonical subtree match — observed on 4.1), while the plain nested
-    form cache-hits exactly like the minhash shingle view."""
+    WITH clause). The word hash is SIMHASH_BITS wide (md5 prefix), so every
+    simhash bit carries signal — a hash narrower than the sketch would pin
+    the upper bits to a constant and void those bands. The nested form is
+    also what the Spark materialization runner caches: a cached DataFrame
+    built from a WITH-CTE plan is NOT substituted by the CacheManager when
+    the same view is referenced inside a larger query (the WithCTE node
+    defeats the canonical subtree match — observed on 4.1), while the plain
+    nested form cache-hits exactly like the minhash shingle view."""
     bits = H.SIMHASH_BITS
     h = H.hash_prefix("word", bits // 4, d.name)
     bit_sums = ",\n           ".join(
@@ -518,17 +492,26 @@ def simhash_plain_sql(d: D) -> str:
         for b in range(bits)
     )
     sim = " + ".join(f"(CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(bits))
-    explode_words = (
-        f"SELECT doc_id, explode({d.adistinct(words_cte(d))}) AS word FROM documents"
-        if d.spark
-        else f"SELECT doc_id, unnest({d.adistinct(words_cte(d))}) AS word FROM documents"
-    )
+    words = d.explode(d.adistinct(d.split_ws("text")))
     return f"""SELECT doc_id, cast({sim} as bigint) AS simhash
 FROM (
   SELECT doc_id, {bit_sums}
-  FROM (SELECT doc_id, {h} AS h FROM ({explode_words}) w) hx
+  FROM (SELECT doc_id, {h} AS h FROM (SELECT doc_id, {words} AS word FROM documents) w) hx
   GROUP BY doc_id
 ) bitsum"""
+
+
+def simhash_bands_sql(d: D, max_hamming: int) -> str:
+    """(doc_id, simhash, band_idx, band_val) from ``sim``: the sketch's bits
+    split into max_hamming + 1 contiguous bands."""
+    bits, n_bands = H.SIMHASH_BITS, max_hamming + 1
+    base, rem = divmod(bits, n_bands)
+    widths = [base + (1 if i < rem else 0) for i in range(n_bands)]
+    keys = [
+        f"({d.shr('simhash', sum(widths[:i]))} & {(1 << wd) - 1})"
+        for i, wd in enumerate(widths)
+    ]
+    return band_rows_sql(d, "sim", "doc_id, simhash", "band_val", keys)
 
 
 def q_dedup_simhash_banded(d: D, max_hamming: int = 6, sim_sql: str | None = None) -> str:
@@ -540,32 +523,10 @@ def q_dedup_simhash_banded(d: D, max_hamming: int = 6, sim_sql: str | None = Non
     all-pairs cross join of q_dedup_simhash. Exact bit_count verify keeps the
     output identical to the baseline. Band selectivity = 2^(bits/(k+1)) values
     per band — the reason the sketch is 48-bit (see functions/hashing)."""
-    bits, n_bands = H.SIMHASH_BITS, max_hamming + 1
-    base, rem = divmod(bits, n_bands)
-    widths = [base + (1 if i < rem else 0) for i in range(n_bands)]
-    offsets = [sum(widths[:i]) for i in range(n_bands)]
-    band_rows = []
-    for i, (off, wd) in enumerate(zip(offsets, widths)):
-        mask = (1 << wd) - 1
-        band_rows.append(
-            f"SELECT doc_id, simhash, {i} AS band_idx, "
-            f"({d.shr('simhash', off)} & {mask}) AS band_val FROM sim"
-        )
-    if d.spark:
-        structs = ", ".join(
-            f"named_struct('band_idx', {i}, 'band_val', {d.shr('simhash', off)} & {(1 << wd) - 1})"
-            for i, (off, wd) in enumerate(zip(offsets, widths))
-        )
-        bands_sql = (
-            "SELECT doc_id, simhash, bb.band_idx AS band_idx, bb.band_val AS band_val\n"
-            f"  FROM sim LATERAL VIEW explode(array({structs})) t AS bb"
-        )
-    else:
-        bands_sql = "\n  UNION ALL\n  ".join(band_rows)
     return f"""
 WITH {simhash_cte(d, sim_sql=sim_sql)},
 bands AS (
-  {bands_sql}
+  {simhash_bands_sql(d, max_hamming)}
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, a.simhash AS sim_a, b.doc_id AS id_b, b.simhash AS sim_b
@@ -630,14 +591,12 @@ def q_training_ready(d: D, min_quality: float = 0.35, lang: str = "en") -> str:
     training set' query that chains dedup + language-ID + quality scoring in
     ONE pass (each piece is separately oracle-verified; this verifies their
     composition). Emits the surviving docs with their quality features."""
-    norm = "lower(trim(regexp_replace(text, '\\\\s+', ' ')))" if d.spark else (
-        "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-    )
-    w = words_cte(d)
+    norm = norm_text(d)
+    w = d.split_ws("text")
     n_tok = d.alen(w)
     n_uniq = d.alen(d.adistinct(w))
-    stop = d.regexp_count("text", r"\\b(the|a|of|and|in)\\b" if d.spark else r"\b(the|a|of|and|in)\b")
-    en_stop = d.regexp_count("text", r"\\b(the|a)\\b" if d.spark else r"\b(the|a)\b")
+    stop = d.regexp_count("text", STOP_RE)
+    en_stop = d.regexp_count("text", EN_STOP_RE)
     quality = (
         f"round(least(cast({n_tok} as double) / 50, cast(1 as double)) * 0.5"
         f" + (cast({n_uniq} as double) / {n_tok}) * 0.3"
@@ -852,14 +811,9 @@ def q_clean_text(d: D, cap: int = 120) -> str:
     """P4/P5/P8: newline squeeze + whitespace normalize + truncation cap +
     length-band filter (the reference's crawl-text hygiene,
     web_util.py:90-93 / serper_retriever.py:105 / Retriever/base.py:219-224)."""
-    if d.spark:
-        # Spark SQL string literals consume one backslash level; replacement
-        # via chr(10) avoids Java replacement-string escape pitfalls.
-        squeezed = "regexp_replace(text, '\\\\n+', chr(10))"
-        norm = f"regexp_replace(trim({squeezed}), '\\\\s+', ' ')"
-    else:
-        squeezed = "regexp_replace(text, '\\n+', chr(10), 'g')"
-        norm = f"regexp_replace(trim({squeezed}), '\\s+', ' ', 'g')"
+    # replacement via chr(10) avoids Java replacement-string escape pitfalls
+    squeezed = d.re_replace("text", r"\n+", "chr(10)")
+    norm = d.re_replace(f"trim({squeezed})", r"\s+", "' '")
     return f"""
 WITH cleaned AS (
   SELECT doc_id, substring({norm}, 1, {cap}) AS clean_text,
@@ -876,10 +830,10 @@ WHERE full_len BETWEEN 3 AND 100000"""
 def q_text_stats(d: D) -> str:
     """Token counting + quality scoring (length, distinct ratio, stopword ratio)
     — the text-analysis battery, all JVM-side expressions."""
-    w = words_cte(d)
+    w = d.split_ws("text")
     n_tok = d.alen(w)
     n_uniq = d.alen(d.adistinct(w))
-    stop = d.regexp_count("text", r"\\b(the|a|of|and|in)\\b" if d.spark else r"\b(the|a|of|and|in)\b")
+    stop = d.regexp_count("text", STOP_RE)
     return f"""
 SELECT {d.big('doc_id')} AS doc_id,
        cast({n_tok} as int) AS n_tokens,
@@ -897,8 +851,8 @@ def q_lang_id(d: D) -> str:
     """Heuristic language ID vs the labeled lang column: confusion counts.
     (The real signal at scale is char n-gram profiles in a pandas UDF; this is
     the pure-SQL stopword-heuristic baseline.)"""
-    en_stop = d.regexp_count("text", r"\\b(the|a)\\b" if d.spark else r"\b(the|a)\b")
-    w = words_cte(d)
+    en_stop = d.regexp_count("text", EN_STOP_RE)
+    w = d.split_ws("text")
     pred = f"CASE WHEN cast({en_stop} as double) / {d.alen(w)} >= 0.05 THEN 'en' ELSE 'other' END"
     return f"""
 SELECT lang, {pred} AS predicted, {d.big('count(*)')} AS n
@@ -966,13 +920,9 @@ FROM scored GROUP BY lang, {pred}"""
 def q_chunk_documents(d: D, size: int = 10, step: int = 8) -> str:
     """P9 sliding-window chunking (reference base.py:201-235: passages of 10
     sentences stepping 8) over words; pure array ops, no UDF."""
-    w = words_cte(d)
+    w = d.split_ws("text")
     starts = d.seq(0, f"{d.alen(w)} - 1", step)
-    if d.spark:
-        expl = f"explode({starts}) AS start_word"
-        from_clause = f"(SELECT doc_id, text, {expl} FROM documents)"
-    else:
-        from_clause = f"(SELECT doc_id, text, unnest({starts}) AS start_word FROM documents)"
+    from_clause = f"(SELECT doc_id, text, {d.explode(starts)} AS start_word FROM documents)"
     chunk = d.ajoin(d.aslice(w, "start_word", size))
     return f"""
 SELECT {d.big('doc_id')} AS doc_id,
@@ -1396,11 +1346,7 @@ def q_embed_lsh_ann(
     (SELECT DISTINCT), so n_cand_q (``stats=True``, for recall_with_cost_sql)
     counts vectors actually cosine-scored — the honest paid cost. ``bucket``
     is the query's own table-0 bucket."""
-    deltas = ", ".join(str(x) for x in _probe_deltas(planes_per_table, radius))
-    if d.spark:
-        delta_join = f"LATERAL VIEW explode(array({deltas})) t AS delta"
-    else:
-        delta_join = f"CROSS JOIN (SELECT unnest([{deltas}]) AS delta) t"
+    delta_join = d.explode_join(d.arr(_probe_deltas(planes_per_table, radius)), "delta")
     q_filter = "" if n_queries is None else f" WHERE vec_id < {n_queries}"
     cos = f"{_dot(d, 'q.embedding', 'c.embedding')} / (q.nrm * c.nrm)"
     cand_col, cand_out = _cand_stats(d, stats)
@@ -1656,7 +1602,7 @@ def q_events_daily_route(d: D) -> str:
     """U5 router on the events stream: tag -> per-sink daily counts."""
     route = ("CASE WHEN event_type IN ('purchase','signup') THEN 'conversion' "
              "WHEN event_type = 'error' THEN 'error' ELSE 'engagement' END")
-    day = "cast(cast(ts as date) as string)" if d.spark else "strftime(ts, '%Y-%m-%d')"
+    day = d.day("ts")
     return f"""
 SELECT {day} AS day, {route} AS route,
        {d.big('count(*)')} AS n_events,
@@ -1744,10 +1690,7 @@ def q_events_window_join_binned(d: D, bin_secs: int = 4 * 3600) -> str:
         d.div(d.epoch_sec("w_start"), bin_secs),
         d.div(f"({end_sec} - 1)", bin_secs),
     )
-    if d.spark:
-        wbins_sql = f"SELECT window_id, w_start, w_end, explode({w_bins}) AS bin FROM windows"
-    else:
-        wbins_sql = f"SELECT window_id, w_start, w_end, unnest({w_bins}) AS bin FROM windows"
+    wbins_sql = f"SELECT window_id, w_start, w_end, {d.explode(w_bins)} AS bin FROM windows"
     return f"""
 WITH windows AS ({windows_cte(d)}),
 wbins AS (
@@ -1775,9 +1718,8 @@ def q_events_value_percentiles(d: D) -> str:
     it has no cross-engine-exact oracle by nature, so this exact form is the
     registered anchor and tests/test_dedup_similarity.py bounds the sketch's
     error against it."""
-    fn = "percentile" if d.spark else "quantile_cont"
     cols = ",\n       ".join(
-        f"round({fn}(value, {p}), 6) AS p{int(p * 100)}" for p in (0.5, 0.9, 0.99)
+        f"round({d.percentile('value', p)}, 6) AS p{int(p * 100)}" for p in (0.5, 0.9, 0.99)
     )
     return f"""
 SELECT event_type,
@@ -1806,12 +1748,6 @@ FROM w WHERE event_type = 'error'"""
 # Training-data hygiene: PII redaction, repetition quality gates, retrieval scoring
 # ======================================================================================
 
-def _re(d: D, pat: str) -> str:
-    """Render a regex for embedding in a SQL string literal: Spark SQL consumes
-    one backslash level inside '...' literals, DuckDB does not."""
-    return pat.replace("\\", "\\\\") if d.spark else pat
-
-
 PII_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PII_PHONE_RE = r"\b\d{3}-\d{3}-\d{4}\b"
 PII_IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
@@ -1831,7 +1767,7 @@ def q_pii_redact(d: D) -> str:
     Scale note: pure per-row regexp_replace/regexp_count — narrow, zero
     shuffle, whole-stage codegen; the scan prunes to (doc_id, text). At
     10^12 docs this stage is IO-bound, exactly as it should be."""
-    email, phone, ip = _re(d, PII_EMAIL_RE), _re(d, PII_PHONE_RE), _re(d, PII_IPV4_RE)
+    email, phone, ip = PII_EMAIL_RE, PII_PHONE_RE, PII_IPV4_RE
     planted = (
         "CASE WHEN doc_id % 4 = 0 THEN text || ' reach me at user' || "
         f"{d.to_str('doc_id')} || '@mail-example.com today'\n"
@@ -1842,9 +1778,9 @@ def q_pii_redact(d: D) -> str:
         "         ELSE text END"
     )
     redacted = d.re_replace(
-        d.re_replace(d.re_replace("text", email, "<EMAIL>"), phone, "<PHONE>"),
+        d.re_replace(d.re_replace("text", email, "'<EMAIL>'"), phone, "'<PHONE>'"),
         ip,
-        "<IP>",
+        "'<IP>'",
     )
     return f"""
 WITH seeded AS (
@@ -1874,26 +1810,12 @@ def q_quality_repetition(d: D, top_frac_max: float = 0.20, dup_frac_max: float =
     matter *within* one doc's gram set (~10^2-10^4 distinct grams), where the
     collision odds are negligible and identical in both engines.
 
-    Docs shorter than 2 words produce a NULL gram array via a lazy CASE guard
-    (NOT a WHERE: fused predicates can evaluate the transform before a length
-    filter, and Spark's sequence() throws on negative bounds — the
-    q_decontaminate_eval rule); exploding NULL yields zero rows in both
-    engines, so sub-2-word docs simply carry no gram and drop out of the
+    Docs shorter than 2 words get no gram (word_ngrams) and drop out of the
     repetition stats, which is the correct Gopher semantics (no bigrams →
     nothing to gate on)."""
-    w = words_cte(d)
-    garr = (
-        f"CASE WHEN {d.alen('w')} >= 2 THEN "
-        + d.transform(d.seq(0, f"{d.alen('w')} - 2"), "i", d.ajoin(d.aslice("w", "i", 2)))
-        + " END"
-    )
-    staged = f"SELECT doc_id, {w} AS w FROM documents"
-    if d.spark:
-        grams_from = f"SELECT doc_id, explode({garr}) AS gram FROM ({staged}) s"
-    else:
-        grams_from = f"SELECT doc_id, unnest({garr}) AS gram FROM ({staged}) s"
+    grams = d.explode(word_ngrams(d, 2))
     return f"""
-WITH grams AS ({grams_from}),
+WITH grams AS (SELECT doc_id, {grams} AS gram FROM ({words_sql(d)}) s),
 freq AS (
   SELECT doc_id, {d.h7('gram')} AS gh, count(*) AS c
   FROM grams GROUP BY doc_id, {d.h7('gram')}
@@ -1913,26 +1835,13 @@ FROM agg"""
 
 def ngram_spans_grams_sql(d: D, n: int = 8) -> str:
     """The (doc_id, pos, gh) gram stream of q_dedup_ngram_spans: position +
-    28-bit hash of each n-word gram, NULL-guarded for sub-n-word docs (lazy
-    CASE, not WHERE — fused predicates can run the transform before a length
-    filter and Spark's sequence() throws on negative bounds)."""
-    w = words_cte(d)
-    garr = (
-        f"CASE WHEN {d.alen('w')} >= {n} THEN "
-        + d.transform(
-            d.seq(0, f"{d.alen('w')} - {n}"), "i", d.h7(d.ajoin(d.aslice("w", "i", n)))
-        )
-        + " END"
-    )
-    staged = f"SELECT doc_id, {w} AS w FROM documents"
+    28-bit hash of each n-word gram (word_ngrams; none below n words)."""
+    arred = f"SELECT doc_id, {word_ngrams(d, n, hashed=True)} AS garr FROM ({words_sql(d)}) s"
     if d.spark:
-        return (
-            f"SELECT doc_id, pos, gh FROM (SELECT doc_id, {garr} AS garr FROM ({staged}) s) "
-            f"LATERAL VIEW posexplode(garr) AS pos, gh"
-        )
+        return f"SELECT doc_id, pos, gh FROM ({arred}) LATERAL VIEW posexplode(garr) AS pos, gh"
     return (
         f"SELECT doc_id, CAST(unnest(range(0, len(garr))) AS INT) AS pos, unnest(garr) AS gh "
-        f"FROM (SELECT doc_id, {garr} AS garr FROM ({staged}) s) t"
+        f"FROM ({arred}) t"
     )
 
 
@@ -1967,17 +1876,10 @@ def q_dedup_ngram_spans(
     28-bit gram-hash collisions can mark a false duplicate; production uses the
     same plan over a 64-bit hash (the narrow column width is what matters).
 
-    Docs shorter than n words get a NULL gram array via a lazy CASE (ELSE
-    NULL) guard — the q_decontaminate_eval rule: a plain WHERE is not enough
-    because fused predicates can evaluate the transform before the length
-    filter and Spark's sequence() throws on negative bounds. Exploding NULL
-    yields zero rows in both engines; short docs are restored by the final
-    left join with zero coverage.
-
-    The word array is staged as a COLUMN before the gram lambda: lambda bodies
-    get no common-subexpression elimination, so referencing split(text) inside
-    the transform would re-split the whole document once per gram — O(len *
-    n_grams) per doc (measured ~2x on this corpus; far worse on long docs).
+    Docs shorter than n words get no gram (word_ngrams) and are restored by
+    the final left join with zero coverage. The word array is staged as a
+    column (words_sql; measured ~2x on this corpus against re-splitting per
+    gram).
 
     The `grams` stream is consumed TWICE (the gstats pre-agg and the join-back
     side) and Spark inlines CTEs, so the inline form re-runs the explode+hash
@@ -1988,7 +1890,7 @@ def q_dedup_ngram_spans(
     stream once, aggregate and join from it'. The DuckDB oracle keeps the
     self-contained template (DuckDB materializes multi-referenced CTEs)."""
     grams_from = grams_sql or ngram_spans_grams_sql(d, n)
-    w = words_cte(d)
+    w = d.split_ws("text")
     prev_end = (
         f"max(pos + {n}) OVER (PARTITION BY doc_id ORDER BY pos "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
@@ -2058,21 +1960,8 @@ def q_decontaminate_eval(d: D, n: int = 13) -> str:
         strings (~8 bytes/gram broadcast instead of ~100). 28-bit collisions
         can flag a false positive; production uses a 64-bit prefix with the
         identical plan.
-      * docs shorter than n words contribute zero grams: the gram array is a
-        CASE whose ELSE is NULL — conditional branches are evaluated lazily,
-        so Spark's sequence() never sees negative bounds (a plain WHERE guard
-        is NOT enough: subexpression elimination can evaluate the transform
-        inside a fused predicate before the length filter), and exploding
-        NULL yields zero rows in both engines. Short docs are restored by the
-        final left join, flagged clean with n_grams = 0."""
-    w = words_cte(d)
-    garr = (
-        f"CASE WHEN {d.alen('w')} >= {n} THEN "
-        + d.transform(
-            d.seq(0, f"{d.alen('w')} - {n}"), "i", d.h7(d.ajoin(d.aslice("w", "i", n)))
-        )
-        + " END"
-    )
+      * docs shorter than n words contribute zero grams (word_ngrams); they
+        are restored by the final left join, flagged clean with n_grams = 0."""
     seeded = (
         "SELECT doc_id,\n"
         f"         CASE WHEN doc_id % 20 = 0 THEN text || ' {DECON_CANARY}'\n"
@@ -2081,14 +1970,9 @@ def q_decontaminate_eval(d: D, n: int = 13) -> str:
         "         (doc_id % 20 = 0) AS is_eval\n"
         "  FROM documents"
     )
-    staged = f"SELECT doc_id, is_eval, {w} AS w FROM seeded"
-    arred = f"SELECT doc_id, is_eval, {garr} AS garr FROM ({staged}) s"
-    if d.spark:
-        grams_from = f"SELECT doc_id, is_eval, explode(garr) AS gh FROM ({arred}) g"
-        hint = "/*+ BROADCAST(e) */ "
-    else:
-        grams_from = f"SELECT doc_id, is_eval, unnest(garr) AS gh FROM ({arred}) g"
-        hint = ""
+    staged = words_sql(d, "doc_id, is_eval", "seeded")
+    arred = f"SELECT doc_id, is_eval, {word_ngrams(d, n, hashed=True)} AS garr FROM ({staged}) s"
+    grams_from = f"SELECT doc_id, is_eval, {d.explode('garr')} AS gh FROM ({arred}) g"
     return f"""
 WITH seeded AS (
   {seeded}
@@ -2100,7 +1984,7 @@ eg AS (
   SELECT DISTINCT gh FROM grams WHERE is_eval
 ),
 hits AS (
-  SELECT {hint}t.doc_id, count(e.gh) AS n_hits, count(*) AS n_grams
+  SELECT {d.broadcast('e')}t.doc_id, count(e.gh) AS n_hits, count(*) AS n_grams
   FROM grams t LEFT JOIN eg e ON t.gh = e.gh
   WHERE NOT t.is_eval
   GROUP BY t.doc_id
@@ -2140,24 +2024,10 @@ def q_quality_perplexity(d: D, k_smooth: float = 0.5, ppl_max: float = 30.0) -> 
       * the per-doc avg collapses map-side (a doc's grams are co-located);
         vocabulary size enters as an uncorrelated scalar subquery, not a
         cross join.
-      * sub-2-word docs produce a NULL bigram array via the lazy CASE guard
-        (q_decontaminate_eval rule — WHERE does not protect sequence()
-        bounds); exploding NULL is zero rows in both engines, so such docs
-        have no bigrams to score and drop out, the same undefined-perplexity
-        semantics CCNet assigns to empty text."""
-    w = words_cte(d)
-    garr2 = (
-        f"CASE WHEN {d.alen('w')} >= 2 THEN "
-        + d.transform(d.seq(0, f"{d.alen('w')} - 2"), "i", d.ajoin(d.aslice("w", "i", 2)))
-        + " END"
-    )
-    staged = f"SELECT doc_id, {w} AS w FROM documents"
-    if d.spark:
-        bg_from = f"SELECT doc_id, explode({garr2}) AS gram FROM ({staged}) s"
-        uni_from = f"SELECT explode({w}) AS u FROM documents"
-    else:
-        bg_from = f"SELECT doc_id, unnest({garr2}) AS gram FROM ({staged}) s"
-        uni_from = f"SELECT unnest({w}) AS u FROM documents"
+      * sub-2-word docs have no bigrams (word_ngrams) to score and drop out,
+        the same undefined-perplexity semantics CCNet assigns to empty text."""
+    bg_from = f"SELECT doc_id, {d.explode(word_ngrams(d, 2))} AS gram FROM ({words_sql(d)}) s"
+    uni_from = f"SELECT {d.explode(d.split_ws('text'))} AS u FROM documents"
     logp = (
         f"ln((c2.c2 + {k_smooth}) / (c1.c1 + {k_smooth} * (SELECT vocab FROM v)))"
     )
@@ -2203,11 +2073,8 @@ def q_bm25_search(d: D, terms: tuple = ("spark", "merge", "vector"), k: int = 10
     rounded to 6 dp *before* ranking so float summation order can't flip ranks
     between engines."""
     in_list = ", ".join(f"'{t}'" for t in terms)
-    if d.spark:
-        words_from = f"SELECT doc_id, explode({words_cte(d)}) AS word FROM documents"
-    else:
-        words_from = f"SELECT doc_id, unnest({words_cte(d)}) AS word FROM documents"
-    dl = d.alen(words_cte(d))
+    words_from = f"SELECT doc_id, {d.explode(d.split_ws('text'))} AS word FROM documents"
+    dl = d.alen(d.split_ws("text"))
     idf = "ln(1 + ((SELECT n_docs FROM stats) - df + 0.5) / (df + 0.5))"
     return f"""
 WITH stats AS (
@@ -2285,7 +2152,7 @@ def q_events_distinct_daily(d: D) -> str:
     partitions and days — the property exact distinct fundamentally lacks);
     tests/test_sketches.py bounds both against this anchor and checks sketch
     mergeability (union of per-day sketches ≡ global estimate)."""
-    day = "cast(cast(ts as date) as string)" if d.spark else "strftime(ts, '%Y-%m-%d')"
+    day = d.day("ts")
     return f"""
 SELECT {day} AS day,
        {d.big('count(DISTINCT user_id)')} AS n_users,
@@ -2299,7 +2166,7 @@ def pack_sequences_oracle(cap: int = 256) -> str:
     (bin, fill, accumulated rows) per stream — the chunk_passages_oracle
     pattern for sequential-per-key operators."""
     d = D("duckdb")
-    n_tok = d.alen(words_cte(d))
+    n_tok = d.alen(d.split_ws("text"))
     return f"""
 WITH RECURSIVE sized AS (
   SELECT source, doc_id, cast({n_tok} as int) AS n_tokens FROM documents
@@ -2599,7 +2466,7 @@ def recall_with_cost_sql(d: D, ann_sql: str, bf_sql: str, lead_ctes: str = "") -
     (lead_ctes = the fixture CTE). The two sub-queries are each referenced
     once, so Spark's CTE inlining costs nothing extra; DuckDB pins them
     MATERIALIZED only to spare its binder the doubled tree."""
-    m = "" if d.spark else "MATERIALIZED "
+    m = d.materialized()
     return f"""
 WITH {lead_ctes}ann AS {m}({ann_sql}),
 bf AS {m}({bf_sql}),
@@ -2660,7 +2527,6 @@ def q_tokenize_bpe(d: D) -> str:
   FROM (SELECT word, {fold} AS tokstr
         FROM (SELECT word, {raw} AS raw FROM vocab) r) t
 )"""
-        hint = "/*+ BROADCAST(vt) */ "
         prefix = "WITH "
     else:
         mvals = ", ".join(f"({i}, '{p}', '{r}')" for i, (p, r) in enumerate(merges))
@@ -2682,7 +2548,6 @@ vt AS (
          length(tokstr) - length(replace(tokstr, '|', '')) + 1 AS n_tok
   FROM steps WHERE i = {nm}
 )"""
-        hint = ""
         prefix = "WITH RECURSIVE "
     return f"""
 {prefix}words AS ({words_from}),
@@ -2693,7 +2558,7 @@ vocab AS (
   SELECT DISTINCT word FROM words
 ),
 {vt_cte}
-SELECT {hint}{d.big('wc.doc_id')} AS doc_id,
+SELECT {d.broadcast('vt')}{d.big('wc.doc_id')} AS doc_id,
        cast(sum(wc.cnt) as int) AS n_words,
        cast(sum(wc.cnt * vt.n_chars) as int) AS n_chars,
        cast(sum(wc.cnt * vt.n_tok) as int) AS n_bpe_tokens,
@@ -2710,13 +2575,8 @@ def q_corpus_top_terms(d: D, k: int = 25) -> str:
     sketch swap at 10^12 tokens is count-min / space-saving over the same
     exploded stream (Spark ships count_min_sketch as an aggregate), with this
     exact form as the anchor."""
-    w = words_cte(d)
-    if d.spark:
-        terms_from = f"SELECT explode({w}) AS term FROM documents"
-    else:
-        terms_from = f"SELECT unnest({w}) AS term FROM documents"
     return f"""
-WITH terms AS ({terms_from})
+WITH terms AS (SELECT {d.explode(d.split_ws('text'))} AS term FROM documents)
 SELECT term, {d.big('count(*)')} AS n
 FROM terms GROUP BY term
 ORDER BY n DESC, term LIMIT {k}"""
@@ -2756,13 +2616,12 @@ def q_events_winsorize(d: D, p_lo: float = 0.05, p_hi: float = 0.95) -> str:
     aggregate (exact `percentile` ≡ `quantile_cont`, bitwise-equal doubles —
     the q_events_value_percentiles anchor), broadcast-joined back onto the
     stream for the clip; output audits how much mass each tail lost."""
-    fn = "percentile" if d.spark else "quantile_cont"
     clip = "least(b.hi, greatest(b.lo, e.value))"
     return f"""
 WITH bounds AS (
   SELECT event_type,
-         {fn}(value, {p_lo}) AS lo,
-         {fn}(value, {p_hi}) AS hi
+         {d.percentile('value', p_lo)} AS lo,
+         {d.percentile('value', p_hi)} AS hi
   FROM events GROUP BY event_type
 )
 SELECT e.event_type,
@@ -2786,13 +2645,8 @@ def q_text_token_entropy(d: D, min_bits: float = 3.0) -> str:
     (h7) so the shuffle carries fixed-width ints, exactly as in
     q_quality_repetition. Also emits the normalized ratio H/log2(distinct)
     (1.0 = perfectly even) and the keep gate at `min_bits`."""
-    w = words_cte(d)
-    if d.spark:
-        toks_from = f"SELECT doc_id, explode({w}) AS tok FROM documents"
-    else:
-        toks_from = f"SELECT doc_id, unnest({w}) AS tok FROM documents"
     return f"""
-WITH toks AS ({toks_from}),
+WITH toks AS (SELECT doc_id, {d.explode(d.split_ws('text'))} AS tok FROM documents),
 tf AS (
   SELECT doc_id, {d.h7('tok')} AS th, cast(count(*) as double) AS c
   FROM toks GROUP BY doc_id, {d.h7('tok')}
@@ -2862,14 +2716,13 @@ def q_events_cdc_merge(d: D) -> str:
     squashed changelog (or uses Iceberg merge-on-read deletes and lets
     compaction fold them); the full-outer form here is the engine-agnostic
     spec both engines can check."""
-    stype = "string" if d.spark else "varchar"
     return f"""
 WITH changes AS (
   SELECT event_id, 1 AS seq, 'U' AS op, value + 100 AS new_value, event_type AS new_type
   FROM events WHERE event_id % 7 = 0
   UNION ALL
   SELECT event_id, 2 AS seq, 'D' AS op, cast(NULL as double) AS new_value,
-         cast(NULL as {stype}) AS new_type
+         {d.to_str('NULL')} AS new_type
   FROM events WHERE event_id % 21 = 0
   UNION ALL
   SELECT -event_id - 1 AS event_id, 1 AS seq, 'I' AS op, value AS new_value,
@@ -2986,15 +2839,9 @@ def q_corpus_top_terms_cms(
 
     a = d.arr(MINHASH_A[:depth])
     b = d.arr(MINHASH_B[:depth])
-    w = words_cte(d)
-    if d.spark:
-        terms_from = f"SELECT explode({w}) AS term FROM documents"
-        rows_from = "LATERAL VIEW explode(sequence(0, {})) AS j".format(depth - 1)
-        probe_rows = " UNION ALL ".join(f"SELECT '{p}' AS term" for p in probes)
-    else:
-        terms_from = f"SELECT unnest({w}) AS term FROM documents"
-        rows_from = f", (SELECT unnest(range(0, {depth})) AS j) rows"
-        probe_rows = " UNION ALL ".join(f"SELECT '{p}' AS term" for p in probes)
+    terms_from = f"SELECT {d.explode(d.split_ws('text'))} AS term FROM documents"
+    rows_from = d.explode_join(d.seq(0, depth - 1), "j", "r")
+    probe_rows = " UNION ALL ".join(f"SELECT '{p}' AS term" for p in probes)
     bucket = (
         f"cast((({d.elem(a, 'j')} * h + {d.elem(b, 'j')}) % {MERSENNE_P}) % {width} as int)"
     )
@@ -3097,17 +2944,16 @@ def q_events_anomaly_mad(d: D, k: float = 3.5) -> str:
     bitwise across engines (percentile ≡ quantile_cont); the 10^12-row swap is
     approx_percentile for both quantile passes, bounded in
     tests/test_dedup_similarity.py's t-digest harness."""
-    fn = "percentile" if d.spark else "quantile_cont"
     return f"""
 WITH med AS (
-  SELECT event_type, {fn}(value, 0.5) AS med FROM events GROUP BY event_type
+  SELECT event_type, {d.percentile('value', 0.5)} AS med FROM events GROUP BY event_type
 ),
 dev AS (
   SELECT e.event_type, e.value, abs(e.value - m.med) AS adev
   FROM events e JOIN med m ON m.event_type = e.event_type
 ),
 madt AS (
-  SELECT event_type, {fn}(adev, 0.5) AS mad FROM dev GROUP BY event_type
+  SELECT event_type, {d.percentile('adev', 0.5)} AS mad FROM dev GROUP BY event_type
 )
 SELECT d.event_type,
        {d.big('count(*)')} AS n,

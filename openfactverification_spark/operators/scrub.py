@@ -34,15 +34,6 @@ from .dual import D, PII_EMAIL_RE, PII_IPV4_RE, PII_PHONE_RE
 PLACEHOLDERS = ("<EMAIL>", "<PHONE>", "<IP>")
 
 
-def _pat(d: D, pat: str) -> str:
-    """Regex rendered for embedding in a '...' SQL literal (Spark consumes one
-    backslash level inside string literals; DuckDB does not). Single quotes
-    are ''-doubled so a future pattern matching apostrophes can't break the
-    literal (same hardening as functions/grok.py)."""
-    out = pat.replace("\\", "\\\\") if d.spark else pat
-    return out.replace("'", "''")
-
-
 def _row_key() -> str:
     """The generator's row id t, reconstructed from (conv_id, turn_idx):
     conv_id = 'conv-' || lpad(t div 8, 6, '0') and turn_idx = t % 8."""
@@ -70,9 +61,9 @@ def seeded_text_expr(d: D, text: str = "text") -> str:
 
 def scrubbed_text_expr(d: D, text: str = "text") -> str:
     """email → <EMAIL>, phone → <PHONE>, IPv4 → <IP> (global replace)."""
-    out = d.re_replace(text, _pat(d, PII_EMAIL_RE), "<EMAIL>")
-    out = d.re_replace(out, _pat(d, PII_PHONE_RE), "<PHONE>")
-    return d.re_replace(out, _pat(d, PII_IPV4_RE), "<IP>")
+    out = d.re_replace(text, PII_EMAIL_RE, "'<EMAIL>'")
+    out = d.re_replace(out, PII_PHONE_RE, "'<PHONE>'")
+    return d.re_replace(out, PII_IPV4_RE, "'<IP>'")
 
 
 def scrub_pii(transcripts: DataFrame) -> DataFrame:

@@ -1,12 +1,16 @@
 """Streaming ingest dedup: micro-batches judged against a SnapLog signature
-store — the continuous form of operators.dual.q_dedup_incremental.
+store — the continuous form of operators.dual.q_dedup_incremental, and the
+Spark side of the registered dedup_incremental query
+(testdata_queries.q_dedup_incremental_runner: seed_store on batch 0, then
+one direct process_batch per increment).
 
 The production loop for continuously-ingested training data: every incoming
 batch of documents is near-dup-checked against everything ACCEPTED so far,
 and only accepted docs' signatures are appended to the store. Semantics are
 exactly the batch operator's (same minhash banding + exact-jaccard verify,
-same dup_of_seen / dup_in_batch / new rules, keeper-by-min); the
-stream≡batch equality is pinned by tests/test_streaming_ingest_dedup.py.
+same dup_of_seen / dup_in_batch / new rules, keeper-by-min, the same
+dual.MINHASH_JACCARD threshold); the stream ≡ DuckDB-template equality is
+pinned by tests/test_streaming_ingest_dedup.py.
 
 Store layout (two SnapLog tables — band stream for candidate generation,
 shingle stream for the exact verify):
@@ -18,7 +22,8 @@ shingle stream for the exact verify):
 A micro-batch is four materializations, each one eager localCheckpoint:
 
     signed   (doc_id, sh)        sh = the batch operator's array_distinct
-                                 shingle array (dual.shingles_expr)
+                                 shingle array (dual.shingles_expr over the
+                                 staged word array; NULL below 3 words)
     bands    (doc_id, band_idx, band_key)
                                  dual.minhash_sig_cte + minhash_bands_sql
                                  over explode(sh) — the batch operator's own
@@ -71,7 +76,6 @@ from ..session import local_frame
 from ..sources import snaplog
 
 _S = D("spark")
-DEFAULT_THRESHOLD = 0.15
 
 
 def _pre_epoch_snapshot_id(spark: SparkSession, table: str, epoch: int) -> str | None:
@@ -99,9 +103,13 @@ def _pre_epoch_snapshot_id(spark: SparkSession, table: str, epoch: int) -> str |
 
 
 def _signed(docs: DataFrame) -> DataFrame:
-    """(doc_id, sh): each doc's distinct shingle array, materialized once."""
-    return docs.selectExpr("doc_id", f"{dual.shingles_expr(_S)} AS sh").localCheckpoint(
-        eager=True
+    """(doc_id, sh): each doc's distinct shingle array over its staged word
+    array, materialized once. sh is NULL for a doc shorter than 3 words: it
+    gets no band, no candidate and no store row, and comes out new."""
+    return (
+        docs.selectExpr("doc_id", f"{_S.split_ws('text')} AS w")
+        .selectExpr("doc_id", f"{dual.shingles_expr(_S)} AS sh")
+        .localCheckpoint(eager=True)
     )
 
 
@@ -213,7 +221,7 @@ def process_batch(
     epoch: int,
     store_dir: str,
     out_dir: str,
-    threshold: float = DEFAULT_THRESHOLD,
+    threshold: float = dual.MINHASH_JACCARD,
     commits: snaplog.CommitOnce | None = None,
 ) -> None:
     """Judge one ingest batch against the store; append statuses + accepted
@@ -316,7 +324,7 @@ def run_ingest_dedup_stream(
     store_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    threshold: float = DEFAULT_THRESHOLD,
+    threshold: float = dual.MINHASH_JACCARD,
     available_now: bool = True,
     maintain_every: int = 0,
 ):

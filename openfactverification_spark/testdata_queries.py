@@ -8,7 +8,10 @@ Spark executes via spark.sql (Catalyst plans are identical to the DataFrame API)
 from __future__ import annotations
 
 import posixpath
+import shutil
+import uuid
 from collections.abc import Callable
+from contextlib import contextmanager
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
@@ -179,6 +182,26 @@ def _register_views(spark: SparkSession, sf_dir: str) -> None:
     spark.conf.set("spark.ofv.registered_sf", sf_dir)
 
 
+# per-call scratch roots of the runners that write tables (SnapLog stores,
+# stream checkpoints); each is removed when its call returns
+SCRATCH_ROOT = "/tmp/ofv_query_roots"
+
+
+@contextmanager
+def _call_root(sf_dir: str):
+    """A fresh directory under SCRATCH_ROOT for one call, so concurrent runs
+    never share a table or checkpoint; removed when the block exits. A
+    runner materializes its rows (localCheckpoint) inside the block."""
+    base = posixpath.join(
+        SCRATCH_ROOT,
+        f"{posixpath.basename(sf_dir.rstrip('/'))}-{uuid.uuid4().hex[:12]}",
+    )
+    try:
+        yield base
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def _make_runner(builder: Callable[[D], str]) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         _register_views(spark, sf_dir)
@@ -205,73 +228,29 @@ def q_dedup_minhash_lsh_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mat(spark: SparkSession, sql: str, view: str) -> DataFrame:
-    """Materialize a step result with TRUNCATED LINEAGE and register it as a
-    view. localCheckpoint, not persist+count: a view over a persisted DF still
-    expands to the full upstream logical plan during analysis (cache
-    substitution only happens afterwards), so chained steps re-grow the
-    geometric plan this runner exists to avoid — measured 16s to *plan* the
-    depth-4 step at sf0.01 vs sub-second from a checkpoint leaf."""
-    df = spark.sql(sql).localCheckpoint(eager=True)
-    df.createOrReplaceTempView(view)
-    return df
-
-
 def q_dedup_incremental_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark execution of dedup_incremental as the SEQUENTIAL per-batch jobs
-    production runs: each step (edge build, store-hit, intra-batch, accepted
-    set) is materialized before the next reads it. This is not just the usual
-    materialize-the-multi-consumer-relation decision — the single-statement
-    form is a correctness/compile hazard on Spark: the step CTEs chain five
-    deep (ex → b1_seen → b1_new → b2_seen → b2_intra) and Catalyst inlines
-    every CTE reference, so the nested expansion is EXPONENTIAL in chain depth
-    (~50 copies of the edge join; plan compilation alone ran minutes at
-    sf0.001). At cluster scale each materialized step is the signature-store
-    SnapLog table appended per ingest batch. The DuckDB oracle keeps the
-    self-contained template (DuckDB materializes multi-referenced CTEs).
-    Both sides render each step from the SAME dual.incr_*_sql fragments."""
-    pairs = q_dedup_minhash_lsh_runner(spark, sf_dir)
-    return incremental_from_pairs(spark, pairs)
+    """Spark execution of dedup_incremental as the production ingest loop:
+    streaming/ingest_dedup's seed_store on the corpus stratum (batch 0),
+    then one direct process_batch per increment (batches 1 and 2, in order)
+    against the SnapLog signature store, read back from ``out/status``. The
+    single-statement DuckDB template is the oracle; its step CTEs chain five
+    deep, which Catalyst's CTE inlining expands exponentially, while the
+    store holds each step's result between batches."""
+    from .sources import snaplog
+    from .streaming import ingest_dedup
 
-
-def incremental_from_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
-    """The sequential batch loop of q_dedup_incremental_runner over an
-    arbitrary verified-pair DataFrame (id_a, id_b) — the seam the planted
-    store-growth tests inject through. Requires a `documents` view."""
-    pairs = pairs.localCheckpoint(eager=True)
-    pairs.createOrReplaceTempView("incr_pairs")
-    _mat(spark, dual.incr_docs_sql(_SPARK), "incr_docs")
-    _mat(spark, dual.incr_ex_sql(_SPARK, "incr_pairs", "incr_docs"), "incr_ex")
-    _mat(spark, dual.incr_seen_sql(_SPARK, 1, "byy = 0", "incr_ex"), "incr_b1_seen")
-    _mat(
-        spark,
-        dual.incr_intra_sql(_SPARK, 1, "incr_b1_seen", "incr_ex"),
-        "incr_b1_intra",
-    )
-    _mat(
-        spark,
-        dual.incr_new_sql(_SPARK, 1, "incr_b1_seen", "incr_b1_intra", "incr_docs"),
-        "incr_b1_new",
-    )
-    _mat(
-        spark,
-        dual.incr_seen_sql(
-            _SPARK, 2, "byy = 0 OR y IN (SELECT doc_id FROM incr_b1_new)", "incr_ex"
-        ),
-        "incr_b2_seen",
-    )
-    _mat(
-        spark,
-        dual.incr_intra_sql(_SPARK, 2, "incr_b2_seen", "incr_ex"),
-        "incr_b2_intra",
-    )
-    s1 = dual.incr_status_sql(
-        _SPARK, 1, "incr_b1_seen", "incr_b1_intra", "incr_b1_new", "incr_docs"
-    )
-    s2 = dual.incr_status_sql(
-        _SPARK, 2, "incr_b2_seen", "incr_b2_intra", None, "incr_docs"
-    )
-    return spark.sql(f"{s1}\nUNION ALL\n{s2}")
+    docs = spark.read.parquet(table_path(sf_dir, "documents")).select("doc_id", "text")
+    with _call_root(sf_dir) as base:
+        store, out = posixpath.join(base, "store"), posixpath.join(base, "out")
+        ingest_dedup.seed_store(spark, docs.filter("doc_id % 3 = 0"), store)
+        for epoch in (0, 1):
+            batch = docs.filter(f"doc_id % 3 = {epoch + 1}")
+            ingest_dedup.process_batch(spark, batch, epoch, store, out)
+        return (
+            snaplog.read(spark, posixpath.join(out, "status"))
+            .select("doc_id", "batch_id", "status", "dup_of")
+            .localCheckpoint(eager=True)
+        )
 
 
 def q_dedup_simhash_banded_runner(
@@ -458,39 +437,37 @@ def q_snaplog_overwrite_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled days), so the whole commit protocol (immutable files, manifest
     listing, partition-value re-attachment) must compose correctly for the
     hashes to match. Time travel is asserted cheaply: version 1 must still
-    read as exactly the pre-cut rows."""
-    import shutil
-
+    read as exactly the pre-cut rows. The table lives in a per-call root
+    that is removed once the aggregated rows are materialized."""
     from .sources import snaplog
 
     _register_views(spark, sf_dir)
-    table = f"/tmp/ofv_snaplog_q/{posixpath.basename(sf_dir.rstrip('/'))}"
-    shutil.rmtree(table, ignore_errors=True)
-
     ev = spark.table("events").withColumn(
         "day", F.date_format(F.to_date("ts"), "yyyy-MM-dd")
     )
-    snaplog.append(spark, table, ev.filter(F.col("day") < "2024-01-16"), ["day"])
-    snaplog.append(spark, table, ev.filter(F.col("day") >= "2024-01-16"))
-    patch = ev.filter(F.col("day") >= "2024-01-26").withColumn(
-        "value", F.col("value") * 2
-    )
-    snaplog.overwrite_partitions(spark, table, patch)
-
-    head = snaplog.read(spark, table)
-    v1_days = (
-        snaplog.read(spark, table, version=1)
-        .agg(F.max("day").alias("mx"))
-        .collect()[0]["mx"]
-    )
-    assert v1_days < "2024-01-16", v1_days
-    return (
-        head.groupBy("day")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
+    with _call_root(sf_dir) as table:
+        snaplog.append(spark, table, ev.filter(F.col("day") < "2024-01-16"), ["day"])
+        snaplog.append(spark, table, ev.filter(F.col("day") >= "2024-01-16"))
+        patch = ev.filter(F.col("day") >= "2024-01-26").withColumn(
+            "value", F.col("value") * 2
         )
-    )
+        snaplog.overwrite_partitions(spark, table, patch)
+
+        v1_days = (
+            snaplog.read(spark, table, version=1)
+            .agg(F.max("day").alias("mx"))
+            .collect()[0]["mx"]
+        )
+        assert v1_days < "2024-01-16", v1_days
+        return (
+            snaplog.read(spark, table)
+            .groupBy("day")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_events"),
+                F.round(F.sum("value"), 4).alias("total_value"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 def snaplog_overwrite_daily_oracle() -> str:
@@ -504,11 +481,6 @@ final AS (
 )
 SELECT day, count(*) AS n_events, round(sum(value), 4) AS total_value
 FROM final GROUP BY day"""
-
-
-# q_ingest_dedup_stream_status's per-call roots live here, each removed when
-# the call returns
-INGEST_STREAM_Q_ROOT = "/tmp/ofv_ingest_stream_q"
 
 
 def _await_stream(q, timeout_s: float) -> None:
@@ -540,19 +512,11 @@ def q_ingest_dedup_stream_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     The status rows are materialized before the call's root (store,
     checkpoint, source and status files) is removed, so nothing is left
     behind; a stream that times out or fails raises."""
-    import shutil
-    import uuid
-
     from .sources import snaplog
     from .streaming import ingest_dedup
 
-    # a fresh root per call: concurrent runs never share a store/checkpoint
-    base = posixpath.join(
-        INGEST_STREAM_Q_ROOT,
-        f"{posixpath.basename(sf_dir.rstrip('/'))}-{uuid.uuid4().hex[:12]}",
-    )
-    store, out, ck, src = (posixpath.join(base, d) for d in ("store", "out", "ck", "src"))
-    try:
+    with _call_root(sf_dir) as base:
+        store, out, ck, src = (posixpath.join(base, d) for d in ("store", "out", "ck", "src"))
         docs = spark.read.parquet(table_path(sf_dir, "documents")).select(
             "doc_id", "text"
         )
@@ -570,8 +534,6 @@ def q_ingest_dedup_stream_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "batch_id", "status", "dup_of")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:

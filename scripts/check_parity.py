@@ -66,11 +66,16 @@ def main():
     for name, fn in sorted(qs.items()):
         if name_filter and name_filter not in name:
             continue
-        t0 = time.time()
-        sdf = fn(spark, sf_dir)
-        srows = sdf.collect()
-        t_spark = time.time() - t0
-        scols = sdf.columns
+        try:
+            t0 = time.time()
+            sdf = fn(spark, sf_dir)
+            srows = sdf.collect()
+            t_spark = time.time() - t0
+            scols = sdf.columns
+        except Exception as e:  # one crashing query must not hide the rest
+            print(f"  [FAIL-spark-err] {name}: {(str(e) or repr(e)).splitlines()[0]}")
+            n_fail += 1
+            continue
         if name not in oracles:
             print(f"  [rows-only] {name}: {len(srows)} rows ({t_spark:.1f}s spark)")
             n_noora += 1

@@ -2,20 +2,24 @@
 
 Oracle parity (scripts/check_parity.py + the driver) pins Spark≡DuckDB on the
 fixture corpus; these tests pin the SEMANTICS on planted documents where the
-expected status of every increment doc is known by construction:
+expected status of every increment doc is known by construction, once on
+each side:
 
 * the store grows with accepted docs — a batch-2 doc duplicating a doc
-  ACCEPTED in batch 1 is dup_of_seen, not new;
+  ACCEPTED in batch 1 is dup_of_seen, not new (the Spark ingest path:
+  seed_store + one process_batch per increment);
 * dropped docs never enter the store — a batch-2 doc whose only near-dup
-  partner was itself dropped in batch 1 comes out new.
+  partner was itself dropped in batch 1 comes out new (the DuckDB template,
+  with the pair chain injected through ``pairs_sql``).
 """
 
 from __future__ import annotations
 
-from openfactverification_spark import testdata_queries as tq
-from openfactverification_spark.operators import dual
+import duckdb
 
-_S = dual.D("spark")
+from openfactverification_spark.operators import dual
+from openfactverification_spark.sources import snaplog
+from openfactverification_spark.streaming import ingest_dedup
 
 # batch = doc_id % 3: 0 -> corpus, 1 -> first increment, 2 -> second increment
 _T0 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
@@ -34,25 +38,21 @@ _DOCS = [
 ]
 
 
-def _register_docs(spark):
-    spark.createDataFrame(_DOCS, ["doc_id", "text"]).createOrReplaceTempView(
-        "documents"
-    )
-    # the planted view shadows the fixture table: force testdata_queries'
-    # _register_views to re-register real tables for whoever runs next
-    spark.conf.set("spark.ofv.registered_sf", "")
-
-
-def _statuses(df):
-    return {r["doc_id"]: (r["batch_id"], r["status"], r["dup_of"]) for r in df.collect()}
-
-
-def test_store_growth_with_minhash_pairs(spark):
-    """End-to-end through the real pair machinery: identical texts pair at
-    jaccard 1.0, and the batch rules classify every increment doc."""
-    _register_docs(spark)
-    pairs = spark.sql(dual.q_dedup_minhash_lsh(_S, threshold=0.9))
-    got = _statuses(tq.incremental_from_pairs(spark, pairs))
+def test_store_growth_with_minhash_pairs(spark, tmp_path):
+    """End-to-end through the Spark ingest path: identical texts pair at
+    jaccard 1.0, the batch rules classify every increment doc, and only
+    accepted docs' signatures enter the store — the dropped docs 1 and 7
+    leave no store/sh or store/bands row."""
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string")
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    ingest_dedup.seed_store(spark, docs.filter("doc_id % 3 = 0"), store)
+    for epoch in (0, 1):
+        batch = docs.filter(f"doc_id % 3 = {epoch + 1}")
+        ingest_dedup.process_batch(spark, batch, epoch, store, out, threshold=0.9)
+    got = {
+        r["doc_id"]: (r["batch_id"], r["status"], r["dup_of"])
+        for r in snaplog.read(spark, f"{out}/status").collect()
+    }
     assert got == {
         1: (1, "dup_of_seen", 0),
         4: (1, "new", None),
@@ -61,19 +61,28 @@ def test_store_growth_with_minhash_pairs(spark):
         5: (2, "new", None),
         8: (2, "dup_in_batch", 5),
     }
+    for table in ("sh", "bands"):
+        stored = {
+            r["doc_id"]
+            for r in snaplog.read(spark, f"{store}/{table}").select("doc_id").collect()
+        }
+        assert not stored & {1, 7}, table
+        assert stored == {0, 3, 4, 5}, table
 
 
-def test_dropped_docs_never_enter_store(spark):
+def test_dropped_docs_never_enter_store():
     """Injected pair chain 3~10, 10~11 (jaccard is not transitive): doc 10 is
     dropped as a corpus dup, so doc 11 — whose only partner is the DROPPED
     doc — is new, exactly what a signature store that only appends accepted
     docs would say."""
-    docs = [(3, "corpus doc"), (10, "near dup of corpus"), (11, "near dup of ten")]
-    spark.createDataFrame(docs, ["doc_id", "text"]).createOrReplaceTempView(
-        "documents"
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT * FROM (VALUES (3, 'corpus doc'), "
+        "(10, 'near dup of corpus'), (11, 'near dup of ten')) t(doc_id, text)"
     )
-    pairs = spark.createDataFrame([(3, 10), (10, 11)], ["id_a", "id_b"])
-    got = _statuses(tq.incremental_from_pairs(spark, pairs))
+    pairs = "SELECT * FROM (VALUES (3, 10), (10, 11)) p(id_a, id_b)"
+    rows = con.execute(dual.q_dedup_incremental(dual.D("duckdb"), pairs_sql=pairs)).fetchall()
+    got = {doc_id: (batch_id, status, dup_of) for doc_id, batch_id, status, dup_of in rows}
     assert got == {
         10: (1, "dup_of_seen", 3),
         11: (2, "new", None),

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from openfactverification_spark.functions import hashing as H
 from openfactverification_spark.operators import dual
 from openfactverification_spark.operators.dual import D
 from openfactverification_spark.operators.multimodal import q_multimodal_bytes
@@ -56,25 +57,33 @@ def test_lsh_ann_neighbors_subset_of_bruteforce_space(spark):
     assert mismatches == 0
 
 
-def test_minhash_hot_bucket_cap_is_subset(spark):
-    """Skew guard: capping band-bucket size only removes candidates from
-    oversized buckets — capped pairs ⊆ uncapped pairs, and a binding cap does
-    remove something on this fixture (near-identical docs share band values)."""
-    uncapped = {
-        (r["id_a"], r["id_b"])
-        for r in spark.sql(dual.q_dedup_minhash_lsh(_S)).collect()
-    }
-    capped = {
-        (r["id_a"], r["id_b"])
-        for r in spark.sql(dual.q_dedup_minhash_lsh(_S, max_band_bucket=1)).collect()
-    }
-    assert capped <= uncapped
-    assert len(capped) < len(uncapped), "cap=1 must exclude every shared bucket"
-    loose = {
-        (r["id_a"], r["id_b"])
-        for r in spark.sql(dual.q_dedup_minhash_lsh(_S, max_band_bucket=10**6)).collect()
-    }
-    assert loose == uncapped, "non-binding cap must be a no-op"
+@pytest.mark.parametrize("family,max_hamming", [("minhash", None), ("simhash", 2), ("simhash", 6)])
+def test_band_renderer_agrees_across_engines(spark, family, max_hamming):
+    """The one band renderer (band_rows_sql): Spark's LATERAL VIEW explode
+    and DuckDB's UNION ALL give the same (doc_id, band_idx, band key)
+    stream, one row per (doc, band), for the minhash and simhash bands."""
+    import duckdb
+
+    def bands(d: D) -> str:
+        if family == "minhash":
+            return (
+                f"WITH {dual.minhash_sig_cte(d)}\n"
+                f"SELECT doc_id, band_idx, band_key FROM ({dual.minhash_bands_sql(d)}) b"
+            )
+        return (
+            f"WITH {dual.simhash_cte(d)}\n"
+            f"SELECT doc_id, band_idx, band_val FROM ({dual.simhash_bands_sql(d, max_hamming)}) b"
+        )
+
+    got = sorted(tuple(r) for r in spark.sql(bands(_S)).collect())
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{table_path(SF, 'documents')}')"
+    )
+    want = sorted(con.execute(bands(D("duckdb"))).fetchall())
+    n_bands = H.MINHASH_BANDS if family == "minhash" else max_hamming + 1
+    assert got and len(got) == len({r[0] for r in got}) * n_bands
+    assert got == want
 
 
 def test_connected_components_transitive_closure(spark):

@@ -32,7 +32,7 @@ def test_rotation_is_least_recently_verified(monkeypatch):
     assert len(order) == len(names)  # rotation reorders, never drops
 
 
-def test_green_requires_hash_match_true(monkeypatch):
+def test_green_requires_hash_match_true(monkeypatch, tmp_path):
     """A driver row whose hash gate never ran (hash_match None) or failed is
     NOT green: rows-only passes must stay at the front of the window until
     the value hash actually matches."""
@@ -45,7 +45,7 @@ def test_green_requires_hash_match_true(monkeypatch):
     }
     import json
 
-    path = "/tmp/CORRECTNESS_r7.json"
+    path = str(tmp_path / "CORRECTNESS_r7.json")
     with open(path, "w") as f:
         json.dump(rows, f)
     monkeypatch.setattr(eq, "_correctness_files", lambda: [path])

@@ -4,20 +4,34 @@ The stream seeds the store with the corpus stratum (doc_id % 3 == 0), then
 processes the two increment strata as two availableNow runs (second file
 added after the first run completes, so micro-batch order is guaranteed and
 the second run exercises checkpoint restart). Statuses must equal the batch
-operator's exactly."""
+operator's exactly: the DuckDB dedup_incremental template over the same
+fixture files (the Spark side of dedup_incremental is process_batch itself,
+so comparing against it would compare the stream with itself)."""
 
 from __future__ import annotations
 
 import os
+from functools import lru_cache
 
+import duckdb
 import pytest
 
 from openfactverification_spark import testdata_queries as tq
+from openfactverification_spark.operators import dual
 from openfactverification_spark.sources import snaplog
 from openfactverification_spark.sources.tables import table_path
 from openfactverification_spark.streaming import ingest_dedup
 
 SF = "/root/testdata/sf0.001"
+
+
+@lru_cache(maxsize=1)
+def _batch_statuses() -> frozenset:
+    """(doc_id, batch_id, status, dup_of) rows of the DuckDB template."""
+    con = duckdb.connect()
+    path = table_path(SF, "documents")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    return frozenset(con.execute(dual.q_dedup_incremental(dual.D("duckdb"))).fetchall())
 
 
 def _docs(spark):
@@ -49,12 +63,7 @@ def test_stream_statuses_equal_batch(spark, tmp_path):
         (r["doc_id"], r["batch_id"], r["status"], r["dup_of"])
         for r in snaplog.read(spark, f"{out}/status").collect()
     }
-    spark.conf.set("spark.ofv.registered_sf", "")
-    want = {
-        (r["doc_id"], r["batch_id"], r["status"], r["dup_of"])
-        for r in tq.q_dedup_incremental_runner(spark, SF).collect()
-    }
-    assert got == want
+    assert got == _batch_statuses()
     assert any(s == "dup_of_seen" for _, _, s, _ in got) or len(got) > 0
 
 
@@ -84,12 +93,7 @@ def test_maintained_stream_same_results_bounded_log(spark, tmp_path):
         (r["doc_id"], r["batch_id"], r["status"], r["dup_of"])
         for r in snaplog.read(spark, f"{out}/status").collect()
     }
-    spark.conf.set("spark.ofv.registered_sf", "")
-    want = {
-        (r["doc_id"], r["batch_id"], r["status"], r["dup_of"])
-        for r in tq.q_dedup_incremental_runner(spark, SF).collect()
-    }
-    assert got == want
+    assert got == _batch_statuses()
     # log bounded by expiry: at most keep_last retained snapshots per table
     assert len(snaplog.history(spark, f"{store}/sh")) <= 3
     assert len(snaplog.history(spark, f"{out}/status")) <= 3
@@ -193,12 +197,7 @@ def test_direct_batch_job_budget(spark, tmp_path):
         .select("doc_id", "batch_id", "status", "dup_of")
         .collect()
     }
-    spark.conf.set("spark.ofv.registered_sf", "")
-    want = {
-        (r["doc_id"], r["batch_id"], r["status"], r["dup_of"])
-        for r in tq.q_dedup_incremental_runner(spark, SF).collect()
-    }
-    assert got == want
+    assert got == _batch_statuses()
 
 
 def test_all_duplicate_batch_skips_store_appends(spark, tmp_path):
@@ -276,12 +275,7 @@ def test_store_reads_stay_one_relation_as_the_store_grows(spark, tmp_path, monke
         .select("doc_id", "batch_id", "status", "dup_of")
         .collect()
     }
-    spark.conf.set("spark.ofv.registered_sf", "")
-    want = {
-        (r["doc_id"], r["batch_id"], r["status"], r["dup_of"])
-        for r in tq.q_dedup_incremental_runner(spark, SF).collect()
-    }
-    assert got == want
+    assert got == _batch_statuses()
 
 
 class _FakeQuery:
@@ -304,7 +298,7 @@ class _FakeQuery:
 
 
 def _fake_stream(monkeypatch, tmp_path, query):
-    monkeypatch.setattr(tq, "INGEST_STREAM_Q_ROOT", str(tmp_path / "roots"))
+    monkeypatch.setattr(tq, "SCRATCH_ROOT", str(tmp_path / "roots"))
     monkeypatch.setattr(
         ingest_dedup, "run_ingest_dedup_stream", lambda *a, **kw: query
     )
@@ -330,12 +324,36 @@ def test_stream_status_query_reraises_stream_error(spark, tmp_path, monkeypatch)
 def test_stream_status_query_removes_its_root(spark, tmp_path, monkeypatch):
     """The query's store, checkpoint, source and status files are gone once
     it returns, and its (materialized) rows are still the batch operator's."""
-    monkeypatch.setattr(tq, "INGEST_STREAM_Q_ROOT", str(tmp_path / "roots"))
+    monkeypatch.setattr(tq, "SCRATCH_ROOT", str(tmp_path / "roots"))
     got = {tuple(r) for r in tq.q_ingest_dedup_stream_status(spark, SF).collect()}
     assert os.listdir(tmp_path / "roots") == []
-    spark.conf.set("spark.ofv.registered_sf", "")
-    want = {
-        (r["doc_id"], r["batch_id"], r["status"], r["dup_of"])
-        for r in tq.q_dedup_incremental_runner(spark, SF).collect()
-    }
-    assert got == want
+    assert got == _batch_statuses()
+
+
+def test_incremental_runner_removes_its_root(spark, tmp_path, monkeypatch):
+    """dedup_incremental's Spark runner (seed_store + two direct
+    process_batch calls) leaves nothing under its per-call root, and its
+    rows equal the DuckDB template's."""
+    monkeypatch.setattr(tq, "SCRATCH_ROOT", str(tmp_path / "roots"))
+    got = {tuple(r) for r in tq.q_dedup_incremental_runner(spark, SF).collect()}
+    assert os.listdir(tmp_path / "roots") == []
+    assert got == _batch_statuses()
+
+
+def test_overwrite_daily_query_removes_its_root(spark, tmp_path, monkeypatch):
+    """The registered snaplog_overwrite_daily query keeps its table in a
+    per-call root and removes it before returning; its (materialized) rows
+    still equal the DuckDB end-state oracle's."""
+    monkeypatch.setattr(tq, "SCRATCH_ROOT", str(tmp_path / "roots"))
+    got = sorted(
+        (r["day"], r["n_events"], round(r["total_value"], 9))
+        for r in tq.q_snaplog_overwrite_daily(spark, SF).collect()
+    )
+    assert os.listdir(tmp_path / "roots") == []
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{table_path(SF, 'events')}')")
+    want = sorted(
+        (day, n, round(v, 9))
+        for day, n, v in con.execute(tq.snaplog_overwrite_daily_oracle()).fetchall()
+    )
+    assert got and got == want
