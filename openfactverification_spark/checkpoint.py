@@ -19,7 +19,10 @@ Design (batch analog of streaming state, SURVEY.md §2.9 note):
     snapshot summary carries the epoch entry
     ``{epoch, lineage, rulepack, parsed_records, routed_per_sink}``, so the
     sink log is the commit log — input snapshot -> epoch -> output snapshot
-    in one atomic log append, versioned by the snapshot's ``format_version``.
+    in one atomic log append. Under the snapshot's ``format_version`` 2 the
+    (route, ts_day) values ride inside every data file as well as in the
+    manifest, so the table reads as one relation however many epochs it
+    holds.
   * **Resume** = the input's distinct epochs minus the epochs named in the
     sink log (``snaplog.history``), the way ``snaplog.CommitOnce`` finds
     committed stream batches.

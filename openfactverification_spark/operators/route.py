@@ -58,10 +58,10 @@ def stage_sinks(routed: DataFrame) -> DataFrame:
     return routed.withColumn("ts_day", F.to_date("ts")).hint("rebalance", *PARTITION_COLS)
 
 
-def write_sinks(routed: DataFrame, out_dir: str, fmt: str = "parquet") -> DataFrame:
+def write_sinks(routed: DataFrame, out_dir: str) -> DataFrame:
     """Single-pass multi-sink batch write: overwrite ``out_dir`` with the
     staged routed frame, partitioned by (route, ts_day). Returns the staged
     frame, whose schema is the sinks' schema."""
     staged = stage_sinks(routed)
-    staged.write.mode("overwrite").partitionBy(*PARTITION_COLS).format(fmt).save(out_dir)
+    staged.write.mode("overwrite").partitionBy(*PARTITION_COLS).parquet(out_dir)
     return staged

@@ -15,8 +15,8 @@ operation.
 Layout::
 
     table/
-      data/<commit-uuid>/[p=v/...]part-*.parquet   immutable; one dir per commit
-      _snaplog/v{N}.json                           snapshot N (the log)
+      data/<commit-uuid>/[_p_p=v/...]part-*.parquet   immutable; one dir per commit
+      _snaplog/v{N}.json                              snapshot N (the log)
 
 A snapshot JSON carries the FULL live-file listing (path, partition tuple,
 size), the parent snapshot id, the logical schema, and an operation summary.
@@ -44,16 +44,21 @@ version, with manifest-level partition pruning), ``history``, ``rollback``
 and ``expire_snapshots`` (physically deletes files unreachable from the
 retained log suffix).
 
-Partition values live in the metadata, not the data files (files are
-written ``partitionBy(...)`` so the values come from the directory names,
-exactly once, at commit time); ``read`` resolves them from those names,
-typed by the snapshot's schema, so round-trips preserve the logical schema.
+Partition values live in the data files AND in the manifest, as in the
+Iceberg spec (source columns in the files, the partition tuple in the
+manifest): a partitioned write is ``partitionBy`` over COPIES of the
+partition columns (``_p_<col>``), so the directory names give the manifest
+its partition tuple once, at commit time, while every file keeps the logical
+columns, typed by the file itself. This is format version 2; a partitioned
+version-1 table (values only in the directory names) is refused rather than
+read as nulls, and unpartitioned version-1 files are the same bytes as
+version-2 files, so they still read.
 
-Read plan size: an unpartitioned table reads as ONE parquet relation over
-its live file list, whatever its commit count; a partitioned table reads as
-one relation per live commit directory, because Spark rejects one relation
-over several ``data/<commit>/p=v/`` trees ("Conflicting directory structures
-detected"). Compaction collapses commits either way.
+Read plan size: every snapshot, partitioned or not, reads as ONE parquet
+relation over its live file list, whatever its commit count. Partition
+pruning is manifest-level; to Spark the partition columns are data columns,
+so a predicate on them is a data filter (each file holds one value, so
+row-group statistics skip the others), not a PartitionFilter.
 
 Scale notes (10^12-turn table): the log is O(days x files-per-day) small
 JSON on the driver-side control plane — the data plane stays entirely in
@@ -74,7 +79,6 @@ recast as a table format with atomic, versioned, partition-granular commits.
 from __future__ import annotations
 
 import contextlib
-import functools
 import hashlib
 import json
 import posixpath
@@ -91,7 +95,9 @@ from ..session import local_frame
 
 LOG_DIR = "_snaplog"
 DATA_DIR = "data"
-FORMAT_VERSION = 1
+FORMAT_VERSION = 2
+# partitionBy key prefix for the copies of the partition columns (v2 layout)
+_PART_PREFIX = "_p_"
 _COMMIT_RETRIES = 10
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _LISTING_LOCK = threading.Lock()
@@ -266,14 +272,34 @@ def _hive_value(value: object, dtype: "T.DataType | None") -> str:
 
 
 def _parse_partition(rel_path: str, partition_cols: list[str]) -> dict[str, str]:
-    """Hive-style `col=value` segments of a data-file path -> {col: value}."""
+    """Hive-style `_p_col=value` segments of a data-file path -> {col: value}."""
     vals: dict[str, str] = {}
     for seg in rel_path.split("/"):
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            if k in partition_cols:
-                vals[k] = unquote(v)
+        k, eq, v = seg.partition("=")
+        col = k[len(_PART_PREFIX):]
+        if eq and k.startswith(_PART_PREFIX) and col in partition_cols:
+            vals[col] = unquote(v)
     return vals
+
+
+def _pkey(f: dict) -> tuple:
+    """A file entry's partition tuple as a hashable key."""
+    return tuple(sorted(f["partition"].items()))
+
+
+def _outside(touched: set) -> "Callable[[list[dict]], list[dict]]":
+    """``surviving`` for a commit that replaces the ``touched`` partitions."""
+    return lambda files: [f for f in files if _pkey(f) not in touched]
+
+
+def _check_format(snap: dict, table: str) -> None:
+    """Refuse a partitioned v1 snapshot: its files hold no partition values,
+    so the v2 read would give nulls and a v2 commit would mix layouts."""
+    if snap["partition_cols"] and snap.get("format_version", 1) < 2:
+        raise ValueError(
+            f"SnapLog table {table} is partitioned format_version "
+            f"{snap.get('format_version', 1)}; this reader needs {FORMAT_VERSION}"
+        )
 
 
 def _versions(fs: _Fs) -> list[int]:
@@ -321,9 +347,10 @@ def _load_snapshot_or_debris(fs: _Fs, version: int) -> dict | None:
         raise
 
 
-def _head(fs: _Fs) -> tuple[dict | None, list[int]]:
-    """(newest PARSEABLE snapshot, full version list). An unparseable log file
-    can only be a crashed writer's torn debris (committed snapshots publish
+def _snapshots(fs: _Fs, vs: list[int]):
+    """Lazily yield the committed snapshots among versions ``vs``, newest
+    first — the one log walk. An unparseable log file can only be a crashed
+    writer's torn debris (committed snapshots publish
     whole via link/rename in create_exclusive): it is SKIPPED, never renamed
     or deleted — the next commit claims the next version number ABOVE it
     (``vs[-1] + 1`` counts the torn slot), so the debris is inert dead weight
@@ -334,12 +361,24 @@ def _head(fs: _Fs) -> tuple[dict | None, list[int]]:
     other read error re-raises (see _load_snapshot_or_debris — falling back
     to an older snapshot on a transient IO error inside _commit would be a
     silent lost update)."""
-    vs = _versions(fs)
     for v in reversed(vs):
         snap = _load_snapshot_or_debris(fs, v)
         if snap is not None:
-            return snap, vs
-    return None, vs
+            yield snap
+
+
+def _head(fs: _Fs) -> tuple[dict | None, list[int]]:
+    """(newest committed snapshot, full version list)."""
+    vs = _versions(fs)
+    return next(_snapshots(fs, vs), None), vs
+
+
+def _find(snaps, snapshot_id: str) -> dict:
+    """The snapshot with ``snapshot_id`` among ``snaps`` (a _snapshots walk)."""
+    for s in snaps:
+        if s["snapshot_id"] == snapshot_id:
+            return s
+    raise ValueError(f"unknown snapshot_id {snapshot_id}")
 
 
 def current_snapshot(spark: SparkSession, table: str) -> dict | None:
@@ -358,15 +397,8 @@ def history(spark: SparkSession, table: str) -> list[dict]:
     parent_id, operation, summary) — the audit trail resume lineage points
     into. Torn debris files (crashed writers) are skipped, matching _head."""
     fs = _Fs(spark, table)
-    out = []
-    for v in _versions(fs):
-        s = _load_snapshot_or_debris(fs, v)
-        if s is None:
-            continue
-        out.append(
-            {k: s[k] for k in ("version", "snapshot_id", "parent_id", "operation", "summary")}
-        )
-    return out
+    keys = ("version", "snapshot_id", "parent_id", "operation", "summary")
+    return [{k: s[k] for k in keys} for s in reversed(list(_snapshots(fs, _versions(fs))))]
 
 
 def snapshots_newest_first(spark: SparkSession, table: str):
@@ -374,25 +406,22 @@ def snapshots_newest_first(spark: SparkSession, table: str):
     the O(1)-reads-in-the-common-case walk for callers that usually only need
     the head (e.g. the streaming ingest-dedup pre-epoch pin)."""
     fs = _Fs(spark, table)
-    for v in reversed(_versions(fs)):
-        snap = _load_snapshot_or_debris(fs, v)
-        if snap is not None:
-            yield snap
+    yield from _snapshots(fs, _versions(fs))
 
 
-def _write_data_files(
-    df: DataFrame, fs: _Fs, partition_cols: list[str]
-) -> tuple[list[dict], str]:
+def _write_data_files(df: DataFrame, fs: _Fs, partition_cols: list[str]) -> list[dict]:
     """Write df's rows as immutable parquet under a fresh commit dir; return
-    (file entries, commit dir). Partition values are read back from the
-    directory names — one recursive LIST of the just-written commit dir, no
-    extra Spark job."""
+    the file entries. The directories are keyed by copies of the partition
+    columns, so the logical columns stay in every file; the manifest's
+    partition tuples are read back from the directory names — one recursive
+    LIST of the just-written commit dir, no extra Spark job."""
     commit = uuid.uuid4().hex[:12]
-    target = posixpath.join(fs.root, DATA_DIR, commit)
-    writer = df.write.mode("error")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(target)
+    copies = [_PART_PREFIX + c for c in partition_cols]
+    for c, copy in zip(partition_cols, copies):
+        df = df.withColumn(copy, F.col(c))
+    df.write.mode("error").partitionBy(*copies).parquet(
+        posixpath.join(fs.root, DATA_DIR, commit)
+    )
     entries = []
     for rel, nbytes in fs.list_files_recursive(fs.path(DATA_DIR, commit)):
         name = posixpath.basename(rel)
@@ -405,7 +434,7 @@ def _write_data_files(
                 "partition": _parse_partition(rel, partition_cols),
             }
         )
-    return entries, commit
+    return entries
 
 
 def _commit(
@@ -448,6 +477,8 @@ def _commit(
                 f"partition spec mismatch: table has {head['partition_cols']}, "
                 f"commit supplies {partition_cols}"
             )
+        if head is not None:
+            _check_format(head, fs.root)
         base = surviving(head["files"] if head else [])
         files = base + new_files
         snap = {
@@ -530,7 +561,7 @@ def append(
     head = current_snapshot(spark, table)
     if head is not None:
         partition_cols = head["partition_cols"]
-    new_files, _ = _write_data_files(df, fs, partition_cols)
+    new_files = _write_data_files(df, fs, partition_cols)
     return _commit(
         fs,
         operation="append",
@@ -604,21 +635,15 @@ def overwrite_partitions(
         raise ValueError("table is unpartitioned; use append/overwrite")
     _data_schema(df, partition_cols)
     fs = _Fs(spark, table)
-    new_files, _ = _write_data_files(df, fs, partition_cols)
-    touched = {tuple(sorted(f["partition"].items())) for f in new_files}
-
-    def surviving(files: list[dict]) -> list[dict]:
-        return [
-            f for f in files if tuple(sorted(f["partition"].items())) not in touched
-        ]
-
+    new_files = _write_data_files(df, fs, partition_cols)
+    touched = {_pkey(f) for f in new_files}
     return _commit(
         fs,
         operation="overwrite_partitions",
         new_files=new_files,
         schema_for=lambda h: _evolved_schema(h, df),
         partition_cols=partition_cols,
-        surviving=surviving,
+        surviving=_outside(touched),
         op_summary={"replaced_partitions": len(touched)},
         summary_extra=summary_extra,
     )
@@ -629,15 +654,7 @@ def rollback(spark: SparkSession, table: str, snapshot_id: str) -> dict:
     log stays append-only; nothing is deleted, so the rolled-back-over state
     remains time-travelable until expire_snapshots)."""
     fs = _Fs(spark, table)
-    target = None
-    for v in _versions(fs):
-        s = _load_snapshot_or_debris(fs, v)
-        if s is None:
-            continue  # torn debris / expired mid-walk
-        if s["snapshot_id"] == snapshot_id:
-            target = s
-    if target is None:
-        raise ValueError(f"unknown snapshot_id {snapshot_id}")
+    target = _find(_snapshots(fs, _versions(fs)), snapshot_id)
     return _commit(
         fs,
         operation="rollback",
@@ -650,28 +667,24 @@ def rollback(spark: SparkSession, table: str, snapshot_id: str) -> dict:
 
 
 def _resolve(fs: _Fs, snapshot_id: str | None, version: int | None) -> dict:
-    head, vs = _head(fs)
-    if head is None:
-        raise ValueError(f"no snapshots at {fs.root}")
+    vs = _versions(fs)
     if version is not None:
         if version not in vs:
             raise ValueError(f"unknown version {version}")
-        snap = _load_snapshot_or_debris(fs, version)
+        snap = next(_snapshots(fs, [version]), None)
         if snap is None:
             raise ValueError(
                 f"version {version} is torn debris from a crashed writer, "
                 "not a committed snapshot"
             )
         return snap
+    snaps = _snapshots(fs, vs)
+    head = next(snaps, None)
+    if head is None:
+        raise ValueError(f"no snapshots at {fs.root}")
     if snapshot_id is None or snapshot_id == head["snapshot_id"]:
         return head  # the common pin (a replay-safe read of the head)
-    for v in reversed(vs):
-        s = _load_snapshot_or_debris(fs, v)
-        if s is None:
-            continue  # torn debris / expired mid-walk — not the requested one
-        if s["snapshot_id"] == snapshot_id:
-            return s
-    raise ValueError(f"unknown snapshot_id {snapshot_id}")
+    return _find(snaps, snapshot_id)
 
 
 def read(
@@ -692,19 +705,17 @@ def read(
     partition, date/int/str via their canonical str form), so Python-typed
     filters behave naturally.
 
-    Plan shape (see _frame_for_files): one parquet relation for an
-    unpartitioned table, one per live commit for a partitioned one."""
+    Plan shape (see _frame_for_files): one parquet relation over the
+    snapshot's (pruned) file list, partitioned or not."""
     fs = _Fs(spark, table)
     snap = _resolve(fs, snapshot_id, version)
-    schema = T.StructType.fromJson(json.loads(snap["schema"]))
-    pcols = snap["partition_cols"]
-
     files = snap["files"]
     if partition_filter:
+        schema = T.StructType.fromJson(json.loads(snap["schema"]))
         dtypes = {f.name: f.dataType for f in schema.fields}
         norm: dict[str, set[str]] = {}
         for col, wanted in partition_filter.items():
-            if col not in pcols:
+            if col not in snap["partition_cols"]:
                 raise ValueError(f"{col} is not a partition column of {table}")
             if isinstance(wanted, (str, bytes)) or not hasattr(wanted, "__iter__"):
                 wanted = [wanted]
@@ -715,53 +726,26 @@ def read(
             if all(f["partition"].get(c) in vs for c, vs in norm.items())
         ]
 
-    return _frame_for_files(spark, fs, schema, pcols, files)
+    return _frame_for_files(spark, fs, snap, files)
 
 
-def _frame_for_files(
-    spark: SparkSession, fs: _Fs, schema, pcols, files: list[dict]
-) -> DataFrame:
-    """Explicit file list -> DataFrame with typed partition columns. Snapshot
-    isolation holds either way: only the listed files enter the file index.
-
-    Unpartitioned: ONE relation over every live file, whatever the commit
-    count (Iceberg plans a snapshot's file list as one scan the same way), so
-    a store that takes a commit per micro-batch costs its readers the same
-    plan, listing and task set at commit 100 as at commit 1. The explicit
-    schema null-fills columns a file lacks (additive schema evolution).
-
-    Partitioned: one relation per COMMIT directory. Each is a self-consistent
-    hive tree, so ``basePath`` + the explicit file subset resolves the
-    partition columns from the directory names, typed by the snapshot's
-    logical schema, and partition predicates prune inside each relation as
-    native PartitionFilters. One relation over several commits is not
-    possible: Spark infers partition values below ONE base directory per
-    relation, each commit directory is its own base, and with
-    ``basePath=data/`` it rejects the mix ("Conflicting directory structures
-    detected"). So a partitioned read is O(live commits) relations, not
-    O(partition values); compaction collapses commits."""
+def _frame_for_files(spark: SparkSession, fs: _Fs, snap: dict, files: list[dict]) -> DataFrame:
+    """A subset of ``snap``'s files -> ONE parquet relation with the snapshot's
+    logical schema, whatever the commit count (Iceberg plans a snapshot's file
+    list as one scan the same way), so a table that takes a commit per
+    micro-batch or epoch costs its readers the same plan, listing and task
+    set at commit 100 as at commit 1. Snapshot isolation: only the listed
+    files enter the file index. The partition columns are read from the files
+    themselves (Spark infers no partition columns from named files), and the
+    explicit schema null-fills columns a file lacks (additive schema
+    evolution)."""
+    _check_format(snap, fs.root)
+    schema = T.StructType.fromJson(json.loads(snap["schema"]))
     if not files:
         return local_frame(spark, [], schema)
-    with _listing_without_job(spark, len(files)):
-        if not pcols:
-            paths = [posixpath.join(fs.root, f["path"]) for f in files]
-            return spark.read.schema(schema).parquet(*paths)
-
-        groups: dict[str, list[str]] = {}
-        for f in files:
-            rel = f["path"]
-            commit = rel.split("/")[1] if rel.startswith(DATA_DIR + "/") else ""
-            groups.setdefault(commit, []).append(posixpath.join(fs.root, rel))
-
-        cols = [fld.name for fld in schema.fields]
-        parts = [
-            spark.read.schema(schema)
-            .option("basePath", posixpath.join(fs.root, DATA_DIR, commit))
-            .parquet(*paths)
-            .select(*cols)
-            for commit, paths in sorted(groups.items())
-        ]
-    return functools.reduce(DataFrame.unionByName, parts)
+    paths = [posixpath.join(fs.root, f["path"]) for f in files]
+    with _listing_without_job(spark, len(paths)):
+        return spark.read.schema(schema).parquet(*paths)
 
 
 @contextlib.contextmanager
@@ -803,39 +787,31 @@ def compact(spark: SparkSession, table: str, min_files: int = 2) -> dict | None:
     if head is None:
         raise ValueError(f"compact on non-existent table {table}")
     pcols = head["partition_cols"]
-    schema = T.StructType.fromJson(json.loads(head["schema"]))
 
     groups: dict[tuple, list[dict]] = {}
     for f in head["files"]:
-        groups.setdefault(tuple(sorted(f["partition"].items())), []).append(f)
+        groups.setdefault(_pkey(f), []).append(f)
     todo = {k: v for k, v in groups.items() if len(v) >= min_files}
     if not todo:
         return None
 
     fs = _Fs(spark, table)
     victims = [f for fl in todo.values() for f in fl]
-    df = _frame_for_files(spark, fs, schema, pcols, victims)
+    df = _frame_for_files(spark, fs, head, victims)
     # one task per output partition, so one file each; an unpartitioned table
     # is one partition, read by one task without a shuffle
     if pcols:
         df = df.repartition(*[F.col(c) for c in pcols])
     else:
         df = df.coalesce(1)
-    new_files, _ = _write_data_files(df, fs, pcols)
-    touched = set(todo)
-
-    def surviving(files: list[dict]) -> list[dict]:
-        return [
-            f for f in files if tuple(sorted(f["partition"].items())) not in touched
-        ]
-
+    new_files = _write_data_files(df, fs, pcols)
     return _commit(
         fs,
         operation="rewrite",
         new_files=new_files,
         schema_for=lambda _h: head["schema"],
         partition_cols=pcols,
-        surviving=surviving,
+        surviving=_outside(set(todo)),
         op_summary={
             "compacted_partitions": len(todo),
             "compacted_files_in": len(victims),
@@ -857,34 +833,29 @@ def expire_snapshots(spark: SparkSession, table: str, keep_last: int = 1) -> dic
     # committed v1 and a crashed writer's torn v2 at the log tail,
     # keep_last=1 would keep only the debris (which names no files), delete
     # v1's data files and log entry, and destroy the table. Debris is
-    # classified exactly as every read path does (_load_snapshot_or_debris).
-    committed: list[tuple[int, dict]] = []
-    debris: list[int] = []
-    for v in _versions(fs):
-        snap = _load_snapshot_or_debris(fs, v)
-        if snap is None:
-            debris.append(v)
-        else:
-            committed.append((v, snap))
+    # classified exactly as every read path does (the _snapshots walk).
+    vs = _versions(fs)
+    committed = list(_snapshots(fs, vs))[::-1]  # oldest first
+    debris = sorted(set(vs) - {snap["version"] for snap in committed})
     keep, drop = committed[-keep_last:], committed[:-keep_last]
     live: set[str] = set()
-    for _v, snap in keep:
+    for snap in keep:
         live.update(f["path"] for f in snap["files"])
     removed_files = 0
-    for v, snap in drop:
+    for snap in drop:
         for f in snap["files"]:
             if f["path"] not in live:
                 if fs.delete(fs.path(f["path"]), False):
                     removed_files += 1
                 live.add(f["path"])  # only attempt each path once
-        fs.delete(fs.path(LOG_DIR, f"v{v}.json"), False)
+        fs.delete(fs.path(LOG_DIR, f"v{snap['version']}.json"), False)
     # Debris log files are swept only when they sit strictly BELOW the oldest
     # kept committed version: a torn slot above it could be a peer writer
     # mid-publish on a filesystem where the payload materializes before the
     # exclusive-create wins (and deleting it would be check-then-act against
     # that peer); a torn slot below the kept range can never be claimed again
     # (_commit always allocates above vs[-1]) so it is safely dead.
-    oldest_kept = keep[0][0] if keep else None
+    oldest_kept = keep[0]["version"] if keep else None
     swept_debris = 0
     for v in debris:
         if oldest_kept is not None and v < oldest_kept:
@@ -898,8 +869,7 @@ def expire_snapshots(spark: SparkSession, table: str, keep_last: int = 1) -> dic
 
 
 def is_snaplog_table(spark: SparkSession, target: str) -> bool:
-    try:
-        fs = _Fs(spark, target)
-        return fs.exists(fs.path(LOG_DIR))
-    except Exception:
-        return False
+    """True when ``target`` holds a snapshot log. An I/O error propagates: a
+    False here sends callers down the plain-parquet path."""
+    fs = _Fs(spark, target)
+    return fs.exists(fs.path(LOG_DIR))

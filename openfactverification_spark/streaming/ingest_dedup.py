@@ -39,11 +39,11 @@ Accepted docs are ``status = 'new'``; their count rides the status
 materialization as an Observation, so an all-duplicate batch skips the store
 appends without another job. seed_store builds the same signed/bands frames.
 
-The three tables are unpartitioned, so each store read in ``seen`` is one
-parquet relation over the pinned snapshot's file list (snaplog
-_frame_for_files): an accepted batch adds a file set to store/sh and
-store/bands, not a relation, and the plan is as large at batch 100 as at
-batch 1. The bytes each read scans still grow with the store.
+Each store read in ``seen`` is one parquet relation over the pinned
+snapshot's file list, as every SnapLog read is (snaplog _frame_for_files):
+an accepted batch adds a file set to store/sh and store/bands, not a
+relation, and the plan is as large at batch 100 as at batch 1. The bytes
+each read scans still grow with the store.
 
 The exact-jaccard verify is array arithmetic, not a shingle-row self-join,
 and is bit-identical to the batch operator's ``count(*)`` form because every

@@ -8,12 +8,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from openfactverification_spark.session import get_spark  # noqa: E402
 from openfactverification_spark.sources.tables import TABLES, table_path  # noqa: E402

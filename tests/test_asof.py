@@ -3,11 +3,7 @@ cogroup+merge_asof form must agree exactly, including tie and no-match rows."""
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from openfactverification_spark.operators import asof
 

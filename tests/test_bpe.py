@@ -4,12 +4,8 @@ deterministic."""
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from openfactverification_spark.functions import bpe
 

@@ -205,3 +205,6 @@ def test_resumable_sinks_use_batch_layout(spark, tmp_path, sink_format):
     assert counts(snaplog.read(spark, sinks)) == counts(
         spark.read.parquet(f"{batch_dir}/sinks")
     )
+    # five epoch commits, one parquet relation
+    plan = snaplog.read(spark, sinks)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation [") == 1

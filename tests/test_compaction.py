@@ -4,10 +4,6 @@ left intact on failure (two-phase swap)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from openfactverification_spark.operators.compaction import (
     compact_parquet,
     describe_files,

@@ -4,11 +4,8 @@ oracle-checked via events_grok_parse; these pin the compiler contract."""
 from __future__ import annotations
 
 import re
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from openfactverification_spark.functions.grok import GrokError, compile_grok
 

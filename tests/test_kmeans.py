@@ -3,10 +3,6 @@ fixed-round SQL twin, monotone objective, and the IVF/SemDeDup feed-through."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from openfactverification_spark.functions import hashing as H
 from openfactverification_spark.operators import dual
 from openfactverification_spark.operators.dual import D

@@ -4,10 +4,6 @@ claim on the de/fr/es strata."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from openfactverification_spark.functions import langid
 from openfactverification_spark.operators import dual
 from openfactverification_spark.operators.dual import D

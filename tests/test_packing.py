@@ -5,10 +5,7 @@ contract — repartition("source") must not change any bin)."""
 
 from __future__ import annotations
 
-import sys
 from collections import defaultdict
-
-sys.path.insert(0, "/root/repo")
 
 from openfactverification_spark.operators.packing import PACK_CAP, pack_sequences
 

@@ -2,10 +2,6 @@
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from openfactverification_spark.operators.dual import D, q_pagerank_trade
 from openfactverification_spark.sources.tables import table_path
 

@@ -5,12 +5,15 @@ fresh subprocess-owned SparkSession so the levels are genuinely independent."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 WORKER = r"""
 import hashlib, json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 from openfactverification_spark.plans.pipeline import build_pipeline
 from openfactverification_spark.session import get_spark
 from openfactverification_spark.sources.transcripts import transcripts_df
@@ -31,7 +34,7 @@ spark.stop()
 
 def _run(cpus: int) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", WORKER, str(cpus)],
+        [sys.executable, "-c", WORKER, str(cpus), REPO],
         capture_output=True,
         text=True,
         check=True,

@@ -7,7 +7,11 @@ one-time backlog drain."""
 
 from __future__ import annotations
 
+import os
+
 from openfactverification_spark import entry_queries as eq
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_every_query_is_oracle_paired():
@@ -60,7 +64,7 @@ def test_rotation_reads_committed_files_only():
 
     files = eq._correctness_files()
     tracked = subprocess.run(
-        ["git", "-C", "/root/repo", "ls-files", "CORRECTNESS_r*.json"],
+        ["git", "-C", REPO, "ls-files", "CORRECTNESS_r*.json"],
         capture_output=True,
         text=True,
     ).stdout.split()

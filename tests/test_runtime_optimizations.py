@@ -9,11 +9,7 @@ configs being exercised are the same ones production sets (relative to its
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 
 def _executed_plan(df) -> str:

@@ -10,11 +10,7 @@ fundamentally cannot do. Both properties are asserted here.
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -6,14 +6,11 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 from urllib.parse import urlparse
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from openfactverification_spark.sources import catalog, snaplog
 
@@ -149,7 +146,10 @@ def test_manifest_level_partition_pruning(spark, tmp_path):
     pruned = snaplog.read(spark, t, partition_filter={"day": "2024-01-02"})
     assert pruned.count() == 100
     files = pruned.inputFiles()
-    assert files and all("day=2024-01-02" in f for f in files)
+    head = snaplog.current_snapshot(spark, t)
+    assert files and _rel_paths(pruned, t) == {
+        f["path"] for f in head["files"] if f["partition"]["day"] == "2024-01-02"
+    }
 
     full_files = snaplog.read(spark, t).inputFiles()
     assert len(files) < len(full_files)
@@ -274,18 +274,22 @@ def _flat(spark, n, tag):
     return _events(spark, n, tag=tag).drop("day").repartition(2)
 
 
-def test_unpartitioned_read_is_one_relation(spark, tmp_path):
-    """An unpartitioned table reads as ONE parquet relation whatever its
-    commit count, over exactly the snapshot's files: time travel still pins
-    the older file set, and a frame missing a column reads back null-filled
-    through the explicit schema."""
-    t = str(tmp_path / "flat")
+@pytest.mark.parametrize("pcols", [[], ["day"]], ids=["unpartitioned", "day"])
+def test_read_is_one_relation(spark, tmp_path, pcols):
+    """A table reads as ONE parquet relation whatever its commit count,
+    partitioned or not, over exactly the snapshot's files: time travel still
+    pins the older file set, a partition column reads back typed from the
+    files, and a frame missing a column reads back null-filled through the
+    explicit schema."""
+    t = str(tmp_path / "tbl")
     snaps = []
     for k in range(1, 7):
-        df = _flat(spark, 50, f"u{k}")
+        df = _events(spark, 50, tag=f"u{k}").repartition(2)
+        if not pcols:
+            df = df.drop("day")
         if k == 6:
             df = df.drop("value")
-        snaps.append(snaplog.append(spark, t, df))
+        snaps.append(snaplog.append(spark, t, df, partition_cols=pcols))
         if k in (1, 3, 6):
             back = snaplog.read(spark, t)
             assert _file_relations(back) == 1, k
@@ -293,7 +297,13 @@ def test_unpartitioned_read_is_one_relation(spark, tmp_path):
             assert back.count() == 50 * k
 
     head = snaplog.read(spark, t)
-    assert head.columns == ["event_id", "value", "payload"]
+    assert head.columns == ["event_id", *(["day"] if pcols else []), "value", "payload"]
+    if pcols:
+        assert head.schema["day"].dataType == T.DateType()
+        want_day = F.date_add(
+            F.lit("2024-01-01").cast("date"), (F.col("event_id") % 3).cast("int")
+        )
+        assert head.filter(F.col("day").eqNullSafe(want_day)).count() == 300
     missing = head.filter(F.col("payload").startswith("u6"))
     assert missing.count() == 50
     assert missing.filter(F.col("value").isNotNull()).count() == 0
@@ -422,9 +432,9 @@ def test_streaming_snaplog_sink_exactly_once(spark, tmp_path):
 
 def test_schema_evolution_add_column(spark, tmp_path):
     """Additive evolution: a later append with an extra column evolves the
-    manifest schema; old files null-fill the new column on read (partitioned
-    table, so the basePath scan branch is the one exercised), and time travel
-    to the pre-evolution snapshot keeps the original schema."""
+    manifest schema; old files null-fill the new column on read (on a
+    partitioned table, whose partition column the files carry), and time
+    travel to the pre-evolution snapshot keeps the original schema."""
     t = str(tmp_path / "evo")
     s1 = snaplog.append(spark, t, _events(spark, 60), partition_cols=["day"])
     evolved = _events(spark, 40, tag="n").withColumn(
@@ -550,6 +560,86 @@ def test_partition_filter_normalizes_python_types(spark, tmp_path):
     assert sorted(r["id"] for r in misses.collect()) == [2]
     # string form still accepted, any case
     assert snaplog.read(spark, t, partition_filter={"flag": "True"}).count() == 2
+
+
+def test_partition_filter_reads_the_manifest_subset(spark, tmp_path):
+    """Over three commits a partition filter hands Spark exactly the
+    manifest's matching files, as one relation, and the null partition
+    reads back exactly its rows, as null."""
+    t = str(tmp_path / "routes")
+    for k in range(3):
+        df = spark.range(30).select(
+            F.col("id").alias("event_id"),
+            F.when(F.col("id") % 3 == 0, F.lit(None))
+            .otherwise(F.concat(F.lit("r"), (F.col("id") % 3).cast("string")))
+            .alias("route"),
+            F.lit(f"c{k}").alias("payload"),
+        )
+        snaplog.append(spark, t, df, partition_cols=["route"])
+    head = snaplog.current_snapshot(spark, t)
+
+    def manifest(value):
+        return {f["path"] for f in head["files"] if f["partition"]["route"] == value}
+
+    r1 = snaplog.read(spark, t, partition_filter={"route": "r1"})
+    assert _file_relations(r1) == 1
+    assert _rel_paths(r1, t) == manifest("r1")
+    assert {r["route"] for r in r1.collect()} == {"r1"}
+    assert r1.count() == 30
+
+    nulls = snaplog.read(spark, t, partition_filter={"route": None})
+    assert _rel_paths(nulls, t) == manifest("__HIVE_DEFAULT_PARTITION__")
+    rows = nulls.collect()
+    assert all(r["route"] is None for r in rows)
+    assert sorted((r["event_id"], r["payload"]) for r in rows) == sorted(
+        (i, f"c{k}") for k in range(3) for i in range(0, 30, 3)
+    )
+
+
+def test_partitioned_v1_table_is_refused(spark, tmp_path):
+    """A partitioned format-1 snapshot keeps its partition values only in
+    directory names: reading it would give nulls and extending it would mix
+    layouts, so both raise. An unpartitioned v1 table's files are v2 files:
+    it still reads and takes appends."""
+
+    def as_v1(table):
+        path = os.path.join(table, "_snaplog", "v1.json")
+        with open(path) as f:
+            snap = json.load(f)
+        snap["format_version"] = 1
+        with open(path, "w") as f:
+            json.dump(snap, f)
+
+    t = str(tmp_path / "part")
+    snaplog.append(spark, t, _events(spark, 30), partition_cols=["day"])
+    as_v1(t)
+    with pytest.raises(ValueError, match=r"part is partitioned format_version 1"):
+        snaplog.read(spark, t)
+    with pytest.raises(ValueError, match="format_version 1"):
+        snaplog.append(spark, t, _events(spark, 10, tag="b"))
+    assert len(snaplog.history(spark, t)) == 1
+
+    flat = str(tmp_path / "flat")
+    snaplog.append(spark, flat, _flat(spark, 30, "a"))
+    as_v1(flat)
+    assert snaplog.read(spark, flat).count() == 30
+    snaplog.append(spark, flat, _flat(spark, 10, "b"))
+    assert snaplog.read(spark, flat).count() == 40
+
+
+def test_is_snaplog_table_propagates_io_errors(spark, tmp_path, monkeypatch):
+    """A failing existence check raises instead of reading as "not a SnapLog
+    table", which would send callers down the plain-parquet path."""
+    plain = str(tmp_path / "plain")
+    os.makedirs(plain)
+    assert not snaplog.is_snaplog_table(spark, plain)
+
+    def unreachable(self, p):
+        raise OSError("storage unreachable")
+
+    monkeypatch.setattr(snaplog._Fs, "exists", unreachable)
+    with pytest.raises(OSError, match="unreachable"):
+        snaplog.is_snaplog_table(spark, plain)
 
 
 def test_crash_mid_commit_leaves_no_torn_snapshot(spark, tmp_path, monkeypatch):

@@ -4,10 +4,6 @@ out with each (conv_id, turn_idx) exactly once, equal to the batch distinct."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from openfactverification_spark.sources.transcripts import transcripts_df
 from openfactverification_spark.streaming import pipeline as spipe
 

@@ -11,14 +11,11 @@ from parquet footer statistics via pyarrow, engine-independent ground truth.
 from __future__ import annotations
 
 import glob
-import sys
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from openfactverification_spark.operators import dual  # noqa: E402
+from openfactverification_spark.operators import dual
 
 SF_DIR = "/root/testdata/sf0.01"
 N_FILES = 16
