@@ -48,7 +48,7 @@ TESTDATA_BENCH = [
     "dedup_components",  # iterative min-label propagation over the pair graph
     "training_ready",  # composed keeper ∧ lang ∧ quality gate
     "multimodal_frames",  # mapInPandas frame-sample + resize
-    "chunk_passages",  # mapInPandas greedy selection
+    "chunk_passages",  # greedy selection: one JVM fold per doc
     "tpch_q1_pricing",
     "regional_revenue",
     "window_topk_per_order",

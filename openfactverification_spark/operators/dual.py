@@ -935,11 +935,11 @@ FROM {from_clause} t"""
 def chunk_passages_oracle(size: int = 10, step: int = 8, max_passages: int = 5) -> str:
     """DuckDB-only oracle for the T3 greedy passage selector (operators/passages.py).
 
-    The Spark side is applyInPandas (sequential per group); the oracle expresses
-    the same greedy scan as a recursive CTE whose state is the per-doc list of
-    chosen intervals: at step i the candidate ranked i+1 (score desc, start_word)
-    is admitted iff fewer than `max_passages` are chosen and neither of its
-    endpoints falls inside a chosen interval (the reference predicate,
+    The Spark side is a per-doc `aggregate` fold over the sorted chunks; the
+    oracle expresses the same greedy scan as a recursive CTE whose state is the
+    per-doc list of chosen intervals: at step i the candidate ranked i+1 (score
+    desc, start_word) is admitted iff fewer than `max_passages` are chosen and
+    neither of its endpoints falls inside a chosen interval (the reference predicate,
     /root/reference/factcheck/core/Retriever/base.py:174-182, exclusive-end
     translation as in passages.select_passages_pdf). Scores are the same
     portable md5-prefix hash both engines compute (functions/hashing.h7)."""

@@ -3,10 +3,11 @@ between a cleaned corpus and a training run (docs are concatenated into
 CAP-token windows so no GPU batch slot is wasted on padding).
 
 Greedy first-fit in a fixed traversal order is inherently sequential *within a
-stream*, so the operator follows the T3 shape (operators/passages.py): partition
-the corpus into independent packing streams (here `source`; at 10^12 docs a
-hash-bucket column with ~10^5 buckets), repartition + sortWithinPartitions, and
-ONE mapInPandas pass that packs many streams per Arrow batch with boundary-carry.
+stream*, and a stream is unbounded (unlike a T3 doc's <= 5 passages, so no
+per-group array fold fits): partition the corpus into independent packing
+streams (here `source`; at 10^12 docs a hash-bucket column with ~10^5 buckets),
+repartition + sortWithinPartitions, and ONE mapInPandas pass that packs many
+streams per Arrow batch, carrying a stream that straddles two batches forward.
 Wasted tail space is bounded per stream (< CAP tokens each), so more streams =
 more parallelism at a fixed, known packing-efficiency cost.
 
@@ -62,8 +63,9 @@ def pack_stream_pdf(pdf: pd.DataFrame, cap: int = PACK_CAP) -> pd.DataFrame:
 
 
 def _pack_batches(batches, cap: int = PACK_CAP):
-    """mapInPandas worker: packs many streams per batch; the trailing (possibly
-    batch-straddling) stream is carried forward, same as passages._select_batches."""
+    """mapInPandas worker: packs many streams per batch. Rows arrive sorted by
+    stream, so only a batch's trailing stream can continue in the next batch:
+    it is held back and packed together with that batch's rows."""
     carry: pd.DataFrame | None = None
     for pdf in batches:
         if carry is not None:

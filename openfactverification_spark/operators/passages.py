@@ -3,11 +3,12 @@ per-group operator (SURVEY.md §2.6 T3, §2.9 'the only UDTF-shaped thing').
 
 The reference scans score-sorted passages and rejects interval overlaps, capping
 at 5 per search result (/root/reference/factcheck/core/Retriever/base.py:174-197,
-param :28). Order within a group is load-bearing, so this is `applyInPandas`
-(grouped-map pandas UDF): Spark shuffles on doc_id, each group is solved in one
-vectorized-ish Python call, and the scheduler parallelizes across groups — the
-correct shape for sequential-per-key logic at any scale (group size is bounded
-by document length, not table size).
+param :28). Order within a group is load-bearing, so the selection is a per-doc
+left fold over the doc's chunks in (score desc, start_word) order, evaluated in
+the JVM: one hash aggregate collects each doc's chunks, `aggregate` folds them
+into at most MAX_PASSAGES chosen intervals, and `posexplode` turns the result
+back into rows. No Python runs in the operator, and the fold's state is bounded
+by MAX_PASSAGES, so a group costs one sort of its chunks however long the doc.
 
 Scores are a deterministic portable hash of the chunk text, so re-runs and both
 parallelism levels select identical passages.
@@ -19,24 +20,32 @@ import hashlib
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
+from pyspark.sql import functions as F
+
+from ..functions.hashing import h7
 
 MAX_PASSAGES = 5  # base.py:28 max_passages_per_search_result_to_return
 
-_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("start_word", T.IntegerType(), False),
-        T.StructField("end_word", T.IntegerType(), False),
-        T.StructField("score", T.LongType(), False),
-        T.StructField("sel_rank", T.IntegerType(), False),
-    ]
-)
+# One doc's chunks sorted ascending by (-score, start_word) = score desc, ties
+# on start_word; the fold admits a chunk iff fewer than MAX_PASSAGES are chosen
+# and neither of its endpoints falls inside a chosen interval (the reference
+# predicate, see select_passages_pdf).
+_SELECT_EXPR = f"""
+aggregate(
+  array_sort(collect_list(struct(-score AS k, start_word AS s, end_word AS e,
+                                 score AS sc))),
+  cast(array() as array<struct<s:int,e:int,sc:bigint>>),
+  (acc, c) -> CASE
+    WHEN size(acc) < {MAX_PASSAGES}
+     AND NOT exists(acc, p -> (p.s <= c.s AND c.s < p.e) OR (p.s < c.e AND c.e <= p.e))
+    THEN array_append(acc, struct(c.s AS s, c.e AS e, c.sc AS sc))
+    ELSE acc END)
+"""
 
 
 def chunk_score(text: str) -> int:
-    """28-bit md5-prefix hash — same formula as functions/hashing.h7, computed
-    driver/worker-side in Python for the pandas path."""
+    """28-bit md5-prefix hash — the value functions/hashing.h7 computes in the
+    JVM, in Python for the pure-Python reference."""
     return int(hashlib.md5(text.encode("utf-8")).hexdigest()[:7], 16)
 
 
@@ -66,73 +75,29 @@ def select_passages_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
         chosen.append((row.start_word, row.end_word, row.score))
     doc_id = int(pdf["doc_id"].iloc[0]) if len(pdf) else 0
     return pd.DataFrame(
-        [
-            {
-                "doc_id": doc_id,
-                "start_word": s,
-                "end_word": e,
-                "score": sc,
-                "sel_rank": i + 1,
-            }
-            for i, (s, e, sc) in enumerate(chosen)
-        ],
+        [(doc_id, s, e, sc, i + 1) for i, (s, e, sc) in enumerate(chosen)],
         columns=["doc_id", "start_word", "end_word", "score", "sel_rank"],
     )
 
 
-def _select_batches(batches):
-    """mapInPandas worker: greedy-select per doc, many docs per Arrow batch.
-
-    Input partitions are doc_id-partitioned and doc_id-sorted, but a doc's rows
-    may still straddle Arrow batch boundaries, so the trailing (possibly
-    incomplete) doc of each batch is carried into the next."""
-    carry: pd.DataFrame | None = None
-    for pdf in batches:
-        if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-        if not len(pdf):
-            continue
-        last_doc = pdf["doc_id"].iloc[-1]
-        main = pdf[pdf["doc_id"] != last_doc]
-        carry = pdf[pdf["doc_id"] == last_doc]
-        if len(main):
-            yield pd.concat(
-                [select_passages_pdf(g) for _, g in main.groupby("doc_id", sort=False)],
-                ignore_index=True,
-            )
-    if carry is not None and len(carry):
-        yield pd.concat(
-            [select_passages_pdf(g) for _, g in carry.groupby("doc_id", sort=False)],
-            ignore_index=True,
-        )
-
-
 def select_passages(chunks: DataFrame) -> DataFrame:
-    """chunks(doc_id, start_word, end_word, chunk_text) -> selected passages.
-    Expects scores precomputed in a `score` column (use with_scores).
+    """chunks(doc_id, start_word, end_word, score) -> selected passages
+    (doc_id, start_word, end_word, score, sel_rank); use with_scores first.
 
-    Execution shape: repartition on doc_id + sortWithinPartitions, then ONE
-    mapInPandas pass that solves thousands of docs per Arrow batch. The naive
-    groupBy().applyInPandas calls Python once PER GROUP, whose fixed per-call
-    overhead dominates at high group cardinality (measured 15.6s -> ~1s for 5k
-    docs at sf0.1); per-doc sequential greediness is preserved because every
-    doc's rows land in one partition and the batch iterator carries
-    boundary-straddling docs forward."""
+    Execution shape: one hash aggregate on doc_id whose value is the fold
+    above, then a posexplode of the <= MAX_PASSAGES chosen intervals."""
     return (
-        chunks.select("doc_id", "start_word", "end_word", "score")
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id")
-        .mapInPandas(_select_batches, _OUT_SCHEMA)
+        chunks.groupBy("doc_id")
+        .agg(F.expr(_SELECT_EXPR).alias("chosen"))
+        .selectExpr("doc_id", "posexplode(chosen) AS (pos, p)")
+        .selectExpr(
+            "doc_id", "p.s AS start_word", "p.e AS end_word", "p.sc AS score",
+            "cast(pos + 1 AS int) AS sel_rank",
+        )
     )
 
 
 def with_scores(chunks: DataFrame) -> DataFrame:
-    """Attach the portable JVM-side score (same value chunk_score computes in
-    Python): cast(conv(substring(md5(chunk_text),1,7),16,10) as bigint)."""
-    from pyspark.sql import functions as F
-
-    return chunks.withColumn(
-        "score",
-        F.conv(F.substring(F.md5(F.col("chunk_text")), 1, 7), 16, 10).cast("bigint"),
-    )
+    """Attach the portable JVM-side score (functions/hashing.h7 of the chunk
+    text, the value chunk_score computes in Python)."""
+    return chunks.withColumn("score", F.expr(h7("chunk_text", "spark")))

@@ -17,6 +17,9 @@ the format by what the session can see:
 
 from __future__ import annotations
 
+import logging
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -101,7 +104,8 @@ def current_lineage(spark: SparkSession, target: str, fallback: str = "") -> str
     """Iceberg snapshot-id when the metadata table exists; SnapLog snapshot-id
     when the path is a snapshot-log table (sources/snaplog.py — the
     from-scratch format standing in for the blocked Iceberg runtime); caller
-    fingerprint otherwise."""
+    fingerprint otherwise. A table name without a snapshots table is logged;
+    any other error propagates."""
     if is_table_name(target):
         try:
             row = (
@@ -112,8 +116,9 @@ def current_lineage(spark: SparkSession, target: str, fallback: str = "") -> str
             )
             if row:
                 return f"iceberg-snapshot:{row['snapshot_id']}"
-        except Exception:
-            pass
+        except AnalysisException as e:
+            msg = "no Iceberg snapshots table for %s (%s): lineage is the fallback"
+            logging.getLogger(__name__).warning(msg, target, e.getCondition())
     else:
         from . import snaplog
 

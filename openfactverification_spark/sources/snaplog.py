@@ -560,6 +560,7 @@ def append(
     fs = _Fs(spark, table)
     head = current_snapshot(spark, table)
     if head is not None:
+        _check_format(head, fs.root)
         partition_cols = head["partition_cols"]
     new_files = _write_data_files(df, fs, partition_cols)
     return _commit(
@@ -635,6 +636,7 @@ def overwrite_partitions(
         raise ValueError("table is unpartitioned; use append/overwrite")
     _data_schema(df, partition_cols)
     fs = _Fs(spark, table)
+    _check_format(head, fs.root)
     new_files = _write_data_files(df, fs, partition_cols)
     touched = {_pkey(f) for f in new_files}
     return _commit(

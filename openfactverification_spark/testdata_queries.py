@@ -366,8 +366,8 @@ def q_dedup_ensemble_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_chunk_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T3: greedy non-overlapping passage selection per document via
-    applyInPandas (sequential per group — the grouped-map shape). The DuckDB
+    """T3: greedy non-overlapping passage selection per document as a JVM
+    fold (one `aggregate` per doc over its sorted chunks). The DuckDB
     oracle expresses the same greedy scan as a recursive CTE
     (dual.chunk_passages_oracle); correctness is additionally pinned by
     tests/test_verify_ops.py against a pure-Python reference."""
@@ -538,7 +538,7 @@ def q_ingest_dedup_stream_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy sequence packing into fixed-capacity context windows via ONE
-    mapInPandas pass over source-partitioned streams (operators/packing.py).
+    Arrow-batched pandas pass over source-partitioned streams (operators/packing.py).
     DuckDB oracle = the same greedy scan as a recursive CTE."""
     from .operators.packing import pack_sequences
 

@@ -3,6 +3,9 @@ a catalog jar this container lacks — target-kind dispatch is still tested)."""
 
 from __future__ import annotations
 
+import logging
+
+import pytest
 from pyspark.sql import functions as F
 
 from openfactverification_spark.plans.pipeline import build_pipeline
@@ -87,3 +90,25 @@ def test_bucketed_table_removes_conv_shuffle(spark, tmp_path):
         map(tuple, agg_plain.collect())
     )
     spark.sql("DROP TABLE IF EXISTS tx_bucketed")
+
+
+def test_lineage_logs_a_missing_snapshots_table(spark, caplog):
+    """A table name whose `.snapshots` metadata table cannot be read gives the
+    fallback, with one warning naming the target and the error condition."""
+    with caplog.at_level(logging.WARNING, logger=catalog.__name__):
+        assert catalog.current_lineage(spark, "db.t", fallback="fp") == "fp"
+    warned = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warned) == 1 and "db.t" in warned[0], warned
+
+
+def test_lineage_propagates_other_errors(spark, monkeypatch):
+    """Only an AnalysisException means 'no snapshots table'; any other error
+    from the table read propagates instead of becoming the fallback."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    def broken(self, name):
+        raise RuntimeError(f"catalog unreachable: {name}")
+
+    monkeypatch.setattr(DataFrameReader, "table", broken)
+    with pytest.raises(RuntimeError, match="catalog unreachable"):
+        catalog.current_lineage(spark, "db.t", fallback="fp")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 from urllib.parse import urlparse
 
 import pytest
@@ -105,36 +106,86 @@ def test_crash_before_log_commit_leaves_previous_snapshot_live(spark, tmp_path):
     assert snaplog.read(spark, t).count() == 150
 
 
-def test_concurrent_commit_race_retries_and_keeps_both(spark, tmp_path):
+class _PutOnlyFs:
+    """Object-store stand-in for _Fs.fs: its only exclusive primitive is an
+    atomic create(p, overwrite=False), refused with FileAlreadyExists when
+    the slot is taken, and it has no rename. ``before_create`` runs inside
+    create, after create_exclusive's fast-path exists check."""
+
+    _lock = threading.Lock()
+
+    def __init__(self, real, before_create, calls: list):
+        self._real = real
+        self._before_create = before_create
+        self._calls = calls
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+    def create(self, p, overwrite):
+        self._before_create()
+        with self._lock:
+            if not overwrite and self._real.exists(p):
+                self._calls.append(("refused", p.getName()))
+                raise RuntimeError(f"FileAlreadyExistsException: {p}")
+            return self._real.create(p, overwrite)
+
+    def rename(self, src, dst):
+        self._calls.append(("rename", dst.getName()))
+        raise RuntimeError("object stores have no atomic rename")
+
+
+@pytest.mark.parametrize("publish", ["link", "put"])
+def test_concurrent_commit_race_retries_and_keeps_both(
+    spark, tmp_path, monkeypatch, publish
+):
     """Losing the create(v{N}.json) race must re-read the new head and retry:
     both writers' rows end up live, lineage is a chain (optimistic
-    concurrency). The race is forced by grabbing the loser's version number
-    first via a monkeypatched create_exclusive."""
+    concurrency). The race is forced by landing another writer's append
+    first. ``link`` (file://): the intruder runs in a monkeypatched
+    create_exclusive. ``put`` (object stores): the filesystem is _PutOnlyFs
+    and the intruder runs inside its create, so the loss comes from the
+    refused conditional create itself, with no rename anywhere."""
     t = str(tmp_path / "tbl")
     snaplog.append(spark, t, _events(spark, 100), partition_cols=["day"])
 
-    real_create = snaplog._Fs.create_exclusive
     state = {"intruded": False}
+    calls: list = []
 
-    def create_with_intruder(self, p, payload):
+    def intrude():
         if not state["intruded"]:
             state["intruded"] = True
             # another writer lands v2 first, with its own files
             snaplog.append(spark, t, _events(spark, 40, tag="w2"))
-        return real_create(self, p, payload)
 
-    try:
-        snaplog._Fs.create_exclusive = create_with_intruder
-        snaplog.append(spark, t, _events(spark, 60, tag="w1"))
-    finally:
-        snaplog._Fs.create_exclusive = real_create
+    if publish == "link":
+        real_create = snaplog._Fs.create_exclusive
 
+        def create_with_intruder(self, p, payload):
+            intrude()
+            return real_create(self, p, payload)
+
+        monkeypatch.setattr(snaplog._Fs, "create_exclusive", create_with_intruder)
+    else:
+        real_init = snaplog._Fs.__init__
+
+        def init_put_only(self, spark_, root):
+            real_init(self, spark_, root)
+            self.fs = _PutOnlyFs(self.fs, intrude, calls)
+
+        monkeypatch.setattr(snaplog, "_publish_strategy", lambda scheme: "put")
+        monkeypatch.setattr(snaplog._Fs, "__init__", init_put_only)
+    snaplog.append(spark, t, _events(spark, 60, tag="w1"))
+
+    assert state["intruded"]
     hist = snaplog.history(spark, t)
     assert [h["version"] for h in hist] == [1, 2, 3]
     # chain: each parent is the previous snapshot id
     assert hist[1]["parent_id"] == hist[0]["snapshot_id"]
     assert hist[2]["parent_id"] == hist[1]["snapshot_id"]
     assert snaplog.read(spark, t).count() == 200
+    # put: the one loss is the refused create of v2, and nothing renames
+    assert calls == ([("refused", "v2.json")] if publish == "put" else [])
 
 
 def test_manifest_level_partition_pruning(spark, tmp_path):
@@ -749,3 +800,26 @@ def test_publish_strategy_per_scheme():
         assert snaplog._publish_strategy(s) == "put", s
     assert snaplog._publish_strategy("hdfs") == "rename"
     assert snaplog._publish_strategy("viewfs") == "rename"
+
+
+def test_refused_commit_writes_no_data_files(spark, tmp_path):
+    """append and overwrite_partitions check the head's format before they
+    write: a commit refused for a partitioned format-1 table leaves no
+    orphan commit directory under data/."""
+    t = str(tmp_path / "part")
+    snaplog.append(spark, t, _events(spark, 30), partition_cols=["day"])
+    log = os.path.join(t, snaplog.LOG_DIR, "v1.json")
+    with open(log) as f:
+        snap = json.load(f)
+    snap["format_version"] = 1
+    with open(log, "w") as f:
+        json.dump(snap, f)
+    data = os.path.join(t, snaplog.DATA_DIR)
+    before = sorted(os.listdir(data))
+
+    with pytest.raises(ValueError, match="format_version 1"):
+        snaplog.append(spark, t, _events(spark, 10, tag="b"))
+    with pytest.raises(ValueError, match="format_version 1"):
+        snaplog.overwrite_partitions(spark, t, _events(spark, 10, tag="c"))
+    assert sorted(os.listdir(data)) == before
+    assert len(snaplog.history(spark, t)) == 1
